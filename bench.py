@@ -90,7 +90,7 @@ HEADLINE = [
     # pipeline
     "q_quality_classifier_nb",
     # round-7 additions: the reindex half of the IVF-PQ lifecycle
-    # (fresh codebooks over the current corpus, tri-dir atomic swap),
+    # (fresh codebooks over the current corpus, one new generation),
     # its drift signal (probe-sampled recall estimate vs exact ground
     # truth), and streaming ingestion dedup against the materialized
     # signature index

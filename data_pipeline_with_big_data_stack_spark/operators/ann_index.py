@@ -21,54 +21,12 @@ collected and never re-assigned.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from data_pipeline_with_big_data_stack_spark.operators import fsio
 from data_pipeline_with_big_data_stack_spark.operators.kmeans import _assign, _sqdist
-
-# Single-writer guard for the mutating index operations (append /
-# compact / expire): an append racing a compaction's read→swap window
-# would have its new code files silently discarded with the backup dir
-# (ADVICE r5). Same machinery as the rollup store's maintenance lock —
-# pid@host payload, automatic stale-holder reclaim — under an
-# index-specific sibling suffix.
-_INDEX_LOCK_SUFFIX = ".__index_lock"
-
-
-def _index_write_lock(spark: SparkSession, path: str):
-    """Acquire the index's single-writer lock; returns a heartbeat
-    lease — caller calls ``lease.release()`` in a finally."""
-    from data_pipeline_with_big_data_stack_spark.operators.rollup_maintenance import (
-        _acquire_lock,
-        break_stale_lock,
-    )
-
-    break_stale_lock(spark, path, suffix=_INDEX_LOCK_SUFFIX)
-    return _acquire_lock(spark, path, suffix=_INDEX_LOCK_SUFFIX)
-
-
-def _require_atomic_rename(fs: fsio.Fs, path: str, op: str) -> None:
-    """The in-place maintenance swaps infer crash state from which
-    directories exist — sound only where a rename cannot be
-    half-applied. Object-store renames are copy+delete, so a crash
-    mid-swap would leave a PARTIAL live tree that the recovery's
-    "live exists ⇒ swap completed" inference would then treat as
-    final, deleting the parked originals (the ADVICE r5 hazard the old
-    local-only guard existed for, re-stated as the actual capability).
-    The generation-versioned ops (`operators/ann_index_versioned`)
-    are the object-store path: they swap nothing in place — writers
-    materialize a new generation and flip the pointer object."""
-    if not fs.rename_is_atomic:
-        raise NotImplementedError(
-            f"{op} swaps directories in place and requires an "
-            f"atomic-rename filesystem; {path!r} ({fs.scheme}) renames "
-            "by copy+delete. Use the generation-versioned index ops "
-            "(operators/ann_index_versioned) on object stores"
-        )
 
 
 def _read_table(
@@ -91,27 +49,6 @@ def _read_table(
     return segman.read_table(
         spark, fs or fsio.Fs(spark, path), path, logicals=logicals
     )
-
-
-def _refuse_manifested(fs: fsio.Fs, path: str, op: str) -> None:
-    """The in-place maintenance ops rewrite and swap PHYSICAL trees;
-    on a manifest-reference generation table (`operators/segman`) they
-    would read only the physically-present files — silently dropping
-    every referenced segment — and their swap would strand the
-    manifest. Those tables are maintained by the generation-versioned
-    ops, which supersede a manifest with a new generation instead of
-    editing one in place."""
-    from data_pipeline_with_big_data_stack_spark.operators import segman
-
-    p = path.rstrip("/")
-    for comp in (p, p + "_codebook", p + "_pq_codebook"):
-        if fs.exists(os.path.join(comp, segman.MANIFEST)):
-            raise NotImplementedError(
-                f"{op} rewrites directories in place, but {comp!r} is a "
-                "manifest-reference generation table — use the "
-                "generation-versioned ops (operators/ann_index_versioned), "
-                "which publish a new generation instead"
-            )
 
 
 def _dot(a, b):
@@ -216,64 +153,41 @@ def build_ivfpq_index(
     ``path + "_codebook"`` (coarse cells) and ``path + "_pq_codebook"``
     (``m, code, c_emb`` — K_PQ × M rows). The build is ONE map-side
     projection per vector under broadcast codebooks: coarse argmin +
-    M subspace argmins, zero shuffle before the partitioned write."""
-    # the build joins the locked lifecycle writers (ADVICE r7): the
-    # residue purge below deletes retrain staging/park state, and doing
-    # that against a LIVE locked retrain on the same path would destroy
-    # its swap mid-protocol — so the whole build runs under the same
-    # single-writer lock as append/compact/expire/retrain
-    lease = _index_write_lock(vecs.sparkSession, path)
-    try:
-        # a fresh build supersedes ALL retrain state: discard any staged
-        # or parked retrain residue first, or the next writer's
-        # roll-forward recovery would publish a stale staged retrain
-        # OVER this rebuild (retrain is re-runnable, so dropping a
-        # crashed retrain's staging loses nothing)
-        fs = fsio.Fs(vecs.sparkSession, path)
-        fs.delete(path.rstrip("/") + "__retraining")
-        fs.delete(path.rstrip("/") + "__preretrain")
-        coded = _coded_projection(
-            vecs, coarse_codebook, pq_codebooks, sub_dim, id_col
-        )
-        coarse = coarse_codebook.select(
-            F.col(coarse_codebook.columns[0]).alias("__cb")
-        )
-        coarse_rows = coarse.select(F.explode("__cb").alias("c")).select(
-            F.col("c.cell_id").alias("cell_id"), F.col("c.c_emb").alias("c_emb")
-        )
-        pq_rows = None
-        for m, cbm in enumerate(pq_codebooks):
-            rows = (
-                cbm.select(F.explode(F.col(cbm.columns[0])).alias("c"))
-                .select(
-                    F.lit(m).alias("m"),
-                    F.col("c.cell_id").alias("code"),
-                    F.col("c.c_emb").alias("c_emb"),
-                )
-            )
-            pq_rows = rows if pq_rows is None else pq_rows.unionByName(rows)
-        # the three component writes are independent (codes + two tiny
-        # sidecars): overlap them on a driver thread pool (guide §2.6,
-        # r15) — the sidecar jobs back-fill the codes write's tail. A
-        # crash mid-build leaves the same partial-component state as the
-        # sequential writes did; build is re-runnable either way.
-        from concurrent.futures import ThreadPoolExecutor
+    M subspace argmins, zero shuffle before the partitioned write.
 
-        writes = [
-            lambda: coded.write.mode("overwrite")
-            .partitionBy("cell_id")
-            .parquet(path),
-            lambda: coarse_rows.write.mode("overwrite").parquet(
-                path + "_codebook"
-            ),
-            lambda: pq_rows.write.mode("overwrite").parquet(
-                path + "_pq_codebook"
-            ),
-        ]
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            list(pool.map(lambda w: w(), writes))
-    finally:
-        lease.release()
+    Takes no lock and keeps no crash state: every maintained index is a
+    generation of ``operators/ann_index_versioned``, which runs this
+    build into a fresh, not yet published generation under the root's
+    writer lock. A crash mid-build leaves an unpublished partial tree;
+    a rebuild overwrites it."""
+    coded = _coded_projection(vecs, coarse_codebook, pq_codebooks, sub_dim, id_col)
+    coarse = coarse_codebook.select(F.col(coarse_codebook.columns[0]).alias("__cb"))
+    coarse_rows = coarse.select(F.explode("__cb").alias("c")).select(
+        F.col("c.cell_id").alias("cell_id"), F.col("c.c_emb").alias("c_emb")
+    )
+    pq_rows = None
+    for m, cbm in enumerate(pq_codebooks):
+        rows = (
+            cbm.select(F.explode(F.col(cbm.columns[0])).alias("c"))
+            .select(
+                F.lit(m).alias("m"),
+                F.col("c.cell_id").alias("code"),
+                F.col("c.c_emb").alias("c_emb"),
+            )
+        )
+        pq_rows = rows if pq_rows is None else pq_rows.unionByName(rows)
+    # the three component writes are independent (codes + two tiny
+    # sidecars): overlap them on a driver thread pool (guide §2.6,
+    # r15) — the sidecar jobs back-fill the codes write's tail
+    from concurrent.futures import ThreadPoolExecutor
+
+    writes = [
+        lambda: coded.write.mode("overwrite").partitionBy("cell_id").parquet(path),
+        lambda: coarse_rows.write.mode("overwrite").parquet(path + "_codebook"),
+        lambda: pq_rows.write.mode("overwrite").parquet(path + "_pq_codebook"),
+    ]
+    with ThreadPoolExecutor(max_workers=3) as pool:
+        list(pool.map(lambda w: w(), writes))
 
 
 def _seed_codebook(vecs: DataFrame, k: int, id_col: str = "vec_id") -> DataFrame:
@@ -314,9 +228,10 @@ def train_ivfpq_codebooks(
 ) -> tuple[DataFrame, list[DataFrame]]:
     """Train a coarse codebook + ``n_sub`` per-subspace PQ codebooks over
     ``vecs(id, emb)`` — the general-corpus trainer behind
-    :func:`retrain_ivfpq_index` (the inline registry queries keep their
-    own ``_km_demo_init`` trainer so their DuckDB oracles replay an
-    unchanged trajectory). Deterministic end to end: md5-ranked seed
+    ``ann_index_versioned.retrain_ivfpq_versioned`` (the inline registry
+    queries keep their
+    own ``_km_demo_init`` trainer so their DuckDB oracles replay
+    an unchanged trajectory). Deterministic end to end: md5-ranked seed
     init (:func:`_seed_codebook`) + ``operators/kmeans.lloyd_kmeans``
     (decimal-mean updates, id tie-breaks). Scale shape per codebook: the
     lloyd loop shuffles only K×dim partial-aggregate rows per round; the
@@ -384,185 +299,6 @@ def train_ivfpq_codebooks(
     return coarse, pq
 
 
-def _retrain_components(path: str) -> list[tuple[str, str]]:
-    """(live_path, staged/parked name) for the three dirs a retrain
-    swaps as one unit: the codes and both codebook sidecars."""
-    p = path.rstrip("/")
-    return [
-        (p, "index"),
-        (p + "_codebook", "index_codebook"),
-        (p + "_pq_codebook", "index_pq_codebook"),
-    ]
-
-
-def _recover_retrain(path: str, fs: fsio.Fs) -> bool:
-    """Heal a crashed :func:`retrain_ivfpq_index` so the index is always
-    fully-old or fully-new, never mixed codes-vs-codebooks. Protocol
-    invariants this decodes: the ``_ALL_STAGED`` marker is written only
-    after all three staged dirs are complete, and the ``__preretrain``
-    park dir is created only after the marker — so park-exists ⇒ the
-    staged set is publishable and we roll FORWARD; staging without park
-    ⇒ the commit never started and we roll BACK (drop staging). Within a
-    forward roll each component's state is unambiguous from the swap
-    order (park live, then publish staged): live+staged ⇒ live is the
-    not-yet-parked original; live only ⇒ already published; staged only
-    ⇒ parked but unpublished. Returns True if anything changed."""
-    staging = path.rstrip("/") + "__retraining"
-    park = path.rstrip("/") + "__preretrain"
-    marker = os.path.join(staging, "_ALL_STAGED")
-    changed = False
-    if fs.exists(park):
-        if fs.exists(marker):
-            for live, name in _retrain_components(path):
-                staged = os.path.join(staging, name)
-                parked = os.path.join(park, name)
-                if not fs.exists(live):
-                    if fs.exists(staged):
-                        fs.rename(staged, live)
-                    elif fs.exists(parked):
-                        # staged dir gone despite the _ALL_STAGED
-                        # invariant (external cleanup/tampering): fall
-                        # back to the parked pre-retrain copy so the
-                        # index stays serveable instead of failing
-                        # every writer entry with a bare rename error
-                        fs.rename(parked, live)
-                    else:
-                        raise RuntimeError(
-                            "retrain recovery: index component "
-                            f"{live!r} is missing and neither its "
-                            f"staged copy ({staged!r}) nor its parked "
-                            f"pre-retrain copy ({parked!r}) exists — "
-                            "the protocol dirs were externally "
-                            "modified; rebuild the index with "
-                            "build_ivfpq_index"
-                        )
-                    changed = True
-                elif fs.exists(staged):
-                    fs.rename(live, os.path.join(park, name))
-                    fs.rename(staged, live)
-                    changed = True
-        else:  # defensive: commit dir without a complete stage — roll back
-            for live, name in _retrain_components(path):
-                parked = os.path.join(park, name)
-                if fs.exists(parked) and not fs.exists(live):
-                    fs.rename(parked, live)
-                    changed = True
-        fs.delete(park)
-    fs.delete(staging)
-    return changed
-
-
-def retrain_ivfpq_index(
-    spark: SparkSession,
-    path: str,
-    source_vecs: DataFrame,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    k_coarse: int | None = None,
-    k_pq: int | None = None,
-) -> None:
-    """Refresh a materialized IVF-PQ index's codebooks over the CURRENT
-    corpus — the reindex half of the lifecycle (VERDICT r6 #2).
-    :func:`append_to_ivfpq_index` codes new vectors with codebooks
-    frozen at build time, so after heavy appends of a shifted
-    distribution the coarse cells and PQ sub-codebooks mis-model the
-    corpus and recall decays with no signal (pinned in
-    tests/test_ann_index.py::test_retrain_restores_recall_after_shifted_appends).
-    This is the Druid-reindex analog of the rollup store's compaction:
-    same single-writer lock, same staged-write → atomic-swap contract.
-
-    ``source_vecs(id, emb)`` is the raw-vector source of truth (the
-    index stores codes only); it is semi-joined to the index's current
-    ids so vectors expired via :func:`expire_vectors` can never
-    re-enter, and extra source rows are ignored. New codebooks come from
-    :func:`train_ivfpq_codebooks` (md5-seeded, deterministic); geometry
-    (n_sub, sub_dim) and — unless overridden — K sizes are read from the
-    existing sidecars. The rebuilt codes + both sidecars are staged
-    under ``path__retraining`` and swapped as ONE unit (an index with
-    new codes under old codebooks, or vice versa, returns garbage);
-    :func:`_recover_retrain` makes a crash anywhere in the swap heal to
-    fully-old or fully-new on the next writer entry. The result is
-    bit-identical to a fresh :func:`build_ivfpq_index` over the same
-    corpus with the same trainer (pinned in tests/test_ann_index.py).
-
-    O(corpus) by design — retraining re-reads every source vector; run
-    it at reindex cadence (recall-floor alerts, distribution-shift
-    monitors), not per append. Readers must pause during the swap, same
-    contract as compact/expire; on object stores use
-    ``retrain_ivfpq_versioned`` (a fresh build + pointer flip — no
-    in-place swap at all)."""
-    fs = fsio.Fs(spark, path)
-    _require_atomic_rename(fs, path, "retrain_ivfpq_index")
-    _refuse_manifested(fs, path, "retrain_ivfpq_index")
-    lease = _index_write_lock(spark, path)
-    try:
-        from data_pipeline_with_big_data_stack_spark.operators.layout import (
-            recover_compaction,
-        )
-
-        recover_compaction(path, fs=fs)
-        _recover_expire(path, fs)
-        _recover_retrain(path, fs)
-        # ONE bounded 1-row collect for all geometry/K stats (the
-        # sidecars are metadata-scale): a single aggregate covers
-        # n_sub/sub_dim/k_pq, and the coarse K rides along via a 1-row
-        # cross join instead of a second count job (r15)
-        geo = spark.read.parquet(path + "_pq_codebook").agg(
-            F.max("m").alias("mm"),
-            F.max(F.size("c_emb")).alias("sd"),
-            F.sum(F.when(F.col("m") == 0, 1).otherwise(0)).alias("k0"),
-        )
-        if k_coarse is None:
-            geo = geo.crossJoin(
-                spark.read.parquet(path + "_codebook").agg(
-                    F.count(F.lit(1)).alias("kc")
-                )
-            )
-        r = geo.head()
-        n_sub = int(r["mm"]) + 1
-        sub_dim = int(r["sd"])
-        if k_pq is None:
-            k_pq = int(r["k0"])
-        if k_coarse is None:
-            k_coarse = int(r["kc"])
-        ids = spark.read.parquet(path).select(F.col(id_col))
-        # materialize the semi-joined training corpus ONCE: the passes
-        # below (3 seed rankings, 3 lloyd chains, the coded-projection
-        # build) otherwise each re-run the corpus scan + ids semi-join —
-        # ~10 full source passes per retrain at any scale (guide §1.2)
-        from data_pipeline_with_big_data_stack_spark.session import materialize
-
-        vecs = materialize(
-            source_vecs.select(F.col(id_col), "emb").join(ids, id_col, "left_semi")
-        )
-        coarse_cb, pq_cbs = train_ivfpq_codebooks(
-            vecs, k_coarse, k_pq, sub_dim, n_sub, iters=iters, id_col=id_col
-        )
-        staging = path.rstrip("/") + "__retraining"
-        fs.delete(staging)
-        fs.mkdirs(staging)
-        build_ivfpq_index(
-            vecs,
-            os.path.join(staging, "index"),
-            coarse_cb,
-            pq_cbs,
-            sub_dim=sub_dim,
-            id_col=id_col,
-        )
-        fs.write_text_atomic(os.path.join(staging, "_ALL_STAGED"), "staged\n")
-        park = path.rstrip("/") + "__preretrain"
-        fs.mkdirs(park)
-        comps = _retrain_components(path)
-        for live, name in comps:
-            fs.rename(live, os.path.join(park, name))
-        for live, name in comps:
-            fs.rename(os.path.join(staging, name), live)
-        fs.delete(park)
-        fs.delete(staging)
-    finally:
-        lease.release()
-
-
 def _sidecar_codebooks(
     spark: SparkSession, path: str, fs: fsio.Fs | None = None
 ) -> tuple[DataFrame, list[DataFrame], int]:
@@ -597,253 +333,6 @@ def _sidecar_codebooks(
     return coarse, pq_codebooks, sub_dim
 
 
-def append_to_ivfpq_index(
-    spark: SparkSession, path: str, vecs: DataFrame, id_col: str = "vec_id"
-) -> None:
-    """Grow the indexed corpus WITHOUT retraining — the streaming-ingest
-    half of the IVF-PQ lifecycle (a training corpus that gains documents
-    daily re-codes only the new vectors). Reads the codebook sidecars
-    back, codes the new vectors with the SAME codebooks (so the result
-    is bit-identical to having built the index over the union — pinned
-    in tests/test_ann_index.py), and appends codes-only files into the
-    cell partitions: O(new vectors) map-side work, existing partition
-    files untouched. Callers own id uniqueness across appends, same as
-    any append-mode sink. Holds the index's single-writer lock so an
-    append can never race a compaction/expire swap (whose backup-dir
-    teardown would silently discard the freshly appended files). Appends
-    also heal crashed swap states BEFORE writing: recreating a live cell
-    dir on top of a crashed expire/compaction swap would poison the
-    "live exists ⇒ swap completed" inference those recoveries rely on,
-    and the next maintenance entry would discard the parked originals."""
-    fs = fsio.Fs(spark, path)
-    lease = _index_write_lock(spark, path)
-    try:
-        from data_pipeline_with_big_data_stack_spark.operators.layout import (
-            recover_compaction,
-        )
-
-        recover_compaction(path, fs=fs)
-        _recover_expire(path, fs)
-        _recover_retrain(path, fs)
-        # sidecars are read AFTER the lock + recovery: retrain rewrites
-        # them, so a pre-lock read could code this batch against stale
-        # (or crash-mixed) codebooks and poison the index silently
-        coarse, pq_codebooks, sub_dim = _sidecar_codebooks(spark, path, fs=fs)
-        coded = _coded_projection(vecs, coarse, pq_codebooks, sub_dim, id_col)
-        coded.write.mode("append").partitionBy("cell_id").parquet(path)
-    finally:
-        lease.release()
-
-
-def compact_ivfpq_index(
-    spark: SparkSession,
-    path: str,
-    max_files_per_cell: int = 4,
-) -> int:
-    """Druid-style auto-compaction for the append path: every
-    ``append_to_ivfpq_index`` leaves ≥1 new file per touched cell, and
-    scan cost eventually drowns in per-file overhead. When any cell
-    exceeds ``max_files_per_cell``, rewrite the codes hash-partitioned
-    BY cell (each cell lands in exactly one task → one file per cell —
-    a plain repartition(n) would spray every task across every cell
-    dir) and swap directories; the codebook sidecars are untouched and
-    search results are byte-identical. Returns the new file count, or
-    0 if no cell was over threshold (no-op). Same rename-swap contract
-    as ``operators/layout.compact_table``, including crash recovery on
-    entry (``layout.recover_compaction``); holds the index's
-    single-writer lock for the whole read→rewrite→swap cycle so
-    concurrent appends can't be lost.
-
-    Reader contract: the lock serializes WRITERS only. A concurrent
-    ``search_ivfpq_index`` that lists the directory inside the
-    live→``__precompact``→live rename window can hit FileNotFound —
-    serving must pause (or search a snapshot copy) while a compaction
-    runs on a shared index (ADVICE r6)."""
-    from collections import Counter
-
-    from data_pipeline_with_big_data_stack_spark.operators.layout import (
-        recover_compaction,
-        table_files,
-    )
-
-    fs = fsio.Fs(spark, path)
-    _require_atomic_rename(fs, path, "compact_ivfpq_index")
-    _refuse_manifested(fs, path, "compact_ivfpq_index")
-    lease = _index_write_lock(spark, path)
-    try:
-        # heal ALL writers' crash states before reading: a compaction
-        # over an index with a cell still parked in __preexpire would
-        # rewrite without it and the swap would orphan the parked copy
-        recover_compaction(path, fs=fs)
-        _recover_expire(path, fs)
-        _recover_retrain(path, fs)
-        per_cell = Counter(os.path.dirname(f) for f in table_files(spark, path))
-        if not per_cell or max(per_cell.values()) <= max_files_per_cell:
-            return 0
-        df = spark.read.parquet(path)
-        staging = path.rstrip("/") + "__compacting"
-        (
-            df.repartition(len(per_cell), F.col("cell_id"))
-            .write.mode("overwrite")
-            .partitionBy("cell_id")
-            .parquet(staging)
-        )
-        backup = path.rstrip("/") + "__precompact"
-        fs.rename(path, backup)
-        fs.rename(staging, path)
-        fs.delete(backup)
-        return len(table_files(spark, path))
-    finally:
-        lease.release()
-
-
-def _recover_expire(path: str, fs: fsio.Fs) -> bool:
-    """Heal a crashed :func:`expire_vectors` swap. For every cell dir
-    parked in ``__preexpire``: if the live cell is MISSING the crash hit
-    between the two renames — restore the original (a retry of the
-    expire re-filters it; expiry is idempotent, unlike rollup merges);
-    if the live cell exists the swap completed — the parked copy is the
-    superseded original, drop it. Stale staging is removed either way.
-    Returns True if anything was restored."""
-    trash = path.rstrip("/") + "__preexpire"
-    staging = path.rstrip("/") + "__expiring"
-    restored = False
-    if fs.exists(trash):
-        for name in fs.list_names(trash):
-            if not name.startswith("cell_id="):
-                continue
-            live = os.path.join(path, name)
-            parked = os.path.join(trash, name)
-            if fs.exists(live):
-                fs.delete(parked)
-            else:
-                fs.rename(parked, live)
-                restored = True
-        fs.delete(trash)
-    fs.delete(staging)
-    return restored
-
-
-def expire_vectors(
-    spark: SparkSession,
-    path: str,
-    ids=None,
-    predicate=None,
-    id_col: str = "vec_id",
-) -> int:
-    """Remove vectors from a materialized IVF-PQ index — the retention/
-    delete half of the lifecycle (a training corpus also LOSES documents:
-    opt-outs, takedowns, retention windows), mirroring the rollup
-    store's ``expire_partitions``. ``ids`` is an iterable of vector ids
-    or a 1-column DataFrame of them (the opt-out list shape); or pass
-    ``predicate`` (a boolean Column over the codes schema). Returns the
-    number of vectors removed.
-
-    Scale shape: the tombstone scan finds the affected CELLS (metadata-
-    scale collect, like the nprobe pruning), survivors of only those
-    cells are rewritten hash-partitioned by cell, and each affected cell
-    directory is swapped by rename (live → ``__preexpire``,
-    staged → live). Untouched cells are never read or rewritten —
-    O(affected cells), not O(index). Crash-safe: :func:`_recover_expire`
-    runs on entry, restoring any half-swapped cell before the retry
-    re-filters it. Holds the index's single-writer lock; codebook
-    sidecars are untouched, so search-after-expire is byte-identical to
-    a rebuild over the survivors (pinned in tests/test_ann_index.py).
-
-    Reader contract: the lock serializes WRITERS only. A concurrent
-    ``search_ivfpq_index`` listing the index between an affected cell's
-    live→``__preexpire`` and staged→live renames can hit FileNotFound
-    or silently miss that cell's candidates — serving must pause (or
-    search a snapshot copy) while an expiry runs on a shared index;
-    unaffected cells are never disturbed (ADVICE r6)."""
-    if (ids is None) == (predicate is None):
-        raise ValueError("pass exactly one of ids / predicate")
-    fs = fsio.Fs(spark, path)
-    _require_atomic_rename(fs, path, "expire_vectors")
-    _refuse_manifested(fs, path, "expire_vectors")
-    lease = _index_write_lock(spark, path)
-    try:
-        from data_pipeline_with_big_data_stack_spark.operators.layout import recover_compaction
-
-        # compaction recovery FIRST: a crashed compaction swap leaves
-        # the index dir itself missing, and restoring parked expire
-        # cells needs the dir back in place
-        recover_compaction(path, fs=fs)
-        _recover_expire(path, fs)
-        _recover_retrain(path, fs)
-        index = spark.read.parquet(path)
-        if predicate is not None:
-            # three-valued logic guard: a predicate that evaluates NULL
-            # must mean KEEP — without the coalesce, such a row is
-            # excluded from doomed (filter drops null) AND from
-            # survivors (~null is null) and silently vanishes uncounted
-            predicate = F.coalesce(predicate, F.lit(False))
-            doomed = index.filter(predicate)
-        elif isinstance(ids, DataFrame):
-            tomb = ids.select(F.col(ids.columns[0]).alias(id_col))
-            doomed = index.join(tomb, id_col, "left_semi")
-        else:
-            tomb_list = list(ids)
-            predicate = F.coalesce(
-                F.col(id_col).isin(tomb_list) if tomb_list else F.lit(False),
-                F.lit(False),
-            )
-            doomed = index.filter(predicate)
-        # one aggregation produces both the affected-cell list
-        # (metadata-scale) and the removal count — a separate .count()
-        # would pay a second full traversal of the tombstone scan
-        tomb_agg = doomed.agg(
-            F.collect_set("cell_id").alias("cells"),
-            F.count(F.lit(1)).alias("n"),
-        ).head()
-        cells = sorted(tomb_agg["cells"])
-        if not cells:
-            return 0
-        n_removed = tomb_agg["n"]
-        affected = index.filter(F.col("cell_id").isin(cells))
-        if predicate is not None:  # null-coalesced above: ~pred is total
-            survivors = affected.filter(~predicate)
-        else:  # DataFrame ids: anti-join is the exact complement
-            survivors = affected.join(tomb, id_col, "left_anti")
-        staging = path.rstrip("/") + "__expiring"
-        trash = path.rstrip("/") + "__preexpire"
-        (
-            survivors.repartition(len(cells), F.col("cell_id"))
-            .write.mode("overwrite")
-            .partitionBy("cell_id")
-            .parquet(staging)
-        )
-        # retire each affected live cell (parked in __preexpire — crash
-        # recovery rolls it back), then publish its staged replacement
-        fs.mkdirs(trash)
-        for c in cells:
-            part = f"cell_id={c}"
-            live = os.path.join(path, part)
-            fs.rename(live, os.path.join(trash, part))
-            staged = os.path.join(staging, part)
-            if fs.exists(staged):  # absent ⇒ the cell expired empty
-                fs.rename(staged, live)
-        if not any(
-            n.startswith("cell_id=") for n in fs.list_names(path)
-        ):
-            # an expiry that emptied EVERY cell (full purge / total
-            # opt-out) must not leave a directory Spark can't infer a
-            # schema from: park a 0-row sentinel partition. Cell ids
-            # are codebook row numbers (always >= 0), so -1 never
-            # collides and is never probed by a search.
-            (
-                survivors.limit(0)
-                .drop("cell_id")
-                .write.mode("overwrite")
-                .parquet(os.path.join(path, "cell_id=-1"))
-            )
-        fs.delete(trash)
-        fs.delete(staging)
-        return n_removed
-    finally:
-        lease.release()
-
-
 # --------------------------------------------------------------------------
 # Serve-path sidecar cache (r16, VERDICT r15 #2). A steady-state search
 # re-reads two METADATA-scale sidecar tables (coarse cells; K_PQ × M PQ
@@ -864,9 +353,9 @@ def expire_vectors(
 #     is paid once per index VERSION, not per search.
 # Staleness is checked per search against a file-listing token of both
 # sidecar dirs ((path, size) sets — every sidecar rewrite produces fresh
-# part-file names): an in-place retrain's tri-dir swap, a versioned
-# store's new generation (a different path entirely), or any external
-# rewrite misses the cache and re-harvests. Values are bit-identical by
+# part-file names): a rebuild of the same flat path with different
+# codebooks, a versioned store's new generation (a different path
+# entirely), or any external rewrite misses the cache and re-harvests. Values are bit-identical by
 # construction (the harvested rows ARE the sidecar rows, doubles
 # round-tripping exactly through the driver), so warm and cold searches
 # return identical frames — pinned in tests/test_ann_index.py.
@@ -1111,7 +600,8 @@ def estimate_ivfpq_recall(
     build-time codebooks, so recall decays silently as the ingested
     distribution shifts (VERDICT r6: "recall can drift silently");
     this monitor makes the decay observable, and its output falling
-    below a floor is the trigger for :func:`retrain_ivfpq_index`.
+    below a floor is the trigger for
+    ``ann_index_versioned.retrain_ivfpq_versioned``.
 
     Method: a deterministic md5-ranked sample of ``n_probes`` indexed
     vectors becomes the probe set; exact L2 top-``k`` over the indexed

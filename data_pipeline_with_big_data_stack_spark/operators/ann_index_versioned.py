@@ -3,13 +3,15 @@
 versions under readers, `M/druid-goes-satellite-datasource.json`; this
 is the same versioning applied to the ANN index lifecycle).
 
-The single-generation ops in ``operators/ann_index`` swap live
-directories in place, so their documented contract is "readers must
-pause during maintenance". This layer removes that pause: writers
-publish whole immutable GENERATIONS and readers resolve an atomic
-``_CURRENT`` pointer once per query, so a search never observes a
-half-swapped index and never errors under concurrent maintenance
-(pinned in tests/test_ann_versioned.py).
+This is the only maintained form of the IVF-PQ index: every write
+(build, append, compact, expire, retrain) goes through it.
+``operators/ann_index`` keeps the single-generation build, search and
+recall estimate that one generation is built and read with; it has no
+writer of its own. Writers publish whole immutable GENERATIONS and
+readers resolve an atomic ``_CURRENT`` pointer once per query, so a
+search never observes a half-written index and never errors or
+pauses under concurrent maintenance (pinned in
+tests/test_ann_versioned.py).
 
 Layout::
 
@@ -49,10 +51,9 @@ the root's single-writer lock:
 
 Scale notes: the pointer file, generation naming and manifests are
 O(metadata); no lifecycle step copies carried bytes on ANY scheme, and
-none of the steps below require an atomic rename (the in-place swap
-gates in ``operators/ann_index`` do not apply here) — the whole
-lifecycle is object-store-safe. Every data job inside is the
-corresponding ``ann_index`` op unchanged (broadcast codebooks,
+none of the steps below require an atomic rename — the whole
+lifecycle is object-store-safe. The data jobs inside are the
+``ann_index`` build/coding/search jobs (broadcast codebooks,
 partition-pruned code scans, zero corpus shuffles); reads resolve
 manifests via ``segman.read_table``, which keeps cell pruning on every
 referenced segment group.
@@ -69,10 +70,14 @@ from data_pipeline_with_big_data_stack_spark.operators import fsio
 from data_pipeline_with_big_data_stack_spark.operators import generations as G
 from data_pipeline_with_big_data_stack_spark.operators import segman
 from data_pipeline_with_big_data_stack_spark.operators.ann_index import (
-    _index_write_lock,
+    _coded_projection,
+    _sidecar_codebooks,
     build_ivfpq_index,
     search_ivfpq_index,
     train_ivfpq_codebooks,
+)
+from data_pipeline_with_big_data_stack_spark.operators.generations import (
+    _index_write_lock,
 )
 
 # pointer/GC primitives live in operators/generations (shared with the
@@ -183,27 +188,29 @@ def append_ivfpq_versioned(
     REFERENCE every predecessor segment (three small writes, zero bytes
     of carried data on any scheme — the r11 hardlink clone copied the
     whole index on linkless stores), then the new vectors are coded
-    with the referenced frozen codebooks via ``append_to_ivfpq_index``
-    and land as physical files in the new generation only. The
-    predecessor's files are untouched and shared by name."""
+    with the frozen codebooks (so the result is bit-identical to a
+    build over the union) and land as physical files in the new
+    generation only: O(new vectors) map-side work. The predecessor's
+    files are untouched and shared by name. Callers own id uniqueness
+    across appends, same as any append-mode sink."""
     fs = fsio.Fs(spark, root)
     lease = _index_write_lock(spark, root)
     try:
-        from data_pipeline_with_big_data_stack_spark.operators.ann_index import (
-            append_to_ivfpq_index,
-        )
-
         cur = G.read_current(root, init_hint="build_ivfpq_versioned", fs=fs)
+        cur_index = _gen_index(root, cur)
         gen = _next_gen(root, fs=fs)
+        gen_index = _gen_index(root, gen)
         segman.write_manifest(
             fs,
-            _gen_index(root, gen),
-            segman.resolve_all(fs, _gen_index(root, cur)),
+            gen_index,
+            segman.resolve_all(fs, cur_index),
             merge="union",
-            reuse_from=_gen_index(root, cur),
+            reuse_from=cur_index,
         )
         _ref_sidecars(fs, root, cur, gen)
-        append_to_ivfpq_index(spark, _gen_index(root, gen), vecs, id_col=id_col)
+        coarse, pq_codebooks, sub_dim = _sidecar_codebooks(spark, cur_index, fs=fs)
+        coded = _coded_projection(vecs, coarse, pq_codebooks, sub_dim, id_col)
+        coded.write.mode("append").partitionBy("cell_id").parquet(gen_index)
         _publish(root, gen, fs=fs)
         _gc(root, gen, cur, fs=fs)
         return gen
@@ -289,7 +296,9 @@ def expire_ivfpq_versioned(
     carry). Returns None without creating anything when nothing matched
     (the tombstone scan runs BEFORE any generation exists — an empty
     opt-out list pays one read, not a clone-publish-GC cycle; ADVICE
-    r11). Same ids-or-predicate surface as ``ann_index.expire_vectors``."""
+    r11). ``ids`` is an iterable of vector ids or a 1-column DataFrame
+    of them (the opt-out list shape); ``predicate`` is a boolean Column
+    over the codes schema — pass exactly one."""
     if (ids is None) == (predicate is None):
         raise ValueError("pass exactly one of ids / predicate")
     fs = fsio.Fs(spark, root)
@@ -301,7 +310,9 @@ def expire_ivfpq_versioned(
         tomb = None
         if predicate is not None:
             # three-valued logic guard: a predicate that evaluates NULL
-            # must mean KEEP (see ann_index.expire_vectors)
+            # must mean KEEP — without the coalesce, such a row is
+            # excluded from doomed (filter drops null) AND from
+            # survivors (~null is null) and silently vanishes
             predicate = F.coalesce(predicate, F.lit(False))
             doomed = index.filter(predicate)
         elif isinstance(ids, DataFrame):
@@ -314,8 +325,6 @@ def expire_ivfpq_versioned(
                 F.lit(False),
             )
             doomed = index.filter(predicate)
-        # (unlike the standalone expire_vectors, no removal count is
-        # returned here — the result is the generation name)
         tomb_agg = doomed.agg(F.collect_set("cell_id").alias("cells")).head()
         cells = sorted(tomb_agg["cells"])
         if not cells:
@@ -370,14 +379,22 @@ def retrain_ivfpq_versioned(
     k_coarse: int | None = None,
     k_pq: int | None = None,
 ) -> str:
-    """Retrain as a new generation — the reader-safe form of
-    ``ann_index.retrain_ivfpq_index`` (same deterministic md5-seeded
-    trainer, same semi-join to the live generation's ids so expired
-    vectors never re-enter, and the retrain ≡ fresh-build identity is
-    inherited because the new generation IS a fresh build — fully
-    physical, every reference into older generations dropped). Readers
-    of the old generation are undisturbed; the publish is one pointer
-    write."""
+    """Retrain as a new generation — the reindex half of the lifecycle.
+    Appends code new vectors with codebooks frozen at build time, so
+    after heavy appends of a shifted distribution recall decays
+    (``ann_index.estimate_ivfpq_recall`` is the signal); this trains
+    fresh codebooks over the CURRENT corpus with the deterministic
+    md5-seeded ``ann_index.train_ivfpq_codebooks`` and re-codes
+    everything. ``source_vecs(id, emb)`` is the raw-vector source of
+    truth (the index stores codes only); it is semi-joined to the live
+    generation's ids so expired vectors never re-enter, and extra
+    source rows are ignored. Geometry and, unless overridden, K sizes
+    come from the live sidecars. The new generation IS a fresh build —
+    fully physical, every reference into older generations dropped —
+    so the result equals a fresh build over the same corpus with the
+    same trainer. O(corpus) by design: run it at reindex cadence.
+    Readers of the old generation are undisturbed; the publish is one
+    pointer write."""
     fs = fsio.Fs(spark, root)
     lease = _index_write_lock(spark, root)
     try:
@@ -406,8 +423,8 @@ def retrain_ivfpq_versioned(
         if k_coarse is None:
             k_coarse = int(r["kc"])
         ids = segman.read_table(spark, fs, cur_index).select(F.col(id_col))
-        # materialized ONCE — see retrain_ivfpq_index: the seed/lloyd/
-        # build passes below otherwise re-run the scan + semi-join ~10×
+        # materialized ONCE: the seed/lloyd/build passes below
+        # otherwise re-run the scan + semi-join ~10×
         from data_pipeline_with_big_data_stack_spark.session import materialize
 
         vecs = materialize(

@@ -608,7 +608,7 @@ def dedup_ingest_batch(
     BREAKING CHANGE vs the r10 contract (ADVICE r11): direct calls now
     SELF-ACQUIRE the store's non-reentrant writer lock. A caller
     following the old documented pattern — taking
-    ``ann_index._index_write_lock(spark, store.base)`` around the call
+    ``generations._index_write_lock(spark, store.base)`` around the call
     — now fails with a spurious contention error; drop the outer lock
     (this function serializes itself), or drive batches through
     :func:`run_dedup_ingest_stream`, which passes ``_stream_epoch=True``
@@ -619,12 +619,8 @@ def dedup_ingest_batch(
     RuntimeError immediately after that sink's write, simulating a crash
     between the write and the checkpoint commit.
     """
-    from data_pipeline_with_big_data_stack_spark.operators.ann_index import (
-        _index_write_lock,
-    )
-
     lease = (
-        _index_write_lock(batch.sparkSession, store.base)
+        G._index_write_lock(batch.sparkSession, store.base)
         if not _stream_epoch
         else None
     )
@@ -937,11 +933,7 @@ def run_dedup_ingest_stream(
     # drain racing it could write epoch partitions into a generation
     # about to be superseded and GC'd — same lock machinery as the ANN
     # index / rollup-store writers, stale-holder reclaim included
-    from data_pipeline_with_big_data_stack_spark.operators.ann_index import (
-        _index_write_lock,
-    )
-
-    lease = _index_write_lock(spark, store.base)
+    lease = G._index_write_lock(spark, store.base)
     try:
         _refuse_direct_driven(store)
         st = (
@@ -1049,11 +1041,7 @@ def compact_dedup_ingest_store(
     fold-carry probe, under the same writer lock; incremental folds
     skip the file-count walk (a recursive listing the maintenance hot
     path must not pay) and return {}."""
-    from data_pipeline_with_big_data_stack_spark.operators.ann_index import (
-        _index_write_lock,
-    )
-
-    lease = _index_write_lock(spark, store.base)
+    lease = G._index_write_lock(spark, store.base)
     try:
         return _compact_into_new_generation(
             spark,

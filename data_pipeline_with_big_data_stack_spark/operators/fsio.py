@@ -1,8 +1,8 @@
 """Scheme-agnostic filesystem primitives for the materialized stores.
 
 The generation-pointer protocol (`operators/generations`), the
-streaming-dedup store (`operators/dedup_ingest`) and the IVF-PQ index
-maintenance ops (`operators/ann_index`) all need a handful of
+streaming-dedup store (`operators/dedup_ingest`) and the versioned
+IVF-PQ index (`operators/ann_index_versioned`) all need a handful of
 filesystem operations beyond what Spark's writers provide: read/write a
 small pointer file atomically, list a directory, rename a staged tree
 over a live one, measure a directory, clone a generation. Raw ``os.*``
@@ -39,13 +39,13 @@ with a remote-safe branch:
 Everything else — exists/list/delete/rename/du — is the Hadoop API
 with no local branch at all.
 
-:attr:`Fs.rename_is_atomic` classifies the scheme: the rename-SWAP
-maintenance protocols (``layout.compact_table``, the in-place IVF-PQ
-compact/expire/retrain) infer crash state from which directories
-exist, which is only sound when a rename cannot be half-applied —
-those ops gate on this capability and direct object-store users to
-the generation-versioned ops, whose only publish primitive is the
-pointer write above (safe on every scheme).
+:attr:`Fs.rename_is_atomic` classifies the scheme: the one
+rename-SWAP maintenance protocol left, ``layout.compact_table``,
+infers crash state from which directories exist, which is only sound
+when a rename cannot be half-applied — it gates on this capability
+and directs object-store users to the generation-versioned stores,
+whose only publish primitive is the pointer write above (safe on
+every scheme).
 
 One narrowed object-store caveat remains:
 

@@ -73,6 +73,24 @@ def recover_compaction(path: str, fs=None) -> bool:
     return restored
 
 
+def _require_atomic_rename(fs, path: str) -> None:
+    """The rename swap below infers crash state from which directories
+    exist — sound only where a rename cannot be half-applied.
+    Object-store renames are copy+delete, so a crash mid-swap would
+    leave a PARTIAL live tree that :func:`recover_compaction`'s "live
+    exists ⇒ swap completed" inference would then treat as final,
+    deleting the backup. Stores that must run on object stores publish
+    generations behind a pointer instead (`operators/generations`)."""
+    if not fs.rename_is_atomic:
+        raise NotImplementedError(
+            "compact_table swaps directories in place and requires an "
+            f"atomic-rename filesystem; {path!r} ({fs.scheme}) renames "
+            "by copy+delete. On object stores, keep the table in a "
+            "generation-versioned store (operators/generations), which "
+            "publishes by a pointer write instead of a rename"
+        )
+
+
 def compact_table(
     spark: SparkSession,
     path: str,
@@ -87,12 +105,9 @@ def compact_table(
     between the two swap renames leaves the table at ``__precompact``;
     :func:`recover_compaction` (run here on entry) restores it."""
     from data_pipeline_with_big_data_stack_spark.operators import fsio
-    from data_pipeline_with_big_data_stack_spark.operators.ann_index import (
-        _require_atomic_rename,
-    )
 
     fs = fsio.Fs(spark, path)
-    _require_atomic_rename(fs, path, "compact_table")
+    _require_atomic_rename(fs, path)
     recover_compaction(path, fs=fs)
     total = sum(
         n for f, n in fs.file_sizes_recursive(path) if f.endswith(".parquet")

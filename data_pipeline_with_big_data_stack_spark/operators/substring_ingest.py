@@ -52,7 +52,7 @@ state the first attempt saw (its own half-written partition is excluded
 then overwritten), the identical argument to `operators/dedup_ingest`.
 
 **Single writer.** Writers — the drain and the compactor — serialize on
-the store root's writer lock (the shared `operators/ann_index` lease
+the store root's writer lock (the shared `operators/generations` lease
 machinery, stale-holder reclaim included): two concurrent drains would
 otherwise interleave epoch publishes and index appends. Direct
 :func:`substring_ingest_batch` calls self-acquire the same lock and
@@ -100,6 +100,9 @@ from data_pipeline_with_big_data_stack_spark.operators.dedup_ingest import (
     _publish_watermark_row,
     _refuse_direct_driven,
     _write_epoch,
+)
+from data_pipeline_with_big_data_stack_spark.operators.generations import (
+    _index_write_lock,
 )
 
 
@@ -162,10 +165,6 @@ def substring_ingest_batch(
     for the whole drain. ``fail_after='decisions'`` is the
     crash-injection hook: raises after the decisions publish, before
     the index publish, simulating a crash mid-epoch."""
-    from data_pipeline_with_big_data_stack_spark.operators.ann_index import (
-        _index_write_lock,
-    )
-
     lease = (
         _index_write_lock(batch.sparkSession, store.base)
         if not _stream_epoch
@@ -347,10 +346,6 @@ def run_substring_ingest_stream(
             if fail_after == "compact" and eid == fail_epoch:
                 raise RuntimeError("injected crash after in-drain fold")
 
-    from data_pipeline_with_big_data_stack_spark.operators.ann_index import (
-        _index_write_lock,
-    )
-
     lease = _index_write_lock(spark, store.base)
     try:
         _refuse_direct_driven(store)
@@ -390,10 +385,6 @@ def compact_substring_ingest_store(
     self-maintenance step) instead. Returns the new per-sink logical
     file counts ({} for incremental folds, which skip the listing
     walk)."""
-    from data_pipeline_with_big_data_stack_spark.operators.ann_index import (
-        _index_write_lock,
-    )
-
     lease = _index_write_lock(spark, store.base)
     try:
         return _compact_into_new_generation(

@@ -1191,11 +1191,14 @@ def _rerank_exact_stage(
 # vectors (opt-outs, takedowns, retention windows). Build the full
 # index, expire a deterministic tombstone set (vec_id % 17 == 3, ~6 %
 # spread across every cell — production tombstones are sparse and touch
-# few cells; the spread here exercises the per-cell swap everywhere),
-# then serve the probes from the surviving index. The oracle is the
-# full IVF-PQ replay with the tombstoned ids excluded from the
-# candidate set — codebooks were trained BEFORE the expiry, so only the
-# codes rows disappear, which is exactly what expire_vectors does
+# few cells; the spread here exercises the per-cell rewrite
+# everywhere), then serve the probes from the surviving index. Every
+# step runs through operators/ann_index_versioned: the expiry publishes
+# a new generation holding the rewritten cells plus references to the
+# untouched ones. The oracle is the full IVF-PQ replay with the
+# tombstoned ids excluded from the candidate set — codebooks were
+# trained BEFORE the expiry, so only the codes rows disappear, which is
+# exactly what expire_ivfpq_versioned does
 # (search-after-expire == rebuild-over-survivors is separately
 # byte-pinned in tests/test_ann_index.py).
 # --------------------------------------------------------------------------
@@ -1211,62 +1214,64 @@ _IVFPQ_EXPIRE_ORACLE = _IVFPQ_ORACLE.replace(
 @query("q_ann_ivfpq_index_expire", oracle=_IVFPQ_EXPIRE_ORACLE)
 def q_ann_ivfpq_index_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
 
-    from data_pipeline_with_big_data_stack_spark.operators.ann_index import (
-        build_ivfpq_index,
-        expire_vectors,
-        search_ivfpq_index,
+    from data_pipeline_with_big_data_stack_spark.operators.ann_index_versioned import (
+        build_ivfpq_versioned,
+        expire_ivfpq_versioned,
+        search_ivfpq_versioned,
     )
 
     e = _emb(spark, sf_dir).select("vec_id", "emb")
     cb0, cb1 = _pq_train_codebooks(e)
     coarse = _km_demo_init(e, _K_CELLS)
-    path = scratch_dir("ivfpq_expire_") + "/index"
-    build_ivfpq_index(e, path, coarse, [cb0, cb1], sub_dim=_PQ_SUB)
-    expire_vectors(
-        spark, path, predicate=(F.col("vec_id") % _EXPIRE_MOD) == _EXPIRE_RES
+    root = scratch_dir("ivfpq_expire_") + "/vroot"
+    build_ivfpq_versioned(e, root, coarse, [cb0, cb1], sub_dim=_PQ_SUB)
+    expire_ivfpq_versioned(
+        spark, root, predicate=(F.col("vec_id") % _EXPIRE_MOD) == _EXPIRE_RES
     )
     probes = e.filter(F.col("vec_id") < N_QUERY_VECS).select(
         F.col("vec_id").alias("q_id"), F.col("emb").alias("q_emb")
     )
-    return search_ivfpq_index(spark, path, probes, nprobe=_NPROBE, k=TOP_K)
+    return search_ivfpq_versioned(spark, root, probes, nprobe=_NPROBE, k=TOP_K)
 
 
 # --------------------------------------------------------------------------
 # STREAMING ingest into the materialized vector index (round 5): train
-# codebooks offline, create an empty index, then stream the corpus in —
-# each micro-batch coded map-side and APPENDED to the cell partitions
-# (operators/ann_index.append_to_ivfpq_index), never rewriting existing
-# files; finally serve the probes from the accumulated index. Codes are
-# a per-vector pure function of the broadcast codebooks, so the final
-# index is independent of micro-batch boundaries and the search result
-# equals the inline trainer's — it shares _IVFPQ_ORACLE, giving the
-# driver a value check of the whole stream→append→prune→ADC loop. This
-# is the dedup_index incremental-append pattern lifted to the vector
-# store: the shape of a training corpus that gains embeddings daily.
+# codebooks offline, create an empty versioned index, then stream the
+# corpus in — each micro-batch coded map-side and published as a new
+# generation that references every earlier segment and adds only the
+# batch's codes (operators/ann_index_versioned.append_ivfpq_versioned),
+# never rewriting existing files; finally serve the probes from the
+# live generation. Codes are a per-vector pure function of the
+# broadcast codebooks, so the final index is independent of
+# micro-batch boundaries and the search result equals the inline
+# trainer's — it shares _IVFPQ_ORACLE, giving the driver a value check
+# of the whole stream→append→prune→ADC loop. This is the dedup_index
+# incremental-append pattern lifted to the vector store: the shape of
+# a training corpus that gains embeddings daily.
 # --------------------------------------------------------------------------
 @query("q_stream_ann_ivfpq_ingest", oracle=_IVFPQ_ORACLE)
 def q_stream_ann_ivfpq_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
-    from data_pipeline_with_big_data_stack_spark.operators.ann_index import (
-        append_to_ivfpq_index,
-        build_ivfpq_index,
-        search_ivfpq_index,
+    from data_pipeline_with_big_data_stack_spark.operators.ann_index_versioned import (
+        append_ivfpq_versioned,
+        build_ivfpq_versioned,
+        search_ivfpq_versioned,
     )
 
     e = _emb(spark, sf_dir).select("vec_id", "emb")
     cb0, cb1 = _pq_train_codebooks(e)
     coarse = _km_demo_init(e, _K_CELLS)
     base = scratch_dir("ivfpq_stream_")
-    path = base + "/index"
+    root = base + "/vroot"
     # empty build = codebook sidecars + partition root; data arrives via
     # the stream
-    build_ivfpq_index(e.limit(0), path, coarse, [cb0, cb1], sub_dim=_PQ_SUB)
+    build_ivfpq_versioned(e.limit(0), root, coarse, [cb0, cb1], sub_dim=_PQ_SUB)
     src = base + "/src"
     # 4 source files → 4 micro-batches: the multi-batch property the
     # query exists to exercise, at a BOUNDED epoch count. The previous
     # unconstrained write emitted one file per scan task (32 on the
     # bench session), and each of the 32 resulting epochs paid the full
-    # append protocol (lock, recovery scans, sidecar reads, commit) —
+    # append protocol (lock, sidecar reads, commit, publish) —
     # 453 stages measured at sf0.1 (r15). Codes are a per-vector pure
     # function of the broadcast codebooks, so the drained index is
     # batch-boundary independent by construction (docstring above).
@@ -1278,7 +1283,7 @@ def q_stream_ann_ivfpq_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q = (
         st.writeStream.foreachBatch(
-            lambda df, _eid: append_to_ivfpq_index(df.sparkSession, path, df)
+            lambda df, _eid: append_ivfpq_versioned(df.sparkSession, root, df)
         )
         .option("checkpointLocation", base + "/ckpt")
         .trigger(availableNow=True)
@@ -1288,7 +1293,7 @@ def q_stream_ann_ivfpq_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = e.filter(F.col("vec_id") < N_QUERY_VECS).select(
         F.col("vec_id").alias("q_id"), F.col("emb").alias("q_emb")
     )
-    return search_ivfpq_index(spark, path, probes, nprobe=_NPROBE, k=TOP_K)
+    return search_ivfpq_versioned(spark, root, probes, nprobe=_NPROBE, k=TOP_K)
 
 
 # --------------------------------------------------------------------------
@@ -1394,19 +1399,20 @@ def q_embed_mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Index RETRAIN (round 7, VERDICT r6 #2): append_to_ivfpq_index codes new
-# vectors with codebooks frozen at build time, so recall decays silently
-# as the ingested distribution shifts (drift pinned in
-# tests/test_ann_index.py). retrain_ivfpq_index is the reindex: fresh
+# Index RETRAIN (round 7, VERDICT r6 #2): append_ivfpq_versioned codes
+# new vectors with codebooks frozen at build time, so recall decays
+# silently as the ingested distribution shifts (drift pinned in
+# tests/test_ann_index.py). retrain_ivfpq_versioned is the reindex: fresh
 # md5-seeded codebooks trained over the CURRENT corpus
-# (operators/ann_index.train_ivfpq_codebooks), everything re-coded, and
-# codes + both sidecars swapped as one crash-recoverable unit. The
-# trainer is deterministic (hash-ranked seeds + the same decimal-mean
-# lloyd the PQ queries use), so the oracle replays the ENTIRE post-
-# retrain state: seed selection, 2 lloyd rounds for the coarse codebook
-# (64-dim) and both PQ subspaces (32-dim), coding, probe selection, and
-# ADC ranking. The stale pre-retrain codebooks the index was built with
-# cancel out — exactly the property that makes retrain a safe reindex.
+# (operators/ann_index.train_ivfpq_codebooks), everything re-coded into
+# a new generation, and codes + both sidecars published together by one
+# pointer write. The trainer is deterministic (hash-ranked seeds + the
+# same decimal-mean lloyd the PQ queries use), so the oracle replays
+# the ENTIRE post-retrain state: seed selection, 2 lloyd rounds for the
+# coarse codebook (64-dim) and both PQ subspaces (32-dim), coding, probe
+# selection, and ADC ranking. The stale pre-retrain codebooks the
+# index was built with cancel out — exactly the property that makes
+# retrain a safe reindex.
 # --------------------------------------------------------------------------
 _IVFPQ_RETRAIN_ORACLE = f"""
     WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
@@ -1466,10 +1472,10 @@ _IVFPQ_RETRAIN_ORACLE = f"""
 @query("q_ann_ivfpq_index_retrain", oracle=_IVFPQ_RETRAIN_ORACLE)
 def q_ann_ivfpq_index_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
-    from data_pipeline_with_big_data_stack_spark.operators.ann_index import (
-        build_ivfpq_index,
-        retrain_ivfpq_index,
-        search_ivfpq_index,
+    from data_pipeline_with_big_data_stack_spark.operators.ann_index_versioned import (
+        build_ivfpq_versioned,
+        retrain_ivfpq_versioned,
+        search_ivfpq_versioned,
     )
 
     e = _emb(spark, sf_dir).select("vec_id", "emb")
@@ -1482,13 +1488,15 @@ def q_ann_ivfpq_index_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.select("vec_id", F.slice("emb", _PQ_SUB + 1, _PQ_SUB).alias("emb")),
         _PQ_K,
     ).withColumnRenamed("cb", "cb1")
-    path = scratch_dir("ivfpq_retrain_") + "/index"
-    build_ivfpq_index(e, path, _km_demo_init(e, _K_CELLS), [cb0, cb1], sub_dim=_PQ_SUB)
-    retrain_ivfpq_index(spark, path, e, k_coarse=_K_CELLS, k_pq=_PQ_K)
+    root = scratch_dir("ivfpq_retrain_") + "/vroot"
+    build_ivfpq_versioned(
+        e, root, _km_demo_init(e, _K_CELLS), [cb0, cb1], sub_dim=_PQ_SUB
+    )
+    retrain_ivfpq_versioned(spark, root, e, k_coarse=_K_CELLS, k_pq=_PQ_K)
     probes = e.filter(F.col("vec_id") < N_QUERY_VECS).select(
         F.col("vec_id").alias("q_id"), F.col("emb").alias("q_emb")
     )
-    return search_ivfpq_index(spark, path, probes, nprobe=_NPROBE, k=TOP_K)
+    return search_ivfpq_versioned(spark, root, probes, nprobe=_NPROBE, k=TOP_K)
 
 
 # Full versioned-maintenance trajectory (round 10, VERDICT r8 #4): the
@@ -1509,8 +1517,8 @@ _IVFPQ_VERSIONED_ORACLE = _IVFPQ_RETRAIN_ORACLE.replace(
 def q_ann_ivfpq_versioned_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reader-safe generation-versioned lifecycle (round 8; extended to
     the FULL maintenance surface round 10): build over half the corpus
-    with stale codebooks, append the other half (hardlink-clone + frozen
-    codebooks), compact the now-fragmented cells (asserted non-no-op),
+    with stale codebooks, append the other half (manifest references +
+    frozen codebooks), compact the now-fragmented cells (asserted non-no-op),
     expire the tombstone set, then retrain and search — every step
     through ``operators/
     ann_index_versioned``, where each maintenance op publishes a whole
@@ -1519,7 +1527,7 @@ def q_ann_ivfpq_versioned_lifecycle(spark: SparkSession, sf_dir: str) -> DataFra
     (pinned in tests/test_ann_versioned.py). Append's frozen-codebook
     codes and the content-invisible compaction are both replaced
     wholesale by the retrain (a fresh deterministic build over the live
-    = surviving ids), so the DuckDB oracle is the in-place twin's
+    = surviving ids), so the DuckDB oracle is q_ann_ivfpq_index_retrain's
     full-trajectory replay restricted to the survivors."""
 
     from data_pipeline_with_big_data_stack_spark.operators.ann_index_versioned import (

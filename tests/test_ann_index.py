@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
+from data_pipeline_with_big_data_stack_spark.operators import ann_index_versioned as V
 from data_pipeline_with_big_data_stack_spark.operators.ann_index import (
     build_ivf_index,
     search_ivf_index,
@@ -173,106 +174,37 @@ def test_ivfpq_index_prunes_partitions_and_stores_no_vectors(spark, tmp_path):
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
 
 
-def test_ivfpq_append_equals_build_over_union(spark, tmp_path):
-    """Incremental corpus growth: append codes the new vectors with the
-    sidecar codebooks, so search over (build(half) + append(half)) is
-    IDENTICAL to search over build(all) — and the original partition
-    files are not rewritten (O(new vectors), not O(corpus))."""
-    import glob
-    import os
-
-    from data_pipeline_with_big_data_stack_spark.operators.ann_index import (
-        append_to_ivfpq_index,
-        build_ivfpq_index,
-        search_ivfpq_index,
-    )
-    from data_pipeline_with_big_data_stack_spark.queries.vector import (
-        _PQ_SUB,
-        _pq_train_codebooks,
-    )
-
-    e = _emb(spark, SF_SMOKE).select("vec_id", "emb")
-    coarse = _codebook(e)
-    pq = _pq_train_codebooks(e)
-
-    full_path = str(tmp_path / "full")
-    build_ivfpq_index(e, full_path, coarse, pq, sub_dim=_PQ_SUB)
-
-    inc_path = str(tmp_path / "inc")
-    build_ivfpq_index(
-        e.filter(F.col("vec_id") % 2 == 0), inc_path, coarse, pq, sub_dim=_PQ_SUB
-    )
-    before = {
-        f: os.path.getmtime(f) for f in glob.glob(inc_path + "/cell_id=*/*.parquet")
-    }
-    append_to_ivfpq_index(spark, inc_path, e.filter(F.col("vec_id") % 2 == 1))
-    after = {f: os.path.getmtime(f) for f in before}
-    assert after == before, "append must not rewrite existing files"
-
-    probes = e.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("q_id"), F.col("emb").alias("q_emb")
-    )
-
-    def res(path):
-        return sorted(
-            (r.q_id, r.vec_id, r.cell_id, r.adc_dist)
-            for r in search_ivfpq_index(spark, path, probes, nprobe=2, k=5).collect()
-        )
-
-    assert res(inc_path) == res(full_path)
-
-
 def test_ivfpq_compaction_preserves_results(spark, tmp_path):
     """Repeated appends fragment the cell partitions; compaction
-    rewrites to one file per cell without changing a single search
+    publishes one file per cell without changing a single search
     result (codes and sidecars are untouched semantically)."""
-    import glob
-    import os
-    from collections import Counter
-
-    from data_pipeline_with_big_data_stack_spark.operators.ann_index import (
-        append_to_ivfpq_index,
-        build_ivfpq_index,
-        compact_ivfpq_index,
-        search_ivfpq_index,
-    )
+    from data_pipeline_with_big_data_stack_spark.operators import fsio, segman
     from data_pipeline_with_big_data_stack_spark.queries.vector import (
         _PQ_SUB,
         _pq_train_codebooks,
     )
 
     e = _emb(spark, SF_SMOKE).select("vec_id", "emb")
-    path = str(tmp_path / "idx")
-    build_ivfpq_index(
-        e.filter(F.col("vec_id") % 4 == 0), path, _codebook(e),
+    root = str(tmp_path / "idx")
+    V.build_ivfpq_versioned(
+        e.filter(F.col("vec_id") % 4 == 0), root, _codebook(e),
         _pq_train_codebooks(e), sub_dim=_PQ_SUB,
     )
     for r in (1, 2, 3):
-        append_to_ivfpq_index(spark, path, e.filter(F.col("vec_id") % 4 == r))
+        V.append_ivfpq_versioned(spark, root, e.filter(F.col("vec_id") % 4 == r))
 
     def per_cell():
-        return Counter(
-            os.path.dirname(f) for f in glob.glob(path + "/cell_id=*/*.parquet")
-        )
+        fs = fsio.Fs(spark, root)
+        entries = segman.resolve_all(fs, V.current_index_path(root))
+        return V._per_cell_file_counts(fs, entries)
 
     assert max(per_cell().values()) >= 4, "appends fragmented the cells"
-    probes = e.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("q_id"), F.col("emb").alias("q_emb")
-    )
-
-    def res():
-        return sorted(
-            (r.q_id, r.vec_id, r.cell_id, r.adc_dist)
-            for r in search_ivfpq_index(spark, path, probes, nprobe=2, k=5).collect()
-        )
-
-    before = res()
-    n = compact_ivfpq_index(spark, path, max_files_per_cell=3)
-    assert n > 0
+    before = _search_res(spark, root, e)
+    assert V.compact_ivfpq_versioned(spark, root, max_files_per_cell=3) is not None
     assert max(per_cell().values()) == 1, "one file per cell after compaction"
-    assert res() == before
+    assert _search_res(spark, root, e) == before
     # under threshold → no-op
-    assert compact_ivfpq_index(spark, path, max_files_per_cell=3) == 0
+    assert V.compact_ivfpq_versioned(spark, root, max_files_per_cell=3) is None
 
 
 def _dead_pid() -> int:
@@ -285,22 +217,35 @@ def _dead_pid() -> int:
 
 
 def _build_small(spark, tmp_path, name="idx", modulus=None):
-    from data_pipeline_with_big_data_stack_spark.operators.ann_index import build_ivfpq_index
+    """A versioned index root over the smoke corpus (or every
+    ``modulus``-th vector of it)."""
     from data_pipeline_with_big_data_stack_spark.queries.vector import _PQ_SUB, _pq_train_codebooks
 
     e = _emb(spark, SF_SMOKE).select("vec_id", "emb")
     src = e if modulus is None else e.filter(F.col("vec_id") % modulus == 0)
-    path = str(tmp_path / name)
-    build_ivfpq_index(src, path, _codebook(e), _pq_train_codebooks(e), sub_dim=_PQ_SUB)
-    return e, path
+    root = str(tmp_path / name)
+    V.build_ivfpq_versioned(
+        src, root, _codebook(e), _pq_train_codebooks(e), sub_dim=_PQ_SUB
+    )
+    return e, root
 
 
-def _search_res(spark, path, e, k=5):
+def _codes(spark, root):
+    """The live generation's codes, referenced segments included."""
+    from data_pipeline_with_big_data_stack_spark.operators.ann_index import _read_table
+
+    return _read_table(spark, V.current_index_path(root))
+
+
+def _search_res(spark, root, e, k=5, flat=False):
+    """Sorted top-``k`` of probes 0..2 against a versioned root (or a
+    single-generation index path with ``flat=True``)."""
     from data_pipeline_with_big_data_stack_spark.operators.ann_index import search_ivfpq_index
 
     probes = e.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("q_id"), F.col("emb").alias("q_emb")
     )
+    path = root if flat else V.current_index_path(root)
     return sorted(
         (r.q_id, r.vec_id, r.cell_id, r.adc_dist)
         for r in search_ivfpq_index(spark, path, probes, nprobe=2, k=k).collect()
@@ -308,23 +253,23 @@ def _search_res(spark, path, e, k=5):
 
 
 def test_expire_equals_rebuild_over_survivors(spark, tmp_path):
-    """Retention/delete parity (VERDICT r5 #5): search after
-    expire_vectors(ids) == search over an index BUILT from the
-    survivors — and cells without tombstones are never rewritten."""
+    """Retention/delete parity (VERDICT r5 #5): search after an expiry
+    of ids == search over an index BUILT from the survivors — and cells
+    without tombstones are never rewritten (the new generation holds
+    only the affected cell; the rest are references to untouched
+    files)."""
     import glob
     import os
 
-    from data_pipeline_with_big_data_stack_spark.operators.ann_index import (
-        build_ivfpq_index,
-        expire_vectors,
-    )
+    from data_pipeline_with_big_data_stack_spark.operators.ann_index import build_ivfpq_index
     from data_pipeline_with_big_data_stack_spark.queries.vector import (
         _PQ_SUB,
         _pq_train_codebooks,
     )
 
-    e, path = _build_small(spark, tmp_path, "full")
-    idx = spark.read.parquet(path)
+    e, root = _build_small(spark, tmp_path, "full")
+    g1 = V.read_current(root)
+    idx = _codes(spark, root)
     cells = sorted(r.cell_id for r in idx.select("cell_id").distinct().collect())
     victim_cell = cells[0]
     doomed_ids = [
@@ -335,13 +280,18 @@ def test_expire_equals_rebuild_over_survivors(spark, tmp_path):
     assert doomed_ids
     before = {
         f: os.path.getmtime(f)
-        for f in glob.glob(path + "/cell_id=*/*.parquet")
+        for f in glob.glob(V._gen_index(root, g1) + "/cell_id=*/*.parquet")
         if f"cell_id={victim_cell}/" not in f
     }
-    n = expire_vectors(spark, path, ids=doomed_ids)
-    assert n == len(doomed_ids)
+    g2 = V.expire_ivfpq_versioned(spark, root, ids=doomed_ids)
+    assert g2 is not None
     after = {f: os.path.getmtime(f) for f in before}
     assert after == before, "untouched cells must not be rewritten"
+    rewritten = {
+        os.path.basename(d) for d in glob.glob(V._gen_index(root, g2) + "/cell_id=*")
+    }
+    assert rewritten <= {f"cell_id={victim_cell}"}, rewritten
+    assert _codes(spark, root).count() == idx.count() - len(doomed_ids)
 
     survivors = e.join(
         spark.createDataFrame([(i,) for i in doomed_ids], ["vec_id"]),
@@ -352,111 +302,87 @@ def test_expire_equals_rebuild_over_survivors(spark, tmp_path):
     build_ivfpq_index(
         survivors, rebuilt, _codebook(e), _pq_train_codebooks(e), sub_dim=_PQ_SUB
     )
-    assert _search_res(spark, path, e) == _search_res(spark, rebuilt, e)
-    # idempotent: expiring the same ids again removes nothing
-    assert expire_vectors(spark, path, ids=doomed_ids) == 0
+    assert _search_res(spark, root, e) == _search_res(spark, rebuilt, e, flat=True)
+    # idempotent: expiring the same ids again matches nothing and
+    # publishes nothing
+    assert V.expire_ivfpq_versioned(spark, root, ids=doomed_ids) is None
+    assert V.read_current(root) == g2
 
 
 def test_expire_with_dataframe_ids_and_predicate(spark, tmp_path):
-    from data_pipeline_with_big_data_stack_spark.operators.ann_index import expire_vectors
-
-    e, path = _build_small(spark, tmp_path)
-    total = spark.read.parquet(path).count()
-    tomb = spark.range(5).select(F.col("id").alias("vec_id"))
-    n1 = expire_vectors(spark, path, ids=tomb)
-    assert n1 == 5
-    n2 = expire_vectors(spark, path, predicate=F.col("vec_id") >= total - 3)
-    assert n2 == 3
-    assert spark.read.parquet(path).count() == total - 8
     import pytest
 
+    e, root = _build_small(spark, tmp_path)
+    total = _codes(spark, root).count()
+    tomb = spark.range(5).select(F.col("id").alias("vec_id"))
+    assert V.expire_ivfpq_versioned(spark, root, ids=tomb) is not None
+    assert _codes(spark, root).count() == total - 5
+    pred = F.col("vec_id") >= total - 3
+    assert V.expire_ivfpq_versioned(spark, root, predicate=pred) is not None
+    assert _codes(spark, root).count() == total - 8
+
     with pytest.raises(ValueError, match="exactly one"):
-        expire_vectors(spark, path)
+        V.expire_ivfpq_versioned(spark, root)
     with pytest.raises(ValueError, match="exactly one"):
-        expire_vectors(spark, path, ids=[1], predicate=F.lit(True))
-
-
-def test_expire_crash_recovery_restores_parked_cell(spark, tmp_path):
-    """Tightest expire crash window: a cell moved to __preexpire but its
-    staged replacement not yet renamed in. The next expire entry must
-    restore the parked original before re-filtering."""
-    import os
-    import shutil
-
-    from data_pipeline_with_big_data_stack_spark.operators.ann_index import expire_vectors
-
-    e, path = _build_small(spark, tmp_path)
-    baseline = _search_res(spark, path, e)
-    cell_dir = sorted(
-        d for d in os.listdir(path) if d.startswith("cell_id=")
-    )[0]
-    trash = path + "__preexpire"
-    os.makedirs(trash)
-    os.rename(os.path.join(path, cell_dir), os.path.join(trash, cell_dir))
-    shutil.os.makedirs(path + "__expiring", exist_ok=True)  # stale staging
-    assert expire_vectors(spark, path, ids=[]) == 0  # recovery runs on entry
-    assert not os.path.exists(trash)
-    assert not os.path.exists(path + "__expiring")
-    assert _search_res(spark, path, e) == baseline
+        V.expire_ivfpq_versioned(spark, root, ids=[1], predicate=F.lit(True))
 
 
 def test_index_writer_lock_blocks_and_reclaims(spark, tmp_path):
-    """A live holder blocks append/compact/expire; a crashed (dead-pid)
-    holder is reclaimed automatically — no manual lock removal."""
+    """A live holder of the root's writer lock blocks append, compact
+    and expire; a crashed (dead-pid) holder is reclaimed automatically
+    — no manual lock removal."""
     import os
     import socket
 
     import pytest
 
-    from data_pipeline_with_big_data_stack_spark.operators.ann_index import (
+    from data_pipeline_with_big_data_stack_spark.operators.generations import (
         _INDEX_LOCK_SUFFIX,
-        append_to_ivfpq_index,
-        compact_ivfpq_index,
-        expire_vectors,
     )
 
-    e, path = _build_small(spark, tmp_path, modulus=2)
-    lock = path + _INDEX_LOCK_SUFFIX
+    e, root = _build_small(spark, tmp_path, modulus=2)
+    lock = root + _INDEX_LOCK_SUFFIX
     with open(lock, "w") as fh:  # a LIVE holder: this very process
         fh.write(f"{os.getpid()}@{socket.gethostname()} 0.0\n")
     newer = e.filter(F.col("vec_id") % 2 == 1)
     with pytest.raises(RuntimeError, match="locked by another"):
-        append_to_ivfpq_index(spark, path, newer)
+        V.append_ivfpq_versioned(spark, root, newer)
     with pytest.raises(RuntimeError, match="locked by another"):
-        compact_ivfpq_index(spark, path)
+        V.compact_ivfpq_versioned(spark, root)
     with pytest.raises(RuntimeError, match="locked by another"):
-        expire_vectors(spark, path, ids=[0])
+        V.expire_ivfpq_versioned(spark, root, ids=[0])
 
     # crashed holder: dead pid on this host → reclaimed without help
     with open(lock, "w") as fh:
         fh.write(f"{_dead_pid()}@{socket.gethostname()} 0.0\n")
-    append_to_ivfpq_index(spark, path, newer)
+    V.append_ivfpq_versioned(spark, root, newer)
     assert not os.path.exists(lock), "lock released after append"
 
 
 def test_compact_expire_retrain_run_on_file_uri_via_hadoop_fs(spark, tmp_path):
-    """The maintenance swaps route through the Hadoop FileSystem API
+    """The maintenance ops route through the Hadoop FileSystem API
     (VERDICT r10 #1): the whole mutating surface — append, compact,
     expire, retrain — must run against an explicit ``file:`` URI, the
     exact code path any remote scheme takes (the sandbox has no HDFS;
     scheme-agnosticism is proved the way build/search already prove
     it). Results must equal the same lifecycle on a plain local path."""
-    import data_pipeline_with_big_data_stack_spark.operators.ann_index as ai
 
-    def lifecycle(path):
+    def lifecycle(root):
         from data_pipeline_with_big_data_stack_spark.queries.vector import _PQ_SUB, _pq_train_codebooks
 
         e = _emb(spark, SF_SMOKE).select("vec_id", "emb")
         old_half = e.filter(F.col("vec_id") % 2 == 0)
         batch = e.filter(F.col("vec_id") % 2 == 1)
-        ai.build_ivfpq_index(
-            old_half, path, _codebook(e), _pq_train_codebooks(e), sub_dim=_PQ_SUB
+        V.build_ivfpq_versioned(
+            old_half, root, _codebook(e), _pq_train_codebooks(e), sub_dim=_PQ_SUB
         )
-        ai.append_to_ivfpq_index(spark, path, batch)
-        assert ai.compact_ivfpq_index(spark, path, max_files_per_cell=1) > 0
-        assert ai.expire_vectors(spark, path, ids=[0, 2, 4]) == 3
-        ai.retrain_ivfpq_index(spark, path, e, k_coarse=4, k_pq=4)
-        return _search_res(spark, path, e)
+        V.append_ivfpq_versioned(spark, root, batch)
+        assert V.compact_ivfpq_versioned(spark, root, max_files_per_cell=1) is not None
+        n = _codes(spark, root).count()
+        assert V.expire_ivfpq_versioned(spark, root, ids=[0, 2, 4]) is not None
+        assert _codes(spark, root).count() == n - 3
+        V.retrain_ivfpq_versioned(spark, root, e, k_coarse=4, k_pq=4)
+        return _search_res(spark, root, e)
 
     plain = lifecycle(str(tmp_path / "plain"))
     via_uri = lifecycle("file:" + str(tmp_path / "uri"))
@@ -468,19 +394,17 @@ def test_streaming_optout_expiry_end_to_end(spark, tmp_path):
     arrive as a stream; each micro-batch expires its ids from the live
     index via foreachBatch (the writer lock serializes against any
     concurrent append/compact). Expiry is IDEMPOTENT — re-expiring an
-    already-removed id deletes 0 rows — so at-least-once foreachBatch
-    delivery needs no marker machinery (unlike the rollup merge, which
-    is additive). Final index == build over never-opted-out vectors."""
-    from data_pipeline_with_big_data_stack_spark.operators.ann_index import (
-        build_ivfpq_index,
-        expire_vectors,
-    )
+    already-removed id matches nothing and publishes nothing — so
+    at-least-once foreachBatch delivery needs no marker machinery
+    (unlike the rollup merge, which is additive). Final index == build
+    over never-opted-out vectors."""
+    from data_pipeline_with_big_data_stack_spark.operators.ann_index import build_ivfpq_index
     from data_pipeline_with_big_data_stack_spark.queries.vector import (
         _PQ_SUB,
         _pq_train_codebooks,
     )
 
-    e, path = _build_small(spark, tmp_path, "live")
+    e, root = _build_small(spark, tmp_path, "live")
     optouts = e.filter(F.col("vec_id") % 11 == 5).select("vec_id")
     src = str(tmp_path / "optout_stream")
     # several single-file batches so multiple foreachBatch epochs run
@@ -492,7 +416,7 @@ def test_streaming_optout_expiry_end_to_end(spark, tmp_path):
     )
     q = (
         st.writeStream.foreachBatch(
-            lambda df, _eid: expire_vectors(df.sparkSession, path, ids=df)
+            lambda df, _eid: V.expire_ivfpq_versioned(df.sparkSession, root, ids=df)
         )
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
@@ -505,43 +429,10 @@ def test_streaming_optout_expiry_end_to_end(spark, tmp_path):
     build_ivfpq_index(
         survivors, rebuilt, _codebook(e), _pq_train_codebooks(e), sub_dim=_PQ_SUB
     )
-    assert _search_res(spark, path, e) == _search_res(spark, rebuilt, e)
+    assert _search_res(spark, root, e) == _search_res(spark, rebuilt, e, flat=True)
     assert (
-        spark.read.parquet(path).count() == survivors.count()
+        _codes(spark, root).count() == survivors.count()
     ), "every opted-out vector gone, nothing else"
-
-
-def test_compaction_heals_crashed_expire_first(spark, tmp_path):
-    """Interplay of the two crash-recovery paths: a compaction entered
-    AFTER an expire crashed mid-swap must restore the parked cell
-    BEFORE rewriting — otherwise the compacted index would silently
-    lose the cell and the parked copy would be orphaned."""
-    import glob
-    import os
-
-    from data_pipeline_with_big_data_stack_spark.operators.ann_index import (
-        append_to_ivfpq_index,
-        compact_ivfpq_index,
-    )
-
-    e, path = _build_small(spark, tmp_path, modulus=2)
-    for r in (1,):  # fragment the cells so compaction has work
-        append_to_ivfpq_index(spark, path, e.filter(F.col("vec_id") % 2 == r))
-    baseline = _search_res(spark, path, e)
-    total = spark.read.parquet(path).count()
-
-    # simulate the tightest expire crash: one cell parked, not replaced
-    cell_dir = sorted(d for d in os.listdir(path) if d.startswith("cell_id="))[0]
-    trash = path + "__preexpire"
-    os.makedirs(trash)
-    os.rename(os.path.join(path, cell_dir), os.path.join(trash, cell_dir))
-
-    n = compact_ivfpq_index(spark, path, max_files_per_cell=1)
-    assert n > 0
-    assert not os.path.exists(trash), "parked cell healed on compact entry"
-    assert spark.read.parquet(path).count() == total, "no vector lost"
-    assert _search_res(spark, path, e) == baseline
-    assert glob.glob(path + "/cell_id=*/*.parquet"), "index intact"
 
 
 def test_expire_null_predicate_rows_are_kept(spark, tmp_path):
@@ -549,49 +440,16 @@ def test_expire_null_predicate_rows_are_kept(spark, tmp_path):
     for a row must mean KEEP — without the internal coalesce such rows
     fell out of both the doomed set and the survivor rewrite and
     vanished silently, uncounted."""
-    from data_pipeline_with_big_data_stack_spark.operators.ann_index import expire_vectors
-
-    e, path = _build_small(spark, tmp_path)
-    total = spark.read.parquet(path).count()
+    e, root = _build_small(spark, tmp_path)
+    total = _codes(spark, root).count()
     # NULL for every vec_id >= 3 (no otherwise() branch)
     pred = F.when(F.col("vec_id") < 3, F.lit(True))
-    n = expire_vectors(spark, path, predicate=pred)
-    assert n == 3
-    assert spark.read.parquet(path).count() == total - 3, (
+    assert V.expire_ivfpq_versioned(spark, root, predicate=pred) is not None
+    assert _codes(spark, root).count() == total - 3, (
         "rows where the predicate evaluated NULL must survive"
     )
     # empty id list is a clean no-op, not an error
-    assert expire_vectors(spark, path, ids=[]) == 0
-
-
-def test_append_heals_crashed_expire_first(spark, tmp_path):
-    """An append entered AFTER an expire crashed mid-swap must restore
-    the parked cell BEFORE writing: recreating the live cell dir first
-    would make the next recovery conclude "swap completed" and discard
-    the parked originals — silent loss of every pre-crash vector in
-    that cell."""
-    import os
-
-    from data_pipeline_with_big_data_stack_spark.operators.ann_index import append_to_ivfpq_index
-
-    e, path = _build_small(spark, tmp_path, modulus=2)
-    n_even = spark.read.parquet(path).count()
-    odds = e.filter(F.col("vec_id") % 2 == 1)
-    n_odd = odds.count()
-
-    # simulate the tightest expire crash: one cell parked, not replaced
-    cell_dir = sorted(
-        d for d in os.listdir(path) if d.startswith("cell_id=")
-    )[0]
-    trash = path + "__preexpire"
-    os.makedirs(trash)
-    os.rename(os.path.join(path, cell_dir), os.path.join(trash, cell_dir))
-
-    append_to_ivfpq_index(spark, path, odds)
-    assert not os.path.exists(trash), "parked cell healed on append entry"
-    assert spark.read.parquet(path).count() == n_even + n_odd, (
-        "every pre-crash vector survived the append"
-    )
+    assert V.expire_ivfpq_versioned(spark, root, ids=[]) is None
 
 
 def test_expire_full_purge_leaves_readable_index(spark, tmp_path):
@@ -599,28 +457,21 @@ def test_expire_full_purge_leaves_readable_index(spark, tmp_path):
     purge) must leave an index that subsequent reads, searches,
     expiries, and appends can still open — not a bare directory Spark
     refuses to infer a schema from."""
-    from data_pipeline_with_big_data_stack_spark.operators.ann_index import (
-        append_to_ivfpq_index,
-        expire_vectors,
-        search_ivfpq_index,
-    )
-
-    e, path = _build_small(spark, tmp_path)
-    total = spark.read.parquet(path).count()
-    assert expire_vectors(spark, path, predicate=F.lit(True)) == total
-    assert spark.read.parquet(path).count() == 0
+    e, root = _build_small(spark, tmp_path)
+    assert V.expire_ivfpq_versioned(spark, root, predicate=F.lit(True)) is not None
+    assert _codes(spark, root).count() == 0
     probes = e.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("q_id"), F.col("emb").alias("q_emb")
     )
-    assert search_ivfpq_index(spark, path, probes, nprobe=2, k=5).count() == 0
-    assert expire_vectors(spark, path, ids=[1, 2, 3]) == 0
+    assert V.search_ivfpq_versioned(spark, root, probes, nprobe=2, k=5).count() == 0
+    assert V.expire_ivfpq_versioned(spark, root, ids=[1, 2, 3]) is None
     # the index accepts new vectors again after the purge
-    append_to_ivfpq_index(spark, path, e.filter(F.col("vec_id") < 10))
-    assert spark.read.parquet(path).count() == 10
+    V.append_ivfpq_versioned(spark, root, e.filter(F.col("vec_id") < 10))
+    assert _codes(spark, root).count() == 10
 
 
 # ---------------------------------------------------------------------------
-# retrain_ivfpq_index: the reindex half of the lifecycle (VERDICT r6 #2)
+# retrain_ivfpq_versioned: the reindex half of the lifecycle (VERDICT r6 #2)
 # ---------------------------------------------------------------------------
 
 
@@ -639,19 +490,18 @@ def test_retrain_equals_fresh_build_and_drops_expired(spark, tmp_path):
     trainer — and expired ids must not re-enter via the source."""
     from data_pipeline_with_big_data_stack_spark.operators.ann_index import (
         build_ivfpq_index,
-        expire_vectors,
-        retrain_ivfpq_index,
         train_ivfpq_codebooks,
     )
-    from data_pipeline_with_big_data_stack_spark.queries.vector import _PQ_SUB, _pq_train_codebooks
+    from data_pipeline_with_big_data_stack_spark.queries.vector import _PQ_SUB
 
-    e = _emb(spark, SF_SMOKE).select("vec_id", "emb")
-    path = str(tmp_path / "idx")
-    build_ivfpq_index(e, path, _codebook(e), _pq_train_codebooks(e), sub_dim=_PQ_SUB)
-    expired = expire_vectors(spark, path, predicate=F.col("vec_id") % 7 == 3)
-    assert expired > 0
+    e, root = _build_small(spark, tmp_path)
+    total = _codes(spark, root).count()
+    assert V.expire_ivfpq_versioned(
+        spark, root, predicate=F.col("vec_id") % 7 == 3
+    ) is not None
+    assert _codes(spark, root).count() < total
 
-    retrain_ivfpq_index(spark, path, e, k_coarse=4, k_pq=4)
+    V.retrain_ivfpq_versioned(spark, root, e, k_coarse=4, k_pq=4)
 
     survivors = e.filter(~(F.col("vec_id") % 7 == 3))
     coarse, pq_cbs = train_ivfpq_codebooks(
@@ -660,9 +510,9 @@ def test_retrain_equals_fresh_build_and_drops_expired(spark, tmp_path):
     fresh = str(tmp_path / "fresh")
     build_ivfpq_index(survivors, fresh, coarse, pq_cbs, sub_dim=_PQ_SUB)
 
-    assert _search_res(spark, path, e) == _search_res(spark, fresh, e)
+    assert _search_res(spark, root, e) == _search_res(spark, fresh, e, flat=True)
     # expired ids stayed out even though the source still contains them
-    left = {r.vec_id for r in spark.read.parquet(path).select("vec_id").collect()}
+    left = {r.vec_id for r in _codes(spark, root).select("vec_id").collect()}
     assert left == {r.vec_id for r in survivors.collect()}
 
 
@@ -675,10 +525,6 @@ def test_retrain_restores_recall_after_shifted_appends(spark, tmp_path):
     import numpy as np
 
     from data_pipeline_with_big_data_stack_spark.operators.ann_index import (
-        append_to_ivfpq_index,
-        build_ivfpq_index,
-        retrain_ivfpq_index,
-        search_ivfpq_index,
         train_ivfpq_codebooks,
     )
 
@@ -714,9 +560,9 @@ def test_retrain_restores_recall_after_shifted_appends(spark, tmp_path):
     coarse, pq_cbs = train_ivfpq_codebooks(
         corpus_a, k_coarse=8, k_pq=32, sub_dim=sub, n_sub=2
     )
-    path = str(tmp_path / "drift")
-    build_ivfpq_index(corpus_a, path, coarse, pq_cbs, sub_dim=sub)
-    append_to_ivfpq_index(spark, path, batch_b)
+    root = str(tmp_path / "drift")
+    V.build_ivfpq_versioned(corpus_a, root, coarse, pq_cbs, sub_dim=sub)
+    V.append_ivfpq_versioned(spark, root, batch_b)
 
     probes = _np_df(spark, probe_ids, probes_np).select(
         F.col("vec_id").alias("q_id"), F.col("emb").alias("q_emb")
@@ -724,7 +570,7 @@ def test_retrain_restores_recall_after_shifted_appends(spark, tmp_path):
 
     def recall():
         got = {}
-        for r in search_ivfpq_index(spark, path, probes, nprobe=2, k=4).collect():
+        for r in V.search_ivfpq_versioned(spark, root, probes, nprobe=2, k=4).collect():
             got.setdefault(r.q_id, set()).add(r.vec_id)
         recalls = [
             len(got.get(q, set()) & ids) / len(ids) for q, ids in planted.items()
@@ -736,150 +582,12 @@ def test_retrain_restores_recall_after_shifted_appends(spark, tmp_path):
     # the drifted index's coarse sidecar can have collapsed to fewer
     # live cells than the corpus now needs — a real reindex sizes K for
     # the grown corpus rather than inheriting the shrunken default
-    retrain_ivfpq_index(
-        spark, path, corpus_a.unionByName(batch_b), iters=3, k_coarse=12, k_pq=32
+    V.retrain_ivfpq_versioned(
+        spark, root, corpus_a.unionByName(batch_b), iters=3, k_coarse=12, k_pq=32
     )
     restored = recall()
     assert restored >= 0.9, f"retrain should restore recall: {restored}"
     assert restored > drifted
-
-
-def test_retrain_crash_recovery_rolls_forward(spark, tmp_path, monkeypatch):
-    """A crash ANYWHERE in retrain's 6-rename commit window must heal to
-    a consistent index on the next writer entry. Once the _ALL_STAGED
-    marker + park dir exist the staged set is publishable, so recovery
-    rolls FORWARD — the healed index equals an uncrashed retrain."""
-    import os
-
-    import data_pipeline_with_big_data_stack_spark.operators.ann_index as ai
-
-    e, path = _build_small(spark, tmp_path, name="crash")
-    _e2, twin = _build_small(spark, tmp_path, name="twin")
-    ai.retrain_ivfpq_index(spark, twin, e, k_coarse=4, k_pq=4)
-    expected = _search_res(spark, twin, e)
-
-    from data_pipeline_with_big_data_stack_spark.operators import fsio
-
-    real_rename = fsio.Fs.rename
-    state = {"n": 0}
-
-    def flaky(self, src, dst):
-        if "__preretrain" in dst or "__retraining" in src:
-            state["n"] += 1
-            if state["n"] == 4:  # all 3 parked + 1 published
-                raise RuntimeError("injected crash mid-swap")
-        real_rename(self, src, dst)
-
-    monkeypatch.setattr(fsio.Fs, "rename", flaky)
-    import pytest as _pytest
-
-    with _pytest.raises(RuntimeError, match="injected crash"):
-        ai.retrain_ivfpq_index(spark, path, e, k_coarse=4, k_pq=4)
-    monkeypatch.setattr(fsio.Fs, "rename", real_rename)
-
-    # any writer heals on entry; an empty expiry is the cheapest
-    assert ai.expire_vectors(spark, path, ids=[]) == 0
-    assert not os.path.exists(path + "__preretrain")
-    assert not os.path.exists(path + "__retraining")
-    assert _search_res(spark, path, e) == expected
-
-
-def test_retrain_stale_staging_rolls_back(spark, tmp_path):
-    """Staging WITHOUT a park dir means the commit never started: the
-    next writer entry discards the junk and the live index is
-    untouched."""
-    import os
-
-    import data_pipeline_with_big_data_stack_spark.operators.ann_index as ai
-
-    e, path = _build_small(spark, tmp_path)
-    baseline = _search_res(spark, path, e)
-    os.makedirs(path + "__retraining/index")
-    assert ai.expire_vectors(spark, path, ids=[]) == 0
-    assert not os.path.exists(path + "__retraining")
-    assert _search_res(spark, path, e) == baseline
-
-
-def test_append_after_crashed_retrain_codes_with_healed_sidecars(
-    spark, tmp_path, monkeypatch
-):
-    """Code-review r7 finding: append must read the codebook sidecars
-    AFTER lock + recovery. A retrain crash that left codes + one sidecar
-    new and one old would otherwise let the next append code its batch
-    against crash-mixed codebooks — silent index poisoning."""
-    import os
-
-    import data_pipeline_with_big_data_stack_spark.operators.ann_index as ai
-
-    e = _emb(spark, SF_SMOKE).select("vec_id", "emb")
-    old = e.filter(F.col("vec_id") % 2 == 0)
-    batch = e.filter(F.col("vec_id") % 2 == 1)
-
-    def build(name):
-        from data_pipeline_with_big_data_stack_spark.queries.vector import _PQ_SUB, _pq_train_codebooks
-
-        p = str(tmp_path / name)
-        ai.build_ivfpq_index(old, p, _codebook(e), _pq_train_codebooks(e), sub_dim=_PQ_SUB)
-        return p
-
-    # twin: clean retrain, then append → the expected end state
-    twin = build("twin")
-    ai.retrain_ivfpq_index(spark, twin, old, k_coarse=4, k_pq=4)
-    ai.append_to_ivfpq_index(spark, twin, batch)
-    expected = _search_res(spark, twin, e)
-
-    # crash path: retrain dies mid-swap (2 of 3 components published)
-    path = build("crash")
-    from data_pipeline_with_big_data_stack_spark.operators import fsio
-
-    real_rename = fsio.Fs.rename
-    state = {"n": 0}
-
-    def flaky(self, src, dst):
-        if "__preretrain" in dst or "__retraining" in src:
-            state["n"] += 1
-            if state["n"] == 5:
-                raise RuntimeError("injected crash mid-swap")
-        real_rename(self, src, dst)
-
-    monkeypatch.setattr(fsio.Fs, "rename", flaky)
-    import pytest as _pytest
-
-    with _pytest.raises(RuntimeError, match="injected crash"):
-        ai.retrain_ivfpq_index(spark, path, old, k_coarse=4, k_pq=4)
-    monkeypatch.setattr(fsio.Fs, "rename", real_rename)
-
-    # the very next append must heal forward FIRST, then code the batch
-    # with the healed (fully-new) sidecars
-    ai.append_to_ivfpq_index(spark, path, batch)
-    assert _search_res(spark, path, e) == expected
-
-
-def test_fresh_build_discards_stale_retrain_residue(spark, tmp_path):
-    """Code-review r7 finding: a fresh build over a path carrying a
-    crashed retrain's staging + park dirs must discard them — otherwise
-    the next writer's roll-forward recovery would publish the STALE
-    staged retrain over the newer rebuild."""
-    import os
-
-    import data_pipeline_with_big_data_stack_spark.operators.ann_index as ai
-    from data_pipeline_with_big_data_stack_spark.queries.vector import _PQ_SUB, _pq_train_codebooks
-
-    e, path = _build_small(spark, tmp_path)
-    # fabricate crashed-retrain residue: marker + park dir present
-    staging = path + "__retraining"
-    os.makedirs(staging + "/index")
-    with open(staging + "/_ALL_STAGED", "w") as fh:
-        fh.write("staged\n")
-    os.makedirs(path + "__preretrain")
-
-    ai.build_ivfpq_index(e, path, _codebook(e), _pq_train_codebooks(e), sub_dim=_PQ_SUB)
-    assert not os.path.exists(staging)
-    assert not os.path.exists(path + "__preretrain")
-    baseline = _search_res(spark, path, e)
-    # recovery on the next writer entry is now a no-op
-    assert ai.expire_vectors(spark, path, ids=[]) == 0
-    assert _search_res(spark, path, e) == baseline
 
 
 def test_recall_monitor_detects_drift_and_recovery(spark, tmp_path):
@@ -887,16 +595,13 @@ def test_recall_monitor_detects_drift_and_recovery(spark, tmp_path):
     retrain loop (VERDICT r6: appends decay recall 'with no signal'):
     high on a fresh index, visibly lower after appending a shifted
     distribution coded with stale codebooks, and recovered after
-    retrain_ivfpq_index. 30+30 clusters of exactly k members make
+    retrain_ivfpq_versioned. 30+30 clusters of exactly k members make
     ground-truth top-k ≈ the probe's cluster, so the estimate isolates
     codebook quality rather than within-cluster ADC tie noise."""
     import numpy as np
 
     from data_pipeline_with_big_data_stack_spark.operators.ann_index import (
-        append_to_ivfpq_index,
-        build_ivfpq_index,
         estimate_ivfpq_recall,
-        retrain_ivfpq_index,
         train_ivfpq_codebooks,
     )
 
@@ -911,18 +616,20 @@ def test_recall_monitor_detects_drift_and_recovery(spark, tmp_path):
     union = A.unionByName(B)
 
     coarse, pq = train_ivfpq_codebooks(A, 32, 32, sub, 2)
-    path = str(tmp_path / "mon")
-    build_ivfpq_index(A, path, coarse, pq, sub_dim=sub)
+    root = str(tmp_path / "mon")
+    V.build_ivfpq_versioned(A, root, coarse, pq, sub_dim=sub)
 
     def est(src):
-        return estimate_ivfpq_recall(spark, path, src, n_probes=32, k=10, nprobe=3)
+        return estimate_ivfpq_recall(
+            spark, V.current_index_path(root), src, n_probes=32, k=10, nprobe=3
+        )
 
     fresh = est(A)
     assert fresh >= 0.8, fresh
-    append_to_ivfpq_index(spark, path, B)
+    V.append_ivfpq_versioned(spark, root, B)
     drifted = est(union)
     assert drifted <= fresh - 0.1, (fresh, drifted)
-    retrain_ivfpq_index(spark, path, union, iters=3, k_coarse=64, k_pq=32)
+    V.retrain_ivfpq_versioned(spark, root, union, iters=3, k_coarse=64, k_pq=32)
     restored = est(union)
     assert restored >= 0.8 and restored >= drifted + 0.1, (drifted, restored)
 
@@ -986,13 +693,14 @@ def test_serve_sidecar_cache_warm_equals_cold_and_invalidates(spark, tmp_path):
     search of an UNCHANGED index version serves the codebook sidecars
     from process-local LocalRelations — the rows harvested by the first
     search's own collect — and must return the IDENTICAL frame. Any
-    sidecar rewrite (here: an in-place retrain's tri-dir swap) must
-    miss the cache, so a warm search never serves stale codebooks."""
+    sidecar rewrite under the same cache key (here: a rebuild of the
+    same path with different codebooks) must miss the cache, so a warm
+    search never serves stale codebooks."""
     from data_pipeline_with_big_data_stack_spark.operators import ann_index as AI
     from data_pipeline_with_big_data_stack_spark.operators.ann_index import (
         build_ivfpq_index,
-        retrain_ivfpq_index,
         search_ivfpq_index,
+        train_ivfpq_codebooks,
     )
     from data_pipeline_with_big_data_stack_spark.queries.vector import (
         _K_CELLS,
@@ -1032,12 +740,13 @@ def test_serve_sidecar_cache_warm_equals_cold_and_invalidates(spark, tmp_path):
     assert warm == cold, "cached sidecars changed the search result"
 
     # sidecar rewrite ⇒ token mismatch ⇒ the cache must NOT serve stale
-    # codebooks: post-retrain results equal a cache-free search
-    retrain_ivfpq_index(spark, path, e)
+    # codebooks: post-rebuild results equal a cache-free search
+    coarse, pq = train_ivfpq_codebooks(e, _K_CELLS, 4, _PQ_SUB, 2)
+    build_ivfpq_index(e, path, coarse, pq, sub_dim=_PQ_SUB)
     got = run()
     AI._SERVE_CACHE.pop(key, None)
     fresh = run()
-    assert got == fresh, "stale cached sidecars served after a retrain"
+    assert got == fresh, "stale cached sidecars served after a rebuild"
 
 
 def test_rerank_semi_branch_above_threshold_against_duckdb(spark, tmp_path):

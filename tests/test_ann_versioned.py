@@ -5,7 +5,7 @@ maintenance op publishes a whole new generation behind an atomic
 ``_CURRENT`` pointer, a concurrent search loop observes only fully-old
 or fully-new results (never an error or a mixed read), old generations
 GC down to current + one grace predecessor, and each versioned op's
-results equal its single-generation twin's.
+results equal a from-scratch single-generation build's.
 """
 
 from __future__ import annotations
@@ -126,33 +126,6 @@ def test_expire_versioned_keeps_predecessor_intact(spark, built):
         )
     )
     assert old == before
-
-
-def test_retrain_versioned_equals_flat_retrain(spark, tmp_path):
-    from data_pipeline_with_big_data_stack_spark.operators.ann_index import retrain_ivfpq_index
-    from data_pipeline_with_big_data_stack_spark.queries.vector import _PQ_K, _km_demo_init
-
-    e = _vecs(spark)
-    cb0 = _km_demo_init(
-        e.select("vec_id", F.slice("emb", 1, _PQ_SUB).alias("emb")), _PQ_K
-    ).withColumnRenamed("cb", "cb0")
-    cb1 = _km_demo_init(
-        e.select("vec_id", F.slice("emb", _PQ_SUB + 1, _PQ_SUB).alias("emb")),
-        _PQ_K,
-    ).withColumnRenamed("cb", "cb1")
-    coarse = _km_demo_init(e, _K_CELLS)
-
-    flat = str(tmp_path / "flat")
-    build_ivfpq_index(e, flat, coarse, [cb0, cb1], sub_dim=_PQ_SUB)
-    retrain_ivfpq_index(spark, flat, e, k_coarse=_K_CELLS, k_pq=_PQ_K)
-
-    root = str(tmp_path / "vroot")
-    V.build_ivfpq_versioned(e, root, coarse, [cb0, cb1], sub_dim=_PQ_SUB)
-    V.retrain_ivfpq_versioned(spark, root, e, k_coarse=_K_CELLS, k_pq=_PQ_K)
-
-    got = _res(V.search_ivfpq_versioned(spark, root, _probes(e), nprobe=2, k=5))
-    want = _res(search_ivfpq_index(spark, flat, _probes(e), nprobe=2, k=5))
-    assert got == want and len(got) > 0
 
 
 def test_gc_keeps_current_plus_grace_and_drops_orphans(spark, built):

@@ -242,24 +242,16 @@ def test_write_text_atomic_object_store_branch_is_direct_put(spark, tmp_path):
 
 
 def test_inplace_swap_ops_refuse_non_atomic_rename_schemes(spark, tmp_path, monkeypatch):
-    """The in-place maintenance swaps infer crash state from directory
-    existence — unsound where rename is copy+delete. On such schemes
-    they must refuse with a pointer to the generation-versioned ops;
-    the versioned compact/expire still run (their clone is
-    reader-invisible, so a half-applied swap is just an orphan)."""
+    """The in-place compaction swap (``layout.compact_table``) infers
+    crash state from directory existence — unsound where rename is
+    copy+delete. On such schemes it must refuse with a pointer to the
+    generation-versioned stores, which publish by a pointer write."""
     import pytest as _pytest
 
-    from data_pipeline_with_big_data_stack_spark.operators import ann_index as ai
     from data_pipeline_with_big_data_stack_spark.operators import layout
 
     monkeypatch.setattr(fsio, "_ATOMIC_RENAME_SCHEMES", frozenset())
     path = str(tmp_path / "idx")
-    with _pytest.raises(NotImplementedError, match="generation-versioned"):
-        ai.compact_ivfpq_index(spark, path)
-    with _pytest.raises(NotImplementedError, match="generation-versioned"):
-        ai.expire_vectors(spark, path, ids=[1])
-    with _pytest.raises(NotImplementedError, match="generation-versioned"):
-        ai.retrain_ivfpq_index(spark, path, None)
     with _pytest.raises(NotImplementedError, match="generation-versioned"):
         layout.compact_table(spark, path)
 
@@ -324,10 +316,10 @@ def test_streaming_drain_with_crash_replay_on_file_uri(spark, tmp_path):
 def test_versioned_lifecycle_runs_without_atomic_rename_capability(
     spark, tmp_path, monkeypatch
 ):
-    """Object stores lose the in-place swap ops (gated above) but must
-    keep the FULL index lifecycle through the generation-versioned
-    path: with the atomic-rename capability masked off entirely, no
-    `_require_atomic_rename` gate fires anywhere in
+    """Object stores must keep the FULL index lifecycle through the
+    generation-versioned path: with the atomic-rename capability
+    masked off entirely, no `_require_atomic_rename` gate fires
+    anywhere in
     build → append → compact → expire → retrain → search — the
     versioned ops carry unchanged segments by manifest reference and
     never rename a live tree. The backing store here is still local, so

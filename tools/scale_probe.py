@@ -206,15 +206,18 @@ def run_ann_probe(spark, scales: tuple[int, ...] = ANN_SCALES) -> dict:
     + index build — one unit, matching the gate queries' replay shape),
     ``search`` (fixed 5-probe batch, nprobe=2 of 8 cells — wall secs,
     shuffle bytes, files read vs index total), ``retrain`` (O(corpus)
-    by design — the linearity claim under test)."""
+    by design — the linearity claim under test). All three run on a
+    versioned index root; ``index_files_total`` counts the live
+    generation's files."""
     import shutil
 
     from pyspark.sql import functions as F
 
-    from data_pipeline_with_big_data_stack_spark.operators.ann_index import (
-        build_ivfpq_index,
-        retrain_ivfpq_index,
-        search_ivfpq_index,
+    from data_pipeline_with_big_data_stack_spark.operators.ann_index_versioned import (
+        build_ivfpq_versioned,
+        current_index_path,
+        retrain_ivfpq_versioned,
+        search_ivfpq_versioned,
     )
     from data_pipeline_with_big_data_stack_spark.queries.vector import (
         _K_CELLS,
@@ -240,14 +243,14 @@ def run_ann_probe(spark, scales: tuple[int, ...] = ANN_SCALES) -> dict:
         try:
             # docs/events are side tables here — keep them tiny
             scale_audit.gen(d, n_events=2_000, n_docs=200, n_vecs=n_vecs)
-            path = os.path.join(d, "ivfpq", "index")
+            root = os.path.join(d, "ivfpq", "root")
             e = _emb(spark, d).select("vec_id", "emb")
 
             mark = max_stage_id(spark)
             t0 = time.perf_counter()
             cb0, cb1 = _pq_train_codebooks(e)
             coarse = _km_demo_init(e, _K_CELLS)
-            build_ivfpq_index(e, path, coarse, [cb0, cb1], sub_dim=_PQ_SUB)
+            build_ivfpq_versioned(e, root, coarse, [cb0, cb1], sub_dim=_PQ_SUB)
             w, r = shuffle_since(spark, mark)
             steps["build"] = _snap(time.perf_counter() - t0, w, r)
 
@@ -256,8 +259,8 @@ def run_ann_probe(spark, scales: tuple[int, ...] = ANN_SCALES) -> dict:
             )
             mark = max_stage_id(spark)
             t0 = time.perf_counter()
-            res = search_ivfpq_index(
-                spark, path, probes, nprobe=_NPROBE, k=TOP_K
+            res = search_ivfpq_versioned(
+                spark, root, probes, nprobe=_NPROBE, k=TOP_K
             )
             files_read = _files_read(res)  # collects + reads plan metrics
             w, r = shuffle_since(spark, mark)
@@ -266,12 +269,12 @@ def run_ann_probe(spark, scales: tuple[int, ...] = ANN_SCALES) -> dict:
                 w,
                 r,
                 files_read=int(files_read),
-                index_files_total=_parquet_files_under(path),
+                index_files_total=_parquet_files_under(current_index_path(root)),
             )
 
             mark = max_stage_id(spark)
             t0 = time.perf_counter()
-            retrain_ivfpq_index(spark, path, e)
+            retrain_ivfpq_versioned(spark, root, e)
             w, r = shuffle_since(spark, mark)
             steps["retrain"] = _snap(time.perf_counter() - t0, w, r)
         except Exception as exc:  # noqa: BLE001 - isolate per scale
