@@ -17,6 +17,15 @@ The probe-side cell list is collected to build the pruning predicate —
 a deliberate, documented driver-side step at METADATA scale (nprobe ×
 |probe batch| ints, like ``catalog.upstream_of``); the corpus is never
 collected and never re-assigned.
+
+The IVF-PQ index (``build_ivfpq_index`` / ``search_ivfpq_index``)
+stores codes only. Its codebooks travel as ONE broadcast row, with
+each PQ subspace's centroids in a dense array indexed by code. Coding
+a vector is one higher-order argmin expression over that row. A
+search gives every probe its asymmetric-distance lookup table (M ×
+K_PQ squared distances to the PQ centroids) and scores each candidate
+with M table lookups (Jégou, Douze, Schmid, TPAMI 2011). A search
+keeps no state between calls.
 """
 
 from __future__ import annotations
@@ -79,21 +88,68 @@ def build_ivf_index(
     ).write.mode("overwrite").parquet(path + "_codebook")
 
 
-def _coded_projection(
-    vecs: DataFrame,
-    coarse_codebook: DataFrame,
-    pq_codebooks: list[DataFrame],
-    sub_dim: int,
-    id_col: str,
-) -> DataFrame:
-    """One map-side projection per vector under broadcast codebooks:
-    ``(id, cell_id, code_0..code_{M-1})`` — coarse argmin + M subspace
-    argmins, the raw vector dropped. Shared by the initial build and
-    the incremental append (same codebooks ⇒ bit-identical codes)."""
-    coarse = coarse_codebook.select(
-        F.col(coarse_codebook.columns[0]).alias("__cb")
+def _coarse_row(cells: DataFrame) -> DataFrame:
+    """The coarse sidecar rows ``(cell_id, c_emb)`` → one row ``__cb``
+    (``array<struct<cell_id, c_emb>>``)."""
+    return cells.coalesce(1).agg(
+        F.collect_list(F.struct("cell_id", "c_emb")).alias("__cb")
     )
-    coded = vecs.join(F.broadcast(coarse))
+
+
+def _codebooks(cells: DataFrame, pq_rows: DataFrame) -> DataFrame:
+    """The coarse sidecar rows ``(cell_id, c_emb)`` and the PQ sidecar
+    rows ``(m, code, c_emb)`` → ONE row: ``__cb`` (:func:`_coarse_row`),
+    ``__pq`` (``__pq[m][code]`` is subspace m's centroid, dense by code)
+    and ``__sd`` (sub-vector length). A Lloyd round drops empty
+    clusters, so a retrained codebook can have gaps in its codes; a gap
+    densifies to a null centroid, which no code points at. Every
+    aggregate runs over ``coalesce(1)``: the inputs are metadata-scale,
+    and a single input partition plans no single-partition shuffle."""
+    per_m = (
+        pq_rows.coalesce(1)
+        .groupBy("m")
+        .agg(
+            F.collect_list(F.struct("code", "c_emb")).alias("r"),
+            F.max("code").alias("k"),
+            F.max(F.size("c_emb")).alias("sd"),
+        )
+        .select(
+            "m",
+            "sd",
+            F.transform(
+                F.sequence(F.lit(0).cast("long"), F.col("k").cast("long")),
+                lambda c: F.get(
+                    "r", (F.array_position(F.col("r")["code"], c) - 1).cast("int")
+                )["c_emb"],
+            ).alias("dense"),
+        )
+    )
+    pq = per_m.agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("m", "dense"))),
+            lambda e: e["dense"],
+        ).alias("__pq"),
+        F.max("sd").alias("__sd"),
+    )
+    return _coarse_row(cells).crossJoin(pq)
+
+
+def _pq_slice(emb: str, i):
+    """Subspace ``i``'s slice of the vector column ``emb``, with the
+    sub-vector length read from the codebook row's ``__sd``."""
+    return F.slice(emb, i * F.col("__sd") + 1, F.col("__sd"))
+
+
+def _coded_projection(
+    vecs: DataFrame, books: DataFrame, n_sub: int, id_col: str
+) -> DataFrame:
+    """One map-side projection per vector under the ONE broadcast
+    codebook row (:func:`_codebooks`): ``(id, cell_id, code_0..
+    code_{M-1})`` — coarse argmin + M subspace argmins, the raw vector
+    dropped. The M argmins are one higher-order expression over
+    ``__pq``, ties broken by the lower code. Shared by the initial
+    build and the incremental append (same codebooks ⇒ bit-identical
+    codes)."""
     ranked = F.array_sort(
         F.transform(
             F.col("__cb"),
@@ -103,33 +159,34 @@ def _coded_projection(
             ),
         )
     )
-
-    # NB: helper factories, not `lambda c, sub=sub:` — PySpark reads a
-    # two-parameter lambda as (element, index) and would bind the array
-    # index where the captured column belongs
-    def _best_code(cname: str, sub):
-        def entry(c):
-            return F.struct(
-                _sqdist(sub, c["c_emb"]).alias("dist"),
-                c["cell_id"].alias("cell_id"),
-            )
-
-        return F.element_at(F.array_sort(F.transform(F.col(cname), entry)), 1)[
-            "cell_id"
-        ]
-
-    cols = [F.col(id_col), F.element_at(ranked, 1)["cell_id"].alias("cell_id")]
-    for m, cbm in enumerate(pq_codebooks):
-        cname = f"__pq{m}"
-        coded = coded.join(
-            F.broadcast(cbm.select(F.col(cbm.columns[0]).alias(cname)))
-        )
-        cols.append(
-            _best_code(cname, F.slice("emb", m * sub_dim + 1, sub_dim)).alias(
-                f"code_{m}"
-            )
-        )
-    return coded.select(*cols)
+    codes = F.transform(
+        F.col("__pq"),
+        lambda cbm, i: F.element_at(
+            F.array_sort(
+                F.filter(
+                    F.transform(
+                        cbm,
+                        lambda c, j: F.struct(
+                            _sqdist(_pq_slice("emb", i), c).alias("dist"),
+                            j.cast("long").alias("code"),
+                        ),
+                    ),
+                    lambda x: x["dist"].isNotNull(),
+                )
+            ),
+            1,
+        )["code"],
+    )
+    coded = vecs.join(F.broadcast(books)).select(
+        F.col(id_col),
+        F.element_at(ranked, 1)["cell_id"].alias("cell_id"),
+        codes.alias("__codes"),
+    )
+    return coded.select(
+        id_col,
+        "cell_id",
+        *[F.col("__codes")[m].alias(f"code_{m}") for m in range(n_sub)],
+    )
 
 
 def build_ivfpq_index(
@@ -152,15 +209,16 @@ def build_ivfpq_index(
     dropped at build time and never read again — plus two sidecars:
     ``path + "_codebook"`` (coarse cells) and ``path + "_pq_codebook"``
     (``m, code, c_emb`` — K_PQ × M rows). The build is ONE map-side
-    projection per vector under broadcast codebooks: coarse argmin +
-    M subspace argmins, zero shuffle before the partitioned write.
+    projection per vector under the one broadcast codebook row built
+    from those sidecar rows: coarse argmin + M subspace argmins, zero
+    shuffle before the partitioned write. ``sub_dim`` must equal the
+    PQ centroid length, which the projection reads from the rows.
 
     Takes no lock and keeps no crash state: every maintained index is a
     generation of ``operators/ann_index_versioned``, which runs this
     build into a fresh, not yet published generation under the root's
     writer lock. A crash mid-build leaves an unpublished partial tree;
     a rebuild overwrites it."""
-    coded = _coded_projection(vecs, coarse_codebook, pq_codebooks, sub_dim, id_col)
     coarse = coarse_codebook.select(F.col(coarse_codebook.columns[0]).alias("__cb"))
     coarse_rows = coarse.select(F.explode("__cb").alias("c")).select(
         F.col("c.cell_id").alias("cell_id"), F.col("c.c_emb").alias("c_emb")
@@ -176,6 +234,9 @@ def build_ivfpq_index(
             )
         )
         pq_rows = rows if pq_rows is None else pq_rows.unionByName(rows)
+    coded = _coded_projection(
+        vecs, _codebooks(coarse_rows, pq_rows), len(pq_codebooks), id_col
+    )
     # the three component writes are independent (codes + two tiny
     # sidecars): overlap them on a driver thread pool (guide §2.6,
     # r15) — the sidecar jobs back-fill the codes write's tail
@@ -299,84 +360,6 @@ def train_ivfpq_codebooks(
     return coarse, pq
 
 
-def _sidecar_codebooks(
-    spark: SparkSession, path: str, fs: fsio.Fs | None = None
-) -> tuple[DataFrame, list[DataFrame], int]:
-    """Read the coarse + PQ codebooks back from an index's sidecars in
-    the 1-row array-of-struct shape ``_coded_projection`` expects.
-    Returns (coarse, [pq_m...], sub_dim). Manifest-aware: a versioned
-    generation's sidecars may be segment references. (r15 note: an
-    eager collected-rows variant of this helper was tried and REVERTED —
-    the extra driver actions cost more wall time than the lazy
-    aggregates' nested broadcast-subtree re-execution on a fast host.)"""
-    coarse = (
-        _read_table(spark, path + "_codebook", fs=fs)
-        .agg(F.collect_list(F.struct("cell_id", "c_emb")).alias("cb"))
-    )
-    pq_tbl = _read_table(spark, path + "_pq_codebook", fs=fs)
-    # ONE geometry job instead of two (r15): max(m) and the (uniform)
-    # sub-vector length come from a single aggregate over the
-    # metadata-scale sidecar
-    geo = pq_tbl.agg(
-        F.max("m").alias("mm"), F.max(F.size("c_emb")).alias("sd")
-    ).head()
-    n_sub = int(geo["mm"]) + 1
-    sub_dim = int(geo["sd"])
-    pq_codebooks = [
-        pq_tbl.filter(F.col("m") == m).agg(
-            F.collect_list(
-                F.struct(F.col("code").alias("cell_id"), F.col("c_emb"))
-            ).alias(f"cb{m}")
-        )
-        for m in range(n_sub)
-    ]
-    return coarse, pq_codebooks, sub_dim
-
-
-# --------------------------------------------------------------------------
-# Serve-path sidecar cache (r16, VERDICT r15 #2). A steady-state search
-# re-reads two METADATA-scale sidecar tables (coarse cells; K_PQ × M PQ
-# rows) from parquet at several broadcast sites of every probe batch's
-# plan — pure driver/plan-build latency re-paid per search, the dominant
-# serve component in the r15 bench breakdown (plan_build 0.58 s of a
-# ~0.9 s serve). The r15 sidecar-collect rewrite fixed this per-search
-# and REGRESSED (extra collect actions + createDataFrame conversions per
-# search cost more than the nested broadcast re-executions they
-# replaced); the r16 shape amortizes instead:
-#   - a cache MISS keeps the exact lazy plan shape, but the search's one
-#     existing driver action additionally HARVESTS both sidecars' rows
-#     (they ride the same collect as broadcast 1-row aggregates — zero
-#     extra actions, a few KB wider result row);
-#   - a cache HIT serves both sidecars as immutable LocalRelation
-#     DataFrames — no sidecar parquet scans in either the plan-build
-#     collect or the final execution, and the createDataFrame conversion
-#     is paid once per index VERSION, not per search.
-# Staleness is checked per search against a file-listing token of both
-# sidecar dirs ((path, size) sets — every sidecar rewrite produces fresh
-# part-file names): a rebuild of the same flat path with different
-# codebooks, a versioned store's new generation (a different path
-# entirely), or any external rewrite misses the cache and re-harvests. Values are bit-identical by
-# construction (the harvested rows ARE the sidecar rows, doubles
-# round-tripping exactly through the driver), so warm and cold searches
-# return identical frames — pinned in tests/test_ann_index.py.
-# NOT cross-run caching: the cache is in-process state keyed by the live
-# session's applicationId; every bench/oracle invocation starts empty.
-# --------------------------------------------------------------------------
-_SERVE_CACHE: dict = {}
-_SERVE_CACHE_MAX = 8
-
-
-def _sidecar_token(fs: fsio.Fs, path: str):
-    """(path, size) listing of both sidecar dirs — the cache staleness
-    token. Two driver-side recursive listings of few-file metadata-scale
-    dirs (no Spark job)."""
-    p = path.rstrip("/")
-    return (
-        tuple(sorted(fs.file_sizes_recursive(p + "_codebook"))),
-        tuple(sorted(fs.file_sizes_recursive(p + "_pq_codebook"))),
-    )
-
-
 def search_ivfpq_index(
     spark: SparkSession,
     path: str,
@@ -386,134 +369,66 @@ def search_ivfpq_index(
     id_col: str = "vec_id",
 ) -> DataFrame:
     """``probes(q_id, q_emb)`` → top-``k`` by asymmetric-distance
-    (ADC) per probe, from the materialized IVF-PQ index: rank probe
-    cells against the tiny coarse sidecar, read ONLY the ``nprobe``
-    index partitions (codes, no vectors — the scan's ReadSchema carries
-    id + codes only, plan-pinned), and rank candidates by summing
-    per-subspace squared distances between the probe's sub-vectors and
-    the K_PQ-row PQ codebook centroids their codes point at. Identical
-    top-k to the inline ``q_ann_ivfpq_topk`` given the same codebooks
-    (equality-pinned in tests/test_ann_index.py). Repeat searches of an
-    unchanged index version serve the sidecars from the process-local
-    cache above — same values, no sidecar scans."""
+    (ADC) per probe, from the materialized IVF-PQ index. Both sidecars
+    are read once, into ONE broadcast codebook row (:func:`_codebooks`).
+    Each probe then carries, on the broadcast probe frame, its nearest
+    ``nprobe`` cells and its lookup table: the M×K_PQ squared distances
+    from its sub-vectors to every PQ centroid, built as one
+    higher-order expression (Jégou, Douze, Schmid, TPAMI 2011). The
+    codes scan reads ONLY the probed index partitions (codes, no
+    vectors — the scan's ReadSchema carries id + codes only,
+    plan-pinned), and each candidate scores with M table lookups,
+    summed in subspace order. Identical top-k to the inline
+    ``q_ann_ivfpq_topk`` given the same codebooks (equality-pinned in
+    tests/test_ann_index.py)."""
     fs = fsio.Fs(spark, path)  # ONE handle for all three component reads
-    token = _sidecar_token(fs, path)
-    key = (spark.sparkContext.applicationId, path.rstrip("/"))
-    hit = _SERVE_CACHE.get(key)
-    if hit is not None and hit["token"] != token:
-        hit = None
-    if hit is not None:
-        if hit["cb_df"] is None:
-            # first hit: build the session-local frames once per index
-            # version. localCheckpoint (eager) matters: a bare
-            # createDataFrame(list) is an RDD of PYTHON rows, so every
-            # broadcast build would re-run a Python-worker conversion
-            # stage per action (measured SLOWER than re-scanning the
-            # parquet sidecars); checkpointing converts once and every
-            # later scan reads JVM-local blocks
-            hit["cb_df"] = spark.createDataFrame(
-                hit["cb_rows"], hit["cb_schema"]
-            ).localCheckpoint(eager=True)
-            hit["pq_df"] = spark.createDataFrame(
-                hit["pq_rows"], hit["pq_schema"]
-            ).localCheckpoint(eager=True)
-        cb_tbl, pq_tbl = hit["cb_df"], hit["pq_df"]
-    else:
-        cb_tbl = _read_table(spark, path + "_codebook", fs=fs)
-        pq_tbl = _read_table(spark, path + "_pq_codebook", fs=fs)
-    cb = cb_tbl.agg(F.collect_list(F.struct("cell_id", "c_emb")).alias("cb"))
+    cb_tbl = _read_table(spark, path + "_codebook", fs=fs)
+    pq_tbl = _read_table(spark, path + "_pq_codebook", fs=fs)
     ranked = F.array_sort(
         F.transform(
-            F.col("cb"),
+            F.col("__cb"),
             lambda c: F.struct(
                 _sqdist(F.col("q_emb"), c["c_emb"]).alias("dist"),
                 c["cell_id"].alias("cell_id"),
             ),
         )
     )
-    probe_cells = (
-        probes.join(F.broadcast(cb))
-        .select(
-            "q_id",
-            "q_emb",
-            F.explode(F.slice(ranked, 1, nprobe)).alias("cell"),
-        )
-        .select("q_id", "q_emb", F.col("cell")["cell_id"].alias("cell_id"))
-    )
+    nearest = F.explode(F.slice(ranked, 1, nprobe)).alias("cell")
     # metadata-scale collect: nprobe cells per probe → partition-pruning
-    # predicate for the codes scan, map-side-deduped via collect_set
-    # (r16; the r15 shape shuffled a distinct). On a cache miss the SAME
-    # driver action harvests the sidecar rows + PQ sub_dim as broadcast
-    # 1-row cross joins — on the serve path driver action COUNT is the
-    # scarce resource (r15 measured the per-search collect rewrite
-    # regressing for exactly this reason), so everything rides one job
-    cells_agg = probe_cells.agg(F.collect_set("cell_id").alias("__cells"))
-    if hit is None:
-        meta = (
-            cells_agg.crossJoin(
-                F.broadcast(
-                    pq_tbl.agg(
-                        F.collect_list(
-                            F.struct(*pq_tbl.columns)
-                        ).alias("__pq"),
-                        F.max(F.size("c_emb")).alias("__sd"),
-                    )
-                )
-            )
-            .crossJoin(
-                F.broadcast(
-                    cb_tbl.agg(
-                        F.collect_list(
-                            F.struct(*cb_tbl.columns)
-                        ).alias("__cb")
-                    )
-                )
-            )
-            .head()
-        )
-        sub_dim = int(meta["__sd"])
-        _SERVE_CACHE[key] = {
-            "token": token,
-            "sub_dim": sub_dim,
-            "cb_rows": list(meta["__cb"]),
-            "pq_rows": list(meta["__pq"]),
-            "cb_schema": cb_tbl.schema,
-            "pq_schema": pq_tbl.schema,
-            "cb_df": None,
-            "pq_df": None,
-        }
-        while len(_SERVE_CACHE) > _SERVE_CACHE_MAX:
-            _SERVE_CACHE.pop(next(iter(_SERVE_CACHE)))
-    else:
-        meta = cells_agg.head()
-        sub_dim = hit["sub_dim"]
-    cells = sorted(meta["__cells"])
+    # predicate for the codes scan, map-side-deduped via collect_set.
+    # It ranks against the coarse row alone, so it skips the PQ sidecar
+    cells = sorted(
+        probes.join(F.broadcast(_coarse_row(cb_tbl)))
+        .select(nearest)
+        .coalesce(1)
+        .agg(F.collect_set(F.col("cell")["cell_id"]))
+        .head()[0]
+    )
+    lut = F.transform(
+        F.col("__pq"),
+        lambda cbm, i: F.transform(
+            cbm, lambda c: _sqdist(_pq_slice("q_emb", i), c)
+        ),
+    )
+    probe_cells = (
+        probes.join(F.broadcast(_codebooks(cb_tbl, pq_tbl)))
+        .select("q_id", "q_emb", "__cb", lut.alias("__lut"))
+        .select("q_id", "__lut", nearest)
+        .select("q_id", "__lut", F.col("cell")["cell_id"].alias("cell_id"))
+    )
     index = _read_table(
         spark, path, fs=fs, logicals={f"cell_id={c}" for c in cells}
     ).filter(F.col("cell_id").isin(cells))
     n_sub = len([c for c in index.columns if c.startswith("code_")])
-    cand = index.join(F.broadcast(probe_cells), "cell_id").filter(
-        F.col(id_col) != F.col("q_id")
-    )
-    def _centroid(cname: str, code_col: str):
-        def match(c):
-            return c["code"] == F.col(code_col)
-
-        return F.element_at(F.filter(F.col(cname), match), 1)["c_emb"]
-
     adc = F.lit(0.0)
     for m in range(n_sub):
-        cname = f"__pqcb{m}"
-        cbm = pq_tbl.filter(F.col("m") == m).agg(
-            F.collect_list(F.struct("code", "c_emb")).alias(cname)
+        adc = adc + F.element_at(
+            F.col("__lut")[m], (F.col(f"code_{m}") + 1).cast("int")
         )
-        cand = cand.join(F.broadcast(cbm))
-        adc = adc + _sqdist(
-            F.slice("q_emb", m * sub_dim + 1, sub_dim),
-            _centroid(cname, f"code_{m}"),
-        )
-    cand = cand.select(
-        "q_id", id_col, "cell_id", F.round(adc, 4).alias("adc_dist")
+    cand = (
+        index.join(F.broadcast(probe_cells), "cell_id")
+        .filter(F.col(id_col) != F.col("q_id"))
+        .select("q_id", id_col, "cell_id", F.round(adc, 4).alias("adc_dist"))
     )
     w = W.partitionBy("q_id").orderBy("adc_dist", F.col(id_col))
     return (

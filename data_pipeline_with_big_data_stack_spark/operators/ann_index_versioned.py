@@ -70,8 +70,8 @@ from data_pipeline_with_big_data_stack_spark.operators import fsio
 from data_pipeline_with_big_data_stack_spark.operators import generations as G
 from data_pipeline_with_big_data_stack_spark.operators import segman
 from data_pipeline_with_big_data_stack_spark.operators.ann_index import (
+    _codebooks,
     _coded_projection,
-    _sidecar_codebooks,
     build_ivfpq_index,
     search_ivfpq_index,
     train_ivfpq_codebooks,
@@ -208,8 +208,14 @@ def append_ivfpq_versioned(
             reuse_from=cur_index,
         )
         _ref_sidecars(fs, root, cur, gen)
-        coarse, pq_codebooks, sub_dim = _sidecar_codebooks(spark, cur_index, fs=fs)
-        coded = _coded_projection(vecs, coarse, pq_codebooks, sub_dim, id_col)
+        pq_rows = segman.read_table(spark, fs, cur_index + "_pq_codebook")
+        # M comes from the PQ sidecar: an empty generation has no code
+        # files to read it from
+        n_sub = pq_rows.coalesce(1).agg(F.max("m")).head()[0] + 1
+        books = _codebooks(
+            segman.read_table(spark, fs, cur_index + "_codebook"), pq_rows
+        )
+        coded = _coded_projection(vecs, books, n_sub, id_col)
         coded.write.mode("append").partitionBy("cell_id").parquet(gen_index)
         _publish(root, gen, fs=fs)
         _gc(root, gen, cur, fs=fs)

@@ -688,15 +688,11 @@ def test_rerank_semi_join_branch_equals_in_list_branch(spark, monkeypatch):
     assert sorted(map(tuple, df.collect())) == base
 
 
-def test_serve_sidecar_cache_warm_equals_cold_and_invalidates(spark, tmp_path):
-    """The r16 serve-path sidecar cache (VERDICT r15 #2): a repeat
-    search of an UNCHANGED index version serves the codebook sidecars
-    from process-local LocalRelations — the rows harvested by the first
-    search's own collect — and must return the IDENTICAL frame. Any
-    sidecar rewrite under the same cache key (here: a rebuild of the
-    same path with different codebooks) must miss the cache, so a warm
-    search never serves stale codebooks."""
-    from data_pipeline_with_big_data_stack_spark.operators import ann_index as AI
+def test_repeat_search_is_stable_and_rebuild_serves_new_codebooks(spark, tmp_path):
+    """A search keeps no state between calls: a repeat search of the
+    same index returns the identical frame, and after a rebuild of the
+    same path with different codebooks a search equals one of a
+    separately built index with those codebooks."""
     from data_pipeline_with_big_data_stack_spark.operators.ann_index import (
         build_ivfpq_index,
         search_ivfpq_index,
@@ -720,33 +716,129 @@ def test_serve_sidecar_cache_warm_equals_cold_and_invalidates(spark, tmp_path):
     probes = e.filter(F.col("vec_id") < N_QUERY_VECS).select(
         F.col("vec_id").alias("q_id"), F.col("emb").alias("q_emb")
     )
-    key = (spark.sparkContext.applicationId, path.rstrip("/"))
-    AI._SERVE_CACHE.pop(key, None)
 
-    def run():
+    def run(p):
         return sorted(
             tuple(r)
             for r in search_ivfpq_index(
-                spark, path, probes, nprobe=_NPROBE, k=TOP_K
+                spark, p, probes, nprobe=_NPROBE, k=TOP_K
             ).collect()
         )
 
-    cold = run()  # miss: lazy sidecar reads + harvest
-    assert key in AI._SERVE_CACHE, "first search must populate the cache"
-    warm = run()  # hit: LocalRelation sidecars
-    assert AI._SERVE_CACHE[key]["cb_df"] is not None, (
-        "second search must have taken the cached-local path"
-    )
-    assert warm == cold, "cached sidecars changed the search result"
+    first = run(path)
+    assert first and run(path) == first, "a repeat search changed the result"
 
-    # sidecar rewrite ⇒ token mismatch ⇒ the cache must NOT serve stale
-    # codebooks: post-rebuild results equal a cache-free search
     coarse, pq = train_ivfpq_codebooks(e, _K_CELLS, 4, _PQ_SUB, 2)
     build_ivfpq_index(e, path, coarse, pq, sub_dim=_PQ_SUB)
-    got = run()
-    AI._SERVE_CACHE.pop(key, None)
-    fresh = run()
-    assert got == fresh, "stale cached sidecars served after a rebuild"
+    other = str(tmp_path / "other")
+    build_ivfpq_index(e, other, coarse, pq, sub_dim=_PQ_SUB)
+    rebuilt = run(path)
+    assert rebuilt == run(other), "the rebuilt path served old codebooks"
+    assert rebuilt != first, "fixture: the new codebooks must change the result"
+
+
+def _gapped_pq(e):
+    """The fixture's PQ codebooks with a gap in their codes, as a Lloyd
+    round leaves after dropping an empty cluster: subspace 0 loses code
+    1, subspace 1 its last code."""
+    from data_pipeline_with_big_data_stack_spark.queries.vector import (
+        _PQ_K,
+        _pq_train_codebooks,
+    )
+
+    def without(cb, code):
+        return cb.select(
+            F.filter(cb.columns[0], lambda c: c["cell_id"] != code).alias("cb")
+        )
+
+    cb0, cb1 = _pq_train_codebooks(e)
+    return [without(cb0, 1), without(cb1, _PQ_K - 1)]
+
+
+def _adc_reference(vecs, coarse, pq, probes, nprobe, k):
+    """Pure-Python IVF-PQ over ``{id: vector}`` dicts and ``{code:
+    centroid}`` codebooks: coarse cells, PQ codes and the ADC top-``k``
+    as ``(q_id, vec_id, cell_id, adc_dist)``, every distance summed in
+    the engine's order and ties broken by the lower id."""
+
+    def sq(a, b):
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc += (x - y) * (x - y)
+        return acc
+
+    def nearest(book, v):
+        return sorted(book, key=lambda c: (sq(v, book[c]), c))
+
+    sd = len(next(iter(pq[0].values())))
+
+    def sub(v, m):
+        return v[m * sd:(m + 1) * sd]
+
+    cell = {i: nearest(coarse, v)[0] for i, v in vecs.items()}
+    codes = {
+        i: [nearest(pq[m], sub(v, m))[0] for m in range(len(pq))]
+        for i, v in vecs.items()
+    }
+    out = []
+    for q, qv in probes.items():
+        cells = nearest(coarse, qv)[:nprobe]
+        cand = []
+        for i in vecs:
+            if i != q and cell[i] in cells:
+                d = 0.0
+                for m in range(len(pq)):
+                    d += sq(sub(qv, m), pq[m][codes[i][m]])
+                cand.append((round(d, 4), i))
+        out += [(q, i, cell[i], d) for d, i in sorted(cand)[:k]]
+    return sorted(out)
+
+
+def test_pq_codebook_with_code_gap_search_and_append(spark, tmp_path):
+    """Codes need not be dense: with a gap in each PQ codebook, search
+    equals a pure-Python ADC over the same codebooks, and an append
+    equals a build over the union."""
+    from data_pipeline_with_big_data_stack_spark.operators.ann_index import (
+        build_ivfpq_index,
+        search_ivfpq_index,
+    )
+    from data_pipeline_with_big_data_stack_spark.queries.vector import (
+        _K_CELLS,
+        _NPROBE,
+        _PQ_SUB,
+        TOP_K,
+    )
+
+    e = _emb(spark, SF_SMOKE).select("vec_id", "emb")
+    coarse = _codebook(e, k=_K_CELLS)
+    pq = _gapped_pq(e)
+    flat = str(tmp_path / "flat")
+    build_ivfpq_index(e, flat, coarse, pq, sub_dim=_PQ_SUB)
+    probes = e.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("q_id"), F.col("emb").alias("q_emb")
+    )
+    got = sorted(
+        tuple(r)
+        for r in search_ivfpq_index(
+            spark, flat, probes, nprobe=_NPROBE, k=TOP_K
+        ).collect()
+    )
+    vecs = {r.vec_id: list(r.emb) for r in e.collect()}
+    books = [
+        {c.cell_id: list(c.c_emb) for c in cb.head()[0]} for cb in [coarse, *pq]
+    ]
+    want = _adc_reference(
+        vecs, books[0], books[1:], {q: vecs[q] for q in range(3)}, _NPROBE, TOP_K
+    )
+    assert [g[:3] for g in got] == [w[:3] for w in want]
+    assert all(abs(g[3] - w[3]) < 1e-4 for g, w in zip(got, want))
+
+    root = str(tmp_path / "vroot")
+    V.build_ivfpq_versioned(
+        e.filter(F.col("vec_id") % 2 == 0), root, coarse, pq, sub_dim=_PQ_SUB
+    )
+    V.append_ivfpq_versioned(spark, root, e.filter(F.col("vec_id") % 2 == 1))
+    assert _search_res(spark, root, e, k=TOP_K) == got
 
 
 def test_rerank_semi_branch_above_threshold_against_duckdb(spark, tmp_path):

@@ -241,3 +241,21 @@ def test_append_with_manifest_list_split_equals_union_build(
     V.expire_ivfpq_versioned(spark, root, ids=[victim])
     after = _res(V.search_ivfpq_versioned(spark, root, _probes(e), nprobe=2, k=5))
     assert victim not in {r[1] for r in after} and len(after) > 0
+
+
+def test_append_to_empty_generation_then_search_equals_flat_build(spark, tmp_path):
+    """An empty build publishes codebook sidecars and no code files (the
+    streaming-ingest shape). The first append must take M from the PQ
+    sidecar, and its search equals a flat build over the appended
+    vectors."""
+    e = _vecs(spark)
+    coarse = _codebook(e, k=_K_CELLS)
+    pq = _pq_train_codebooks(e)
+    root = str(tmp_path / "vroot")
+    V.build_ivfpq_versioned(e.limit(0), root, coarse, list(pq), sub_dim=_PQ_SUB)
+    V.append_ivfpq_versioned(spark, root, e)
+    flat = str(tmp_path / "flat")
+    build_ivfpq_index(e, flat, coarse, list(pq), sub_dim=_PQ_SUB)
+    got = _res(V.search_ivfpq_versioned(spark, root, _probes(e), nprobe=2, k=5))
+    want = _res(search_ivfpq_index(spark, flat, _probes(e), nprobe=2, k=5))
+    assert got == want and len(got) > 0

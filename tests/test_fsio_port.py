@@ -206,6 +206,48 @@ def test_write_text_atomic_roundtrip_and_overwrite_on_file_uri(spark, tmp_path):
     assert not (tmp_path / "ptr.tmp").exists()
 
 
+def test_read_text_local_fast_path_matches_hadoop(spark, tmp_path):
+    """The native ``file:`` read returns the same text as the Hadoop
+    stream — bytes decoded as UTF-8, line endings untouched — and a
+    missing file raises FileNotFoundError on both paths."""
+    (tmp_path / "m.json").write_bytes('{"refs": "\u00e9"}\r\n'.encode("utf-8"))
+    local = fsio.Fs(spark, "file:" + str(tmp_path))
+    hadoop = fsio.Fs(spark, "file:" + str(tmp_path))
+    hadoop.is_local = False
+    for p in ("file:" + str(tmp_path / "m.json"), str(tmp_path / "m.json")):
+        assert local.read_text(p) == hadoop.read_text(p) == '{"refs": "\u00e9"}\r\n'
+    for fs in (local, hadoop):
+        with pytest.raises(FileNotFoundError):
+            fs.read_text(str(tmp_path / "absent.json"))
+    with pytest.raises(OSError):  # not a missing file: still raises
+        local.read_text(str(tmp_path))
+
+
+def test_file_sizes_recursive_relative_root_and_symlinked_dir(
+    spark, tmp_path, monkeypatch
+):
+    """The native walk lists what Hadoop ``listFiles`` lists: a relative
+    root renders as absolute ``file:`` paths, files under a symlinked
+    dir are listed through the link, and a link cycle does not loop."""
+    t = tmp_path / "t"
+    (t / "sub").mkdir(parents=True)
+    (tmp_path / "elsewhere" / "deep").mkdir(parents=True)
+    (t / "a").write_text("a")
+    (t / "sub" / "b").write_text("bb")
+    (tmp_path / "elsewhere" / "deep" / "c").write_text("ccc")
+    (t / "link").symlink_to(tmp_path / "elsewhere")
+    fs = fsio.Fs(spark, str(t))
+    hadoop = fsio.Fs(spark, str(t))
+    hadoop.is_local = False
+    want = sorted(hadoop.file_sizes_recursive(str(t)))
+    assert ("file:" + str(t / "link" / "deep" / "c"), 3) in want
+    assert sorted(fs.file_sizes_recursive(str(t))) == want
+    monkeypatch.chdir(tmp_path)
+    assert sorted(fs.file_sizes_recursive("t")) == want
+    (t / "sub" / "loop").symlink_to(t)
+    assert sorted(fs.file_sizes_recursive(str(t))) == want
+
+
 def test_clone_generation_strips_publish_stamp(spark, tmp_path):
     """A clone is a new, UNPUBLISHED tree: carrying the source's
     .published_at would let a crashed writer's orphan masquerade as

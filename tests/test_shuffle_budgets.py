@@ -48,9 +48,11 @@ BUDGETS = {
     "q_source_capped_sampling": 1,
     "q_dsir_domain_selection": 4,  # buckets + totals + per-doc + top-k
     # round 6: the materialized-index lifecycle — both serve paths must
-    # stay probe-key-only (build exchanges are K×dim partials)
-    "q_ann_ivfpq_index_search": 5,
-    "q_ann_ivfpq_index_expire": 5,
+    # stay probe-key-only (build exchanges are K×dim partials). With the
+    # lookup-table ADC the codebook and probe-cell aggregates run over
+    # coalesce(1), so the q_id window shuffle is the whole plan
+    "q_ann_ivfpq_index_search": 1,
+    "q_ann_ivfpq_index_expire": 1,
     # round 6: q15 materializes the supplier-revenue view once; the
     # post-checkpoint plan is max-broadcast + joins — no global window
     "q15_top_suppliers_by_revenue": 3,
