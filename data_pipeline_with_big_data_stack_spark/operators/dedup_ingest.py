@@ -146,7 +146,7 @@ class EpochStoreBase(MetaStoreBase):
     prior-read).
 
     Subclasses declare their layout as class attributes — the shared
-    seeding, init and fold engine (:func:`_compact_into_new_generation`)
+    read path, init and fold engine (:func:`_compact_into_new_generation`)
     are entirely layout-driven:
 
     - ``_SINKS``: sink names (tuple)
@@ -155,7 +155,8 @@ class EpochStoreBase(MetaStoreBase):
     - ``_SINK_FOLD_SALT``: bucketed sink → second range-partition key
       so one oversized bucket spreads across several size-bounded fold
       files while each task still holds only 1-2 buckets
-    - ``_SINK_SCHEMAS``: sink → empty-seed DDL schema
+    - ``_SINK_SCHEMAS``: sink → DDL of its data columns; every read
+      passes it with the partition columns (:meth:`read_schema`)
     - ``_REP_SINK``: the representative (largest) sink whose byte sizes
       drive the incremental fold's LSM full-upgrade decision
     - :meth:`_fold_collapse`: per-sink fold rewrite hook (identity by
@@ -182,6 +183,15 @@ class EpochStoreBase(MetaStoreBase):
     def _sink(self, name: str) -> str:
         return os.path.join(self.base, self.current_generation(), name)
 
+    @classmethod
+    def read_schema(cls, sink: str) -> str:
+        """DDL of ``sink`` as read: its data columns, ``batch_id``, then
+        its lookup-bucket column if it has one."""
+        bkt = cls._SINK_BKT.get(sink)
+        return f"{cls._SINK_SCHEMAS[sink]}, batch_id int" + (
+            f", {bkt} int" if bkt else ""
+        )
+
     def read(self, spark: SparkSession, name: str) -> DataFrame:
         """Manifest-aware read of one sink's full accumulated state
         (`operators/segman`): an incremental fold CARRIES earlier fold
@@ -191,7 +201,9 @@ class EpochStoreBase(MetaStoreBase):
         physically-present partitions."""
         if name not in self._SINKS:
             raise ValueError(f"unknown sink {name!r}; one of {self._SINKS}")
-        return segman.read_table(spark, self.fs, self._sink(name))
+        return segman.read_table(
+            spark, self.fs, self._sink(name), schema=self.read_schema(name)
+        )
 
     def _fold_collapse(self, sink: str, df: DataFrame) -> DataFrame:
         """Fold-time rewrite hook for one sink's covered epoch range —
@@ -261,30 +273,15 @@ class DedupIngestStore(EpochStoreBase):
         return super()._fold_collapse(sink, df)
 
 
-def _seed_sink(
-    spark: SparkSession, gen_dir: str, sink: str, layout: type[EpochStoreBase]
-) -> None:
-    """Seed a sink with an empty ``batch_id=-1`` partition (nested under
-    a zero bucket for the bucketed sinks) so root reads discover the
-    partition columns before the first epoch lands."""
-    sub = os.path.join(gen_dir, sink, "batch_id=-1")
-    bkt_col = layout._SINK_BKT.get(sink)
-    if bkt_col:
-        sub = os.path.join(sub, f"{bkt_col}=0")
-    spark.createDataFrame([], layout._SINK_SCHEMAS[sink]).write.mode(
-        "overwrite"
-    ).parquet(sub)
-
-
 def _init_epoch_store(
     spark: SparkSession, base: str, n_bkt: int, cls: type[EpochStoreBase]
 ) -> EpochStoreBase:
-    """Shared store initializer: create generation 1 with seeded sinks
-    and publish it. Refuses an already-initialized base: re-seeding
-    would publish an EMPTY generation over the accumulated store
-    (orphaning every committed epoch while the old checkpoint blocks
-    re-ingestion) and could silently rewrite n_bkt under data bucketed
-    with the old value."""
+    """Shared store initializer: publish an empty generation 1 (no
+    Spark job — its sinks have no files and read as empty). Refuses an
+    already-initialized base: re-initializing would publish an EMPTY
+    generation over the accumulated store (orphaning every committed
+    epoch while the old checkpoint blocks re-ingestion) and could
+    silently rewrite n_bkt under data bucketed with the old value."""
     fs = fsio.Fs(spark, base)
     fs.mkdirs(base)
     meta = os.path.join(base, _META)
@@ -303,22 +300,7 @@ def _init_epoch_store(
             "delete the base directory to start over"
         )
     fs.write_text_atomic(meta, json.dumps({"n_bkt": int(n_bkt)}))
-    gen = G.next_gen(base, fs=fs)
-    gen_dir = os.path.join(base, gen)
-    # seed the sinks CONCURRENTLY (guide §2.6): each seed is a tiny
-    # independent 0-row write whose cost is pure job/commit latency, and
-    # the sequential loop paid it once per sink (r15 measured the 5-sink
-    # init at ~5 write jobs of pure overhead). Spark schedules the jobs
-    # from a small driver pool; publish still happens after ALL seeds.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(cls._SINKS)) as pool:
-        list(
-            pool.map(
-                lambda sink: _seed_sink(spark, gen_dir, sink, cls), cls._SINKS
-            )
-        )
-    G.publish(base, gen, fs=fs)
+    G.publish(base, G.next_gen(base, fs=fs), fs=fs)
     st = cls(base, fs=fs)
     st._n_bkt = int(n_bkt)
     return st
@@ -327,7 +309,7 @@ def _init_epoch_store(
 def init_dedup_ingest_store(
     spark: SparkSession, base: str, n_bkt: int = _DEFAULT_N_BKT
 ) -> DedupIngestStore:
-    """Create generation 1 with seeded sinks and publish it (see
+    """Create and publish an empty generation 1 (see
     :func:`_init_epoch_store` for the refusal contract)."""
     return _init_epoch_store(spark, base, n_bkt, DedupIngestStore)
 
@@ -339,6 +321,8 @@ def _prior(
     bkt_col: str | None = None,
     touched: list[int] | None = None,
     fs: fsio.Fs | None = None,
+    *,
+    schema: str,
 ) -> DataFrame:
     """Committed state as of epoch ``eid``: partition-pruned to
     ``batch_id < eid`` so a replayed epoch never sees its own
@@ -351,10 +335,10 @@ def _prior(
     — the missed-duplicates failure mode this module exists to
     prevent. Reads are manifest-aware (`operators/segman`): after an
     incremental fold, earlier fold partitions live in older generations
-    by reference."""
-    df = segman.read_table(spark, fs or fsio.default_fs(path), path).filter(
-        F.col("batch_id") < F.lit(int(eid))
-    )
+    by reference. ``schema``: the sink's ``store.read_schema(sink)``."""
+    df = segman.read_table(
+        spark, fs or fsio.default_fs(path), path, schema=schema
+    ).filter(F.col("batch_id") < F.lit(int(eid)))
     drop = ["batch_id"]
     if bkt_col is not None:
         if touched is None:
@@ -479,17 +463,13 @@ def _guarded_epoch_stats(
     exploded row (the MinHash store: one signature row per doc, a
     3-element literal band array).
 
-    Stores created BEFORE the hwm sink existed have no ``hwm`` dir:
-    treated as 'no committed watermark' (enforcement begins with this
-    epoch's write, which creates the sink; the next fold seeds it into
-    the layout like any sink)."""
+    A sink with no files — a fresh store, or one created before the
+    hwm sink existed — reads as empty: 'no committed watermark', and
+    enforcement begins with this epoch's row."""
     spark = exploded.sparkSession
-    if store.fs.exists(hwm_path):
-        prior_wm = _prior(spark, hwm_path, eid, fs=store.fs).agg(
-            F.max("max_doc_id").alias("_wm")
-        )
-    else:
-        prior_wm = spark.sql("SELECT CAST(NULL AS BIGINT) AS _wm")
+    prior_wm = _prior(
+        spark, hwm_path, eid, fs=store.fs, schema=store.read_schema("hwm")
+    ).agg(F.max("max_doc_id").alias("_wm"))
     err = F.concat(
         F.lit(
             f"{store._KIND} at {store.base}: out-of-order ingest — "
@@ -758,7 +738,10 @@ def _dedup_ingest_batch_locked(
         # touched (bucket, epoch)) — the bands index itself is never
         # aggregated here, and the sidecar scan prunes to touched bkts
         prior_counts = (
-            _prior(s, sink["counts"], eid, "bkt", touched, fs=store.fs)
+            _prior(
+                s, sink["counts"], eid, "bkt", touched, fs=store.fs,
+                schema=store.read_schema("counts"),
+            )
             .groupBy("band", "band_key")
             .agg(F.max("n").alias("prior_n"))
         )
@@ -773,7 +756,10 @@ def _dedup_ingest_batch_locked(
         # prior bands scan prunes to the batch's buckets: any prior row
         # that can equi-join a batch row on (band, band_key) has the
         # same bkt by construction, so pruning loses no candidate
-        prior_bands = _prior(s, sink["bands_idx"], eid, "bkt", touched, fs=store.fs)
+        prior_bands = _prior(
+            s, sink["bands_idx"], eid, "bkt", touched, fs=store.fs,
+            schema=store.read_schema("bands_idx"),
+        )
         all_bands = prior_bands.unionByName(capped.drop("bkt"))
         cand = (
             capped.drop("bkt")
@@ -803,7 +789,8 @@ def _dedup_ingest_batch_locked(
         # only — per-batch verify compute is O(candidates), and the
         # prior doc-store scan prunes to the partners' buckets
         texts = _prior(
-            s, sink["docstore"], eid, "dbkt", partner_bkts, fs=store.fs
+            s, sink["docstore"], eid, "dbkt", partner_bkts, fs=store.fs,
+            schema=store.read_schema("docstore"),
         ).unionByName(batch.select("doc_id", "text"))
         ver = verify_jaccard(cand, texts, threshold=tau)
         wv = W.partitionBy("doc_b").orderBy("doc_a")
@@ -961,7 +948,9 @@ def _refuse_direct_driven(store: EpochStoreBase) -> None:
     to ``batch_id < eid`` prior reads. Checks EVERY sink: the first
     sink is written first, so a direct epoch that crashed mid-batch can
     exist there alone. The caller must hold the store's writer lock
-    with the generation resolved after acquisition (ADVICE r10)."""
+    with the generation resolved after acquisition (ADVICE r10).
+    ``batch_id=-1`` is never an epoch: stores initialized before
+    seedless init carry zero-row partitions under that id."""
     if _committed_hi(store) is not None:
         return
     fs = store.fs
@@ -1182,7 +1171,7 @@ def _compact_into_new_generation(
         if fold_ids and hi >= 0:
             bkt_col = store._SINK_BKT.get(sink)
             df = (
-                segman.read_table(spark, fs, src)
+                segman.read_table(spark, fs, src, schema=store.read_schema(sink))
                 .filter(
                     (F.col("batch_id") > F.lit(lo))
                     & (F.col("batch_id") <= F.lit(hi))
@@ -1208,13 +1197,13 @@ def _compact_into_new_generation(
                     n_tasks, F.col(bkt_col), F.col(store._SINK_FOLD_SALT[sink])
                 )
                 _write_epoch(df, dst, hi, bkt_col, n_bkt=0)
-        _seed_sink(spark, gen_dir, sink, type(store))
         # prior incremental-fold partitions (ids <= lo; this fold covers
         # only (lo, hi]) and crashed in-flight epochs above the
         # committed high-water carry BY REFERENCE — the replay's static
         # overwrite materializes the logical partition physically, and
         # shadow-merge resolution makes that rewrite win, exactly as it
-        # overwrote the original dir before
+        # overwrote the original dir before. An old store's zero-row
+        # batch_id=-1 partition is neither folded nor carried
         refs = {
             f"batch_id={e}": entries[f"batch_id={e}"]
             for e in on_disk
@@ -1228,8 +1217,8 @@ def _compact_into_new_generation(
             # references (a physical-only listing would under-report a
             # sink whose in-flight epoch carried by reference). The
             # refs just written are in hand and can never collide with
-            # the physical partitions (e <= lo or e > hi vs hi and the
-            # seed), so no manifest read-back is needed; referenced
+            # the physical partition (e <= lo or e > hi vs hi), so no
+            # manifest read-back is needed; referenced
             # dirs are listed ONCE per segment parent (not once per
             # partition) and attributed by the delimiter-safe
             # "/batch_id=e/" path component — never by comparing

@@ -61,22 +61,17 @@ def gen_name(n: int) -> str:
 # Single-writer guard of a store root: every writer of the generation
 # stores (`ann_index_versioned`, `dedup_ingest`, `substring_ingest`)
 # materializes, publishes and GCs under it, so two writers never race
-# for one generation name or GC each other's work. Same machinery as
-# the rollup store's maintenance lock — pid@host payload, automatic
-# stale-holder reclaim — under a store-specific sibling suffix.
+# for one generation name or GC each other's work. It is the `fsio`
+# lock lease the rollup store's maintenance lock also uses (pid@host
+# payload, automatic stale-holder reclaim), under its own suffix.
 _INDEX_LOCK_SUFFIX = ".__index_lock"
 
 
 def _index_write_lock(spark, path: str):
     """Acquire the store root's single-writer lock; returns a heartbeat
     lease — caller calls ``lease.release()`` in a finally."""
-    from data_pipeline_with_big_data_stack_spark.operators.rollup_maintenance import (
-        _acquire_lock,
-        break_stale_lock,
-    )
-
-    break_stale_lock(spark, path, suffix=_INDEX_LOCK_SUFFIX)
-    return _acquire_lock(spark, path, suffix=_INDEX_LOCK_SUFFIX)
+    fsio.break_stale_lock(spark, path, _INDEX_LOCK_SUFFIX)
+    return fsio._acquire_lock(spark, path, _INDEX_LOCK_SUFFIX)
 
 
 def list_generations(root: str, fs: fsio.Fs | None = None) -> list[str]:

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_pipeline_with_big_data_stack_spark.operators import fsio
 from data_pipeline_with_big_data_stack_spark.session import materialize
 
 ROLLUP_DIMS = ("event_type",)  # default dims — callers can pass their own
@@ -275,271 +276,10 @@ def _store_exists(spark: SparkSession, path: str) -> bool:
 # Reader caveat (same as any dynamic partition overwrite, and as
 # Druid's segment handoff): a query that LISTED the store's files just
 # before a publish renamed a partition away can fail with a transient
-# file-not-found — readers retry. The lock serializes WRITERS only.
+# file-not-found — readers retry. The lock (the `fsio` lease, under this
+# store's suffix) serializes WRITERS only.
 # --------------------------------------------------------------------------
 _LOCK_SUFFIX = ".__maintenance_lock"
-
-
-def _lock_path(spark: SparkSession, path: str, suffix: str = _LOCK_SUFFIX):
-    jvm, fs, _ = _fs(spark, path)
-    # sibling of the store root, so locking works before the store exists
-    return fs, jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + suffix)
-
-
-def _write_lock_body(out, payload: str) -> None:
-    """Write + close the freshly claimed lock's pid@host body (module
-    level so the crash-injection test can fail it deliberately)."""
-    try:
-        out.write(payload.encode())
-    finally:
-        out.close()
-
-
-def _read_lock_body(jvm, fs, lock) -> str | None:
-    """The lock file's current content, or None if it vanished or is
-    unreadable. Shared by the stale-lock breaker and the lease release
-    so both compare the same canonical read."""
-    try:
-        stream = fs.open(lock)
-        try:
-            return bytes(
-                jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-            ).decode("utf-8", "replace")
-        finally:
-            stream.close()
-    except Exception:  # noqa: BLE001 - unreadable/legacy/vanished
-        return None
-
-
-class _LockLease:
-    """A held lock plus a daemon HEARTBEAT that refreshes the lock
-    file's mtime every ``_HEARTBEAT_SECONDS`` for as long as the lease
-    lives. With the heartbeat, :func:`break_stale_lock`'s age signal
-    measures time since the holder last proved it was ALIVE — not job
-    duration — so a legitimately long (> max_age) maintenance job on
-    another host can no longer be mis-killed by an age-only breaker.
-    If the heartbeat thread dies (session stopped, lock broken under
-    us) it simply stops beating and the age fallback takes over —
-    exactly the crashed-holder behavior the breaker exists for."""
-
-    def __init__(self, fs, lock, jvm=None, payload=None):
-        import threading
-
-        self.fs, self.lock = fs, lock
-        self.jvm, self.payload = jvm, payload
-        self._stop = threading.Event()
-        self._thread = threading.Thread(
-            target=self._beat, name="lock-heartbeat", daemon=True
-        )
-        self._thread.start()
-
-    def _beat(self) -> None:
-        import time as _time
-
-        while not self._stop.wait(_HEARTBEAT_SECONDS):
-            try:
-                self.fs.setTimes(self.lock, int(_time.time() * 1000), -1)
-            except Exception:  # noqa: BLE001 - JVM gone / lock removed
-                return
-
-    def release(self) -> None:
-        self._stop.set()
-        # join before deleting: a beat firing after the delete would
-        # touch whatever lock a NEXT holder has already created at the
-        # same path (the wait() wakes immediately on the event, so this
-        # returns fast)
-        self._thread.join(timeout=5.0)
-        # re-read before deleting (ADVICE r6): if a racing breaker
-        # already reclaimed this lock and a NEW holder acquired it, the
-        # path now holds the new holder's payload — deleting it would
-        # strip a live writer's protection. Same residual re-read→delete
-        # TOCTOU as break_stale_lock; with the heartbeat proving
-        # liveness every minute, a correctly configured breaker never
-        # reclaims a lease that reaches release() at all.
-        if self.jvm is not None and self.payload is not None:
-            import time as _time
-
-            body = _read_lock_body(self.jvm, self.fs, self.lock)
-            for _ in range(2):  # retry transient read failures briefly
-                if body is not None:
-                    break
-                _time.sleep(0.1)
-                body = _read_lock_body(self.jvm, self.fs, self.lock)
-            if body is not None and body != self.payload:
-                return  # someone else's lock now — leave it alone
-            if body is None:
-                # vanished (a breaker removed it) → nothing to delete;
-                # EXISTS but unreadable (transient IO) → back off: with
-                # the heartbeat stopped, the age breaker reclaims it —
-                # deleting a possibly-foreign lock is the worse failure
-                try:
-                    if self.fs.exists(self.lock):
-                        return
-                except Exception:  # noqa: BLE001 - IO still failing
-                    return
-                return
-        try:
-            self.fs.delete(self.lock, False)
-        except Exception:  # noqa: BLE001 - already removed by a breaker
-            pass
-
-
-def _acquire_lock(spark: SparkSession, path: str, suffix: str = _LOCK_SUFFIX):
-    """Single-writer guard: atomic create-if-absent of a sibling lock
-    file. Concurrent maintenance (two apply_increment / expire jobs on
-    one store) would race the read-merge-publish cycle; the loser fails
-    fast and cleanly instead of corrupting the store. The lock body
-    records ``pid@host ts`` so a dead holder can be distinguished from
-    a live one — :func:`break_stale_lock` (called by the maintenance
-    entry points) reclaims crashed holders automatically; manual
-    removal of ``<store>.__maintenance_lock`` remains the last resort.
-    Returns a :class:`_LockLease` whose heartbeat keeps the lock fresh;
-    callers release it in a ``finally``.
-
-    Only a genuine already-exists failure is reported as contention;
-    any other create error (permissions, transient IO) re-raises as
-    itself so it isn't misdiagnosed as a held lock (ADVICE r5)."""
-    import os
-    import socket
-    import time as _time
-
-    from data_pipeline_with_big_data_stack_spark.operators import fsio
-
-    fs, lock = _lock_path(spark, path, suffix)
-    # payload built BEFORE the claim: nothing fallible may sit between a
-    # successful create and the cleanup-protected body write below
-    payload = f"{os.getpid()}@{socket.gethostname()} {_time.time():.3f}\n"
-
-    def _contention():
-        return RuntimeError(
-            f"store {path} is locked by another maintenance job "
-            f"(a crashed holder is reclaimed automatically after "
-            f"{_STALE_LOCK_MAX_AGE:.0f}s, or remove "
-            f"{path.rstrip('/') + suffix} manually if it is dead)"
-        )
-
-    # the claim itself goes through the facade's create_exclusive:
-    # atomic create on filesystems, a CONDITIONAL write on object
-    # stores whose connector supports it (then the store decides the
-    # race at close, below) — only connectors with neither keep the
-    # documented orchestrator/external-lock caveat (fsio docstring)
-    try:
-        out, conditional = fsio.Fs(spark, path).create_exclusive(
-            path.rstrip("/") + suffix
-        )
-    except FileExistsError as exc:
-        raise _contention() from exc
-    try:
-        _write_lock_body(out, payload)
-    except Exception as exc:
-        if conditional:
-            # on a conditional claim the object appears only at a
-            # SUCCESSFUL close, so the store — not this code — decided
-            # any race. A classified exists-conflict is contention;
-            # anything else re-raises as itself so transient IO isn't
-            # misread as a held lock, after cleaning up what is
-            # provably OUR residue: a landed body that is a byte-PREFIX
-            # of our unique payload — empty (write failed, the
-            # finally-close committed), partial (write raised
-            # mid-buffer), or complete (close errored transiently after
-            # the PUT committed). Left behind, such residue would block
-            # maintenance for the full age window with the pid-liveness
-            # breaker refusing to help (the "holder" pid is alive —
-            # it's us). The deletion is safe because only a COMPLETE
-            # "pid@host ts\n" body can be a LIVE lock, and a complete
-            # body can be a prefix of our payload only by EQUALING it
-            # (the single newline is terminal), which uniqueness rules
-            # out for any other writer; a PARTIAL foreign body is
-            # itself dead residue of a failed claim, so even a
-            # prefix-colliding one is never a live holder's guard.
-            if fsio._is_exists(exc):
-                raise _contention() from exc
-            try:
-                body = _read_lock_body(spark._jvm, fs, lock)
-                if body is not None and payload.startswith(body):
-                    fs.delete(lock, False)
-            except Exception:  # noqa: BLE001 - leave it to the age breaker
-                pass
-            raise
-        # non-conditional claim: it succeeded but the body didn't land;
-        # an EMPTY lock file would block maintenance for the full age
-        # window (the pid-liveness path can't parse it) — best-effort
-        # remove the just-created lock before re-raising (ADVICE r6)
-        try:
-            fs.delete(lock, False)
-        except Exception:  # noqa: BLE001 - leave it to the age breaker
-            pass
-        raise
-    return _LockLease(fs, lock, jvm=spark._jvm, payload=payload)
-
-
-# conservative: with the lease heartbeat refreshing the lock mtime
-# every minute, an hour of silence means the holder is dead — long
-# jobs stay protected because age now measures liveness, not duration
-_STALE_LOCK_MAX_AGE = 3600.0
-_HEARTBEAT_SECONDS = 60.0
-
-
-def break_stale_lock(
-    spark: SparkSession,
-    path: str,
-    max_age_seconds: float = _STALE_LOCK_MAX_AGE,
-    suffix: str = _LOCK_SUFFIX,
-) -> bool:
-    """Reclaim the maintenance lock of a CRASHED holder so a streaming
-    restart from checkpoint can self-heal without manual lock removal
-    (ADVICE r5). Two independent staleness signals, both conservative:
-
-    - the lock body names ``pid@host``: if the host is THIS machine and
-      that pid is gone, the holder is provably dead → break immediately;
-    - otherwise fall back to age: a lock older than ``max_age_seconds``
-      (default 1 h — far beyond any maintenance batch) is declared dead.
-
-    A live holder on another host within the age window always blocks.
-    Returns True iff a lock was removed. Racing breakers are safe: both
-    may delete, but re-acquisition still goes through the atomic
-    create-if-absent claim. Before deleting, the lock body is RE-READ
-    and compared to the content that was judged stale — if it changed,
-    another writer already broke and re-acquired, and this breaker
-    backs off (shrinks the check→delete TOCTOU window to the re-read;
-    a conditional delete doesn't exist in the FileSystem API, so the
-    residual race is the same one every advisory stale-lock scheme
-    carries — Hive/Delta included)."""
-    import os
-    import socket
-
-    fs, lock = _lock_path(spark, path, suffix)
-
-    def _read_body() -> str | None:
-        return _read_lock_body(spark._jvm, fs, lock)
-
-    if not fs.exists(lock):
-        return False
-    raw = _read_body()
-    holder_dead = False
-    try:
-        pid_s, host = raw.split()[0].split("@", 1)
-        if host == socket.gethostname():
-            try:
-                os.kill(int(pid_s), 0)
-            except ProcessLookupError:
-                holder_dead = True
-            except PermissionError:
-                pass  # pid exists under another uid → alive
-    except Exception:  # noqa: BLE001 - unreadable/legacy lock → age only
-        pass
-    if not holder_dead:
-        import time as _time
-
-        try:
-            mtime_ms = fs.getFileStatus(lock).getModificationTime()
-        except Exception:  # noqa: BLE001 - vanished between exists and stat
-            return False
-        if (_time.time() - mtime_ms / 1000.0) <= max_age_seconds:
-            return False
-    if _read_body() != raw:
-        return False  # replaced since judged stale — a live holder owns it
-    return bool(fs.delete(lock, False))
 
 
 def _batch_token(batch_id) -> str:
@@ -641,8 +381,8 @@ def apply_increment(
     checkpoint at an existing store re-issues epoch 0 and would be
     skipped wherever an ``_applied_0`` marker survives — start a fresh
     store (or namespace the ids) when discarding a checkpoint."""
-    break_stale_lock(spark, path)  # self-heal after a crashed holder
-    lease = _acquire_lock(spark, path)
+    fsio.break_stale_lock(spark, path, _LOCK_SUFFIX)  # self-heal after a crashed holder
+    lease = fsio._acquire_lock(spark, path, _LOCK_SUFFIX)
     try:
         _apply_increment_locked(
             spark, path, new_events, dims, batch_id, on_new_columns
@@ -958,8 +698,8 @@ def expire_partitions(
 
     if isinstance(keep_from, str):
         keep_from = datetime.date.fromisoformat(keep_from)
-    break_stale_lock(spark, path)  # self-heal after a crashed holder
-    lease = _acquire_lock(spark, path)
+    fsio.break_stale_lock(spark, path, _LOCK_SUFFIX)  # self-heal after a crashed holder
+    lease = fsio._acquire_lock(spark, path, _LOCK_SUFFIX)
     try:
         dropped = _expire_locked(spark, path, keep_from)
     finally:

@@ -410,6 +410,7 @@ def read_table(
     fs: fsio.Fs,
     table_dir: str,
     logicals: set[str] | None = None,
+    schema: str | None = None,
 ) -> DataFrame:
     """Read a generation table, manifest-aware. A plain physical dir
     (no manifest) is exactly ``spark.read.parquet(table_dir)`` — the
@@ -418,6 +419,10 @@ def read_table(
     referenced group (grouped by physical parent, scanned with
     ``basePath`` so partition columns and pruning survive) and unions
     by name.
+
+    ``schema`` (DDL of data and partition columns) is passed to every
+    read, so none infers one from footers; a table with no files reads
+    as an empty frame of it after one listing, with no Spark job.
 
     ``logicals`` (optional, a set of partition dir names like
     ``cell_id=5``) restricts REFERENCE resolution to those partitions:
@@ -430,17 +435,24 @@ def read_table(
     resolution — reusing the already-read root manifest and listing —
     so a probe of an absent partition stays an empty result, never an
     error (parity with the unrestricted read + filter)."""
-    raw = _read_manifest_raw(fs, table_dir)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    if schema is None:
+        raw = _read_manifest_raw(fs, table_dir)
+        names = [] if raw is None else _listing(fs, table_dir)
+    else:  # one listing answers both "any files?" and "a manifest?"
+        names = _listing(fs, table_dir)
+        raw = _read_manifest_raw(fs, table_dir) if MANIFEST in names else None
+    has_own = any("=" in n or n.endswith(".parquet") for n in names)
     if raw is None:
-        return spark.read.parquet(table_dir)
-    names = _listing(fs, table_dir)
+        if schema is not None and not has_own:
+            # plans as an empty local relation: no job even on an action
+            return spark.createDataFrame([], schema).where("false")
+        return reader.parquet(table_dir)
 
     def _reads(man: dict) -> list[DataFrame]:
         reads: list[DataFrame] = []
-        if any("=" in n for n in names) or any(
-            n.endswith(".parquet") for n in names
-        ):
-            reads.append(spark.read.parquet(table_dir))
+        if has_own:
+            reads.append(reader.parquet(table_dir))
         whole: list[str] = []
         grouped: dict[str, list[str]] = {}
         for logical, dirs in resolve_refs(fs, table_dir, man, names=names).items():
@@ -450,11 +462,9 @@ def read_table(
                 else:
                     grouped.setdefault(os.path.dirname(d), []).append(d)
         for d in sorted(whole):
-            reads.append(spark.read.parquet(d))
+            reads.append(reader.parquet(d))
         for base, dirs in sorted(grouped.items()):
-            reads.append(
-                spark.read.option("basePath", base).parquet(*sorted(dirs))
-            )
+            reads.append(reader.option("basePath", base).parquet(*sorted(dirs)))
         return reads
 
     reads = _reads(_combine_manifest(fs, table_dir, raw, logicals))

@@ -109,7 +109,7 @@ from data_pipeline_with_big_data_stack_spark.operators.generations import (
 class SubstringIngestStore(EpochStoreBase):
     """Generation-versioned store: per-doc span DECISIONS, the
     accumulated window-fingerprint index, and the shared doc-id
-    watermark sidecar. Layout drives the shared seed/init/fold engine —
+    watermark sidecar. Layout drives the shared read/init/fold engine —
     see :class:`dedup_ingest.EpochStoreBase`."""
 
     _KIND = "substring-ingest store"
@@ -138,10 +138,10 @@ class SubstringIngestStore(EpochStoreBase):
 def init_substring_store(
     spark: SparkSession, base: str, n_bkt: int = _DEFAULT_N_BKT
 ) -> SubstringIngestStore:
-    """Create generation 1 with seeded empty sinks and publish it.
-    Refuses an existing store (see `dedup_ingest._init_epoch_store`):
-    re-seeding would reset the index under a checkpoint that keeps
-    numbering epochs, silently re-admitting every known window."""
+    """Create and publish an empty generation 1. Refuses an existing
+    store (see `dedup_ingest._init_epoch_store`): re-initializing would
+    reset the index under a checkpoint that keeps numbering epochs,
+    silently re-admitting every known window."""
     return _init_epoch_store(spark, base, n_bkt, SubstringIngestStore)
 
 
@@ -254,7 +254,8 @@ def _substring_ingest_batch_locked(
             if fail_after == "hwm":
                 raise RuntimeError("injected crash after hwm write")
         prior = _prior(
-            spark, sink["windows_idx"], eid, "bkt", touched, fs=store.fs
+            spark, sink["windows_idx"], eid, "bkt", touched, fs=store.fs,
+            schema=store.read_schema("windows_idx"),
         )
         firsts = (
             c.groupBy("w1", "w2", "bkt")

@@ -225,7 +225,7 @@ def test_compact_dedup_ingest_store_preserves_contents(spark):
     batch_id partition of a NEW generation must preserve every sink's
     rows (modulo the batch_id column) and cut the file count to the
     layout floor — O(1) for the flat decisions sink, one file per
-    occupied lookup bucket (+1 seed) for the prunable bucketed sinks."""
+    occupied lookup bucket for the prunable bucketed sinks."""
     from data_pipeline_with_big_data_stack_spark.operators.layout import table_files
 
     store = _drain(spark, _small_docs(spark))
@@ -252,12 +252,12 @@ def test_compact_dedup_ingest_store_preserves_contents(spark):
     # bucketed sinks fold via repartitionByRange(n_tasks, bkt, salt):
     # every task writes one file per bucket it holds, and a range
     # boundary can split a bucket across two tasks — ≤ n_bkt + n_tasks
-    # files (n_tasks == n_bkt at this size) + 1 seed
+    # files (n_tasks == n_bkt at this size)
     floor = {
         "decisions": 2,
-        "bands_idx": 2 * store.n_bkt + 1,
-        "counts": 2 * store.n_bkt + 1,
-        "docstore": 2 * store.n_bkt + 1,
+        "bands_idx": 2 * store.n_bkt,
+        "counts": 2 * store.n_bkt,
+        "docstore": 2 * store.n_bkt,
     }
     new_counts = DI.compact_dedup_ingest_store(spark, store)
     for sink, want in before.items():
@@ -305,8 +305,9 @@ def test_prior_reads_prune_to_touched_buckets(spark, tmp_path):
         spark, [(i, f"word{i} alpha beta gamma delta epsilon {i}") for i in range(40)]
     )
     DI.dedup_ingest_batch(batch, 0, store)
-    pruned = DI._prior(spark, store.bands_idx, 5, "bkt", [0, 1, 2])
-    full = DI._prior(spark, store.bands_idx, 5)
+    schema = store.read_schema("bands_idx")
+    pruned = DI._prior(spark, store.bands_idx, 5, "bkt", [0, 1, 2], schema=schema)
+    full = DI._prior(spark, store.bands_idx, 5, schema=schema)
     n_pruned, n_full = _num_files_read(pruned), _num_files_read(full)
     assert n_pruned < n_full, f"prune read {n_pruned}/{n_full} files"
     plan = pruned._jdf.queryExecution().executedPlan().toString()
@@ -321,12 +322,12 @@ def test_batch_passes_touched_buckets_to_every_prior_read(spark, tmp_path, monke
     calls = []
     real = DI._prior
 
-    def spy(s, path, eid, bkt_col=None, touched=None, fs=None):
+    def spy(s, path, eid, bkt_col=None, touched=None, **kw):
         calls.append(
             (os.path.basename(os.path.normpath(path)), bkt_col,
              None if touched is None else len(touched))
         )
-        return real(s, path, eid, bkt_col, touched, fs=fs)
+        return real(s, path, eid, bkt_col, touched, **kw)
 
     monkeypatch.setattr(DI, "_prior", spy)
     store = DI.init_dedup_ingest_store(spark, str(tmp_path / "st"))
@@ -779,7 +780,8 @@ def test_prior_read_scan_drops_with_higher_n_bkt(spark, tmp_path):
             store.base, store.current_generation(), "bands_idx"
         )
         return DI._prior(
-            spark, src, 1, "bkt", sorted(touched), fs=store.fs
+            spark, src, 1, "bkt", sorted(touched), fs=store.fs,
+            schema=store.read_schema("bands_idx"),
         ).count()
 
     scanned = {}

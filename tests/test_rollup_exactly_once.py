@@ -19,6 +19,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from data_pipeline_with_big_data_stack_spark.operators import fsio
 from data_pipeline_with_big_data_stack_spark.operators import rollup_maintenance as RM
 from data_pipeline_with_big_data_stack_spark.tables import load_table
 from tests.conftest import SF_SMOKE
@@ -437,17 +438,17 @@ def test_foreign_lock_reclaimed_by_age_only(spark, tmp_path):
     with open(lock, "w") as fh:
         fh.write("999999@some-other-host 0.0\n")
     # fresh → blocked (default 1h window)
-    assert RM.break_stale_lock(spark, path) is False
+    assert fsio.break_stale_lock(spark, path, RM._LOCK_SUFFIX) is False
     # age it past the window → reclaimed
-    old = time.time() - 2 * RM._STALE_LOCK_MAX_AGE
+    old = time.time() - 2 * fsio._STALE_LOCK_MAX_AGE
     os.utime(lock, (old, old))
-    assert RM.break_stale_lock(spark, path) is True
+    assert fsio.break_stale_lock(spark, path, RM._LOCK_SUFFIX) is True
     assert not os.path.exists(lock)
 
 
 def test_break_stale_lock_noop_when_absent(spark, tmp_path):
     path = str(tmp_path / "store")
-    assert RM.break_stale_lock(spark, path) is False
+    assert fsio.break_stale_lock(spark, path, RM._LOCK_SUFFIX) is False
 
 
 def test_publish_rename_failure_raises(spark, tmp_path, monkeypatch):
@@ -488,9 +489,9 @@ def test_lock_heartbeat_keeps_long_jobs_alive(spark, tmp_path, monkeypatch):
     breaker's age window."""
     import time
 
-    monkeypatch.setattr(RM, "_HEARTBEAT_SECONDS", 0.2)
+    monkeypatch.setattr(fsio, "_HEARTBEAT_SECONDS", 0.2)
     path = str(tmp_path / "store")
-    lease = RM._acquire_lock(spark, path)
+    lease = fsio._acquire_lock(spark, path, RM._LOCK_SUFFIX)
     lock = path + RM._LOCK_SUFFIX
     try:
         old = time.time() - 7200
@@ -500,7 +501,12 @@ def test_lock_heartbeat_keeps_long_jobs_alive(spark, tmp_path, monkeypatch):
             assert time.time() < deadline, "heartbeat never refreshed mtime"
             time.sleep(0.1)
         # even an aggressive age-only breaker now sees a fresh lock
-        assert RM.break_stale_lock(spark, path, max_age_seconds=30.0) is False
+        assert (
+            fsio.break_stale_lock(
+                spark, path, RM._LOCK_SUFFIX, max_age_seconds=30.0
+            )
+            is False
+        )
     finally:
         lease.release()
     assert not os.path.exists(lock), "release deletes the lock"
@@ -513,17 +519,17 @@ def test_release_leaves_a_successors_lock_alone(spark, tmp_path):
     its own."""
     path = str(tmp_path / "store")
     lock = path + RM._LOCK_SUFFIX
-    stale = RM._acquire_lock(spark, path)
+    stale = fsio._acquire_lock(spark, path, RM._LOCK_SUFFIX)
     # a racing breaker reclaims the lock out from under the holder...
-    fs, jlock = RM._lock_path(spark, path)
+    fs, jlock = fsio._lock_path(spark, path, RM._LOCK_SUFFIX)
     assert fs.delete(jlock, False)
     # ...and a new holder claims the same path
-    new = RM._acquire_lock(spark, path)
+    new = fsio._acquire_lock(spark, path, RM._LOCK_SUFFIX)
     assert new.payload != stale.payload
 
     stale.release()  # must notice the foreign payload and back off
     assert os.path.exists(lock), "stale release deleted the new lock"
-    assert RM._read_lock_body(spark._jvm, fs, jlock) == new.payload
+    assert fsio._read_lock_body(spark._jvm, fs, jlock) == new.payload
 
     new.release()  # the rightful owner still cleans up
     assert not os.path.exists(lock)
@@ -540,12 +546,12 @@ def test_failed_body_write_does_not_leave_empty_lock(spark, tmp_path, monkeypatc
         out.close()
         raise OSError("disk full")
 
-    monkeypatch.setattr(RM, "_write_lock_body", boom)
+    monkeypatch.setattr(fsio, "_write_lock_body", boom)
     with pytest.raises(OSError, match="disk full"):
-        RM._acquire_lock(spark, path)
+        fsio._acquire_lock(spark, path, RM._LOCK_SUFFIX)
     assert not os.path.exists(lock), "empty lock left behind"
 
     monkeypatch.undo()
-    lease = RM._acquire_lock(spark, path)  # path is immediately usable
+    lease = fsio._acquire_lock(spark, path, RM._LOCK_SUFFIX)  # path is immediately usable
     lease.release()
     assert not os.path.exists(lock)

@@ -355,9 +355,9 @@ def test_acquire_lock_reports_conditional_close_conflict_as_contention(
 
     monkeypatch.setattr(fsio.Fs, "create_exclusive", fake_exclusive)
 
-    real_lock_path = RM._lock_path
+    real_lock_path = fsio._lock_path
 
-    def spy_lock_path(spark_, path, suffix=RM._LOCK_SUFFIX):
+    def spy_lock_path(spark_, path, suffix):
         fs, lock = real_lock_path(spark_, path, suffix)
 
         class _FsSpy:
@@ -372,9 +372,9 @@ def test_acquire_lock_reports_conditional_close_conflict_as_contention(
 
         return _FsSpy(), lock
 
-    monkeypatch.setattr(RM, "_lock_path", spy_lock_path)
+    monkeypatch.setattr(fsio, "_lock_path", spy_lock_path)
     with pytest.raises(RuntimeError, match="locked by another maintenance job"):
-        RM._acquire_lock(spark, str(tmp_path / "store"))
+        fsio._acquire_lock(spark, str(tmp_path / "store"), RM._LOCK_SUFFIX)
     assert stream.wrote, "the claim body must have been attempted"
     assert not deleted, (
         "a close-time conditional conflict means WE never created the "
@@ -460,13 +460,13 @@ def test_acquire_lock_cleans_up_provably_own_conditional_residue(
 
     monkeypatch.setattr(fsio.Fs, "create_exclusive", fake_exclusive)
     with pytest.raises(Exception, match="SocketException"):
-        RM._acquire_lock(spark, store)
+        fsio._acquire_lock(spark, store, RM._LOCK_SUFFIX)
     assert not os.path.exists(lockfile), (
         "own conditional residue must be cleaned up"
     )
     # and the store is immediately usable: the next claim succeeds
     monkeypatch.undo()
-    lease = RM._acquire_lock(spark, store)
+    lease = fsio._acquire_lock(spark, store, RM._LOCK_SUFFIX)
     lease.release()
 
 
@@ -498,7 +498,7 @@ def test_acquire_lock_never_deletes_foreign_conditional_lock(
         fsio.Fs, "create_exclusive", lambda self, path: (_NeverLands(), True)
     )
     with pytest.raises(Exception, match="SocketException"):
-        RM._acquire_lock(spark, store)
+        fsio._acquire_lock(spark, store, RM._LOCK_SUFFIX)
     assert open(lockfile).read() == foreign, (
         "a foreign lock body must never be deleted by a failed claim"
     )

@@ -220,7 +220,10 @@ def _prior_idx_rows(spark, store, eid, touched):
     from data_pipeline_with_big_data_stack_spark.operators import dedup_ingest as DI
 
     src = os.path.join(store.base, store.current_generation(), "windows_idx")
-    return DI._prior(spark, src, eid, "bkt", sorted(touched), fs=store.fs).count()
+    return DI._prior(
+        spark, src, eid, "bkt", sorted(touched), fs=store.fs,
+        schema=store.read_schema("windows_idx"),
+    ).count()
 
 
 def _sink_values(spark, store):
@@ -483,7 +486,8 @@ def test_pre_watermark_store_without_hwm_dir_still_ingests(spark, tmp_path):
 
     store = SI.init_substring_store(spark, str(tmp_path / "st"), n_bkt=4)
     hwm_dir = os.path.join(store.base, store.current_generation(), "hwm")
-    shutil.rmtree(hwm_dir)
+    # a fresh store has no hwm dir either (its sinks have no files yet)
+    shutil.rmtree(hwm_dir, ignore_errors=True)
     docs = spark.createDataFrame(
         [(10, "a b c d e f g h i")], "doc_id long, text string"
     )
