@@ -1,8 +1,9 @@
 """Scheme-agnostic filesystem primitives for the materialized stores.
 
 The generation-pointer protocol (`operators/generations`), the
-streaming-dedup store (`operators/dedup_ingest`) and the versioned
-IVF-PQ index (`operators/ann_index_versioned`) all need a handful of
+streaming-dedup store (`operators/dedup_ingest`), the versioned
+IVF-PQ index (`operators/ann_index_versioned`) and the rollup store
+(`operators/rollup_maintenance`) all need a handful of
 filesystem operations beyond what Spark's writers provide: read/write a
 small pointer file atomically, list a directory, rename a staged tree
 over a live one, measure a directory, clone a generation. Raw ``os.*``
@@ -39,16 +40,16 @@ with a remote-safe branch:
 Two reads also go native on ``file:`` for speed alone, with the same
 results as the Hadoop path: :meth:`Fs.read_text` and
 :meth:`Fs.file_sizes_recursive`. Everything else —
-exists/list/delete/rename/du — is the Hadoop API with no local branch
+exists/list/delete/rename/touch/du — is the Hadoop API with no local branch
 at all.
 
 :attr:`Fs.rename_is_atomic` classifies the scheme: the one
-rename-SWAP maintenance protocol left, ``layout.compact_table``,
-infers crash state from which directories exist, which is only sound
-when a rename cannot be half-applied — it gates on this capability
-and directs object-store users to the generation-versioned stores,
-whose only publish primitive is the pointer write above (safe on
-every scheme).
+rename-publish protocol left, the rollup store's
+(`operators/rollup_maintenance`), infers crash state from which
+directories exist, which is only sound when a rename cannot be
+half-applied — it gates on this capability and directs object-store
+users to the generation-versioned stores, whose only publish primitive
+is the pointer write above (safe on every scheme).
 
 One narrowed object-store caveat remains:
 
@@ -438,6 +439,14 @@ class Fs:
     # -- mutation ---------------------------------------------------------
     def mkdirs(self, path: str) -> None:
         self._fs.mkdirs(self._p(path))
+
+    def touch(self, path: str) -> None:
+        """Create an empty file. No temp file and no fsync: for markers
+        inside a staged directory that publishes by rename together
+        with data files Spark's writers never fsync either — a
+        durability barrier on the marker alone buys nothing and costs
+        two disk flushes per marker."""
+        self._fs.create(self._p(path), True).close()
 
     def delete(self, path: str) -> None:
         """Recursive delete, missing-ok — but NOT failure-ok: Hadoop's

@@ -1,13 +1,13 @@
 """Physical-layout operators (SURVEY §4's engine-specific decisions):
-bucketed tables for co-located joins, and small-file compaction.
+bucketed tables for co-located joins, and z-order clustering.
 
-Druid's analogues: hash-partitioned segments and `maxRowsPerSegment`
-size targeting + auto-compaction (`M/druid-goes-satellite-datasource.json:17`).
-In Spark the same levers are ``bucketBy`` on the metastore table — both
-sides of an equi-join pre-hashed into the same bucket layout eliminates
-the join shuffle entirely — and a periodic compaction rewrite that
-coalesces a partition's many small files into size-targeted ones (the
-many-small-files risk called out in SURVEY §7 for 187 KB NetCDF drops).
+Druid's analogue: hash-partitioned segments
+(`M/druid-goes-satellite-datasource.json:17`). In Spark the same lever
+is ``bucketBy`` on the metastore table — both sides of an equi-join
+pre-hashed into the same bucket layout eliminates the join shuffle
+entirely. Small-file compaction lives with the stores that need it:
+the generation stores fold and compact behind their pointer
+(`operators/generations`).
 """
 
 from __future__ import annotations
@@ -47,85 +47,6 @@ def table_files(spark: SparkSession, path: str) -> list[str]:
 
     fs = fsio.Fs(spark, path)
     return [f for f in fs.list_files_recursive(path) if f.endswith(".parquet")]
-
-
-def recover_compaction(path: str, fs=None) -> bool:
-    """Heal a crashed compaction swap: if the table dir is MISSING but
-    its ``__precompact`` backup exists, the crash hit between the two
-    renames — restore the original (the staged rewrite is discarded;
-    re-running the compaction redoes it). Returns True if a restore
-    happened. Called on entry by both compactors, so a retry is always
-    safe; stale staging dirs are removed either way."""
-    from data_pipeline_with_big_data_stack_spark.operators import fsio
-
-    fs = fs or fsio.default_fs(path)
-    backup = path.rstrip("/") + "__precompact"
-    staging = path.rstrip("/") + "__compacting"
-    restored = False
-    if fs.exists(backup):
-        if not fs.exists(path):
-            fs.rename(backup, path)
-            restored = True
-        else:
-            # swap completed; backup is the superseded original
-            fs.delete(backup)
-    fs.delete(staging)
-    return restored
-
-
-def _require_atomic_rename(fs, path: str) -> None:
-    """The rename swap below infers crash state from which directories
-    exist — sound only where a rename cannot be half-applied.
-    Object-store renames are copy+delete, so a crash mid-swap would
-    leave a PARTIAL live tree that :func:`recover_compaction`'s "live
-    exists ⇒ swap completed" inference would then treat as final,
-    deleting the backup. Stores that must run on object stores publish
-    generations behind a pointer instead (`operators/generations`)."""
-    if not fs.rename_is_atomic:
-        raise NotImplementedError(
-            "compact_table swaps directories in place and requires an "
-            f"atomic-rename filesystem; {path!r} ({fs.scheme}) renames "
-            "by copy+delete. On object stores, keep the table in a "
-            "generation-versioned store (operators/generations), which "
-            "publishes by a pointer write instead of a rename"
-        )
-
-
-def compact_table(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    partition_cols: list[str] | None = None,
-) -> int:
-    """Rewrite a parquet dir into ~target-size files. Returns the new
-    file count. The rewrite is one job: read (small files packed into
-    tasks by ``maxPartitionBytes``) → repartition to ceil(bytes/target)
-    → overwrite via a staging dir (readers of the old files are not
-    disturbed mid-rewrite; the swap is a directory rename). A crash
-    between the two swap renames leaves the table at ``__precompact``;
-    :func:`recover_compaction` (run here on entry) restores it."""
-    from data_pipeline_with_big_data_stack_spark.operators import fsio
-
-    fs = fsio.Fs(spark, path)
-    _require_atomic_rename(fs, path)
-    recover_compaction(path, fs=fs)
-    total = sum(
-        n for f, n in fs.file_sizes_recursive(path) if f.endswith(".parquet")
-    )
-    n_out = max(1, -(-total // target_file_bytes))  # ceil
-    df = spark.read.parquet(path)
-    staging = path.rstrip("/") + "__compacting"
-    writer = df.repartition(int(n_out)).write.mode("overwrite")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(staging)
-    # two-rename swap (single filesystem; recover_compaction heals a
-    # crash between the renames on the next writer entry)
-    backup = path.rstrip("/") + "__precompact"
-    fs.rename(path, backup)
-    fs.rename(staging, path)
-    fs.delete(backup)
-    return len(table_files(spark, path))
 
 
 def skew_salt(df: DataFrame, key: str, n_salts: int = 8) -> DataFrame:

@@ -11,8 +11,8 @@ WITHOUT rescanning history. The maintenance step:
    pruning does the work — the unaffected history is never opened),
 3. merges mergeable partial aggregates (count, sum; avg derives from
    them — never stored, since averages don't merge),
-4. rewrites just the touched partitions via dynamic partition
-   overwrite.
+4. stages just the touched partitions and publishes each by an atomic
+   directory rename.
 
 At 100 TB this is the difference between an O(new data) nightly job
 and an O(history) one. Correctness contract: maintenance result ==
@@ -24,11 +24,13 @@ splits.
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from data_pipeline_with_big_data_stack_spark.operators import fsio
-from data_pipeline_with_big_data_stack_spark.session import materialize
 
 ROLLUP_DIMS = ("event_type",)  # default dims — callers can pass their own
 ROLLUP_KEYS = ("__date", "bucket", *ROLLUP_DIMS)
@@ -170,92 +172,74 @@ def rollup_aggregate(
 def build_rollup(
     events: DataFrame, path: str, dims: tuple[str, ...] = ROLLUP_DIMS
 ) -> None:
-    """Initial materialization, partitioned by day."""
-    rollup_aggregate(events, dims).write.mode("overwrite").partitionBy(
-        "__date"
-    ).parquet(path)
+    """Initial materialization, partitioned by day; the store's schema
+    is recorded after the write."""
+    rolled = rollup_aggregate(events, dims)
+    rolled.write.mode("overwrite").partitionBy("__date").parquet(path)
+    _record_schema(fsio.Fs(events.sparkSession, path), path, _schema_of(rolled))
 
 
 def touched_slice(spark: SparkSession, path: str, touched: list) -> DataFrame:
     """The rollup rows for the touched day partitions ONLY — the isin
     filter lands in the scan's PartitionFilters, so unaffected history
     is never opened (plan-pinned in tests/test_plans.py)."""
-    return spark.read.parquet(path).filter(F.col("__date").isin(touched))
+    return _read_store(spark, path).filter(F.col("__date").isin(touched))
 
 
-def _fs(spark: SparkSession, path: str):
-    """(jvm, FileSystem, Path) for ``path`` — Hadoop FS API so any
-    scheme (file:, s3a:, hdfs:) answers correctly."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jvm, hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+# The store's schema, recorded once as Spark's StructType JSON — the
+# Druid dimensionsSpec/metricsSpec analogue. build_rollup writes it
+# after its write; apply_increment writes it under the writer lock
+# before any partition of a new or widened store publishes; readers
+# never write it. Reads pass it to ``spark.read.schema``, so neither a
+# footer-inference job nor, once a store has evolved, an all-footers
+# mergeSchema job runs, and a store whose every day has expired still
+# reads (as empty) with all its dims. Name starts with "_" and carries
+# no "=", so Spark's file index never sees it.
+_SCHEMA_FILE = "_schema.json"
 
 
-# Written (atomically, BEFORE the first widened partition can publish)
-# the moment a store's dim set grows via on_new_columns="evolve".
-# Schema-merged reads are gated on it: mergeSchema launches a
-# distributed all-footers job on EVERY read — O(store files) per
-# maintenance call / dashboard serve — which a never-evolved store
-# (all footers identical) pays for nothing (guide §6, r15). Name starts
-# with "_" and carries no "=", so Spark's file index never sees it.
-_EVOLVED_MARKER = "_schema_evolved"
+def _schema_of(df: DataFrame) -> StructType:
+    """The schema a read of ``df``'s partitioned write returns: data
+    columns in order, then the ``__date`` partition column, all
+    nullable."""
+    fields = [f for f in df.schema if f.name != "__date"] + [df.schema["__date"]]
+    return StructType([StructField(f.name, f.dataType) for f in fields])
 
 
-def _read_store(spark: SparkSession, path: str) -> DataFrame:
-    """Read the rollup store, schema-merged ONLY when it has actually
-    evolved. An evolved store's pre-evolution partitions lack the
-    newest dimension, and single-footer inference could sample one of
-    them and hide the dim — so the evolve path persists
-    ``_EVOLVED_MARKER`` and every reader honors it. A crash between the
-    marker write and the widened publish leaves a marker on a uniform
-    store: the merged read is then merely redundant, never wrong.
+def _recorded_schema(fs: fsio.Fs, path: str) -> StructType | None:
+    try:
+        text = fs.read_text(f"{path.rstrip('/')}/{_SCHEMA_FILE}")
+    except FileNotFoundError:
+        return None
+    return StructType.fromJson(json.loads(text))
 
-    Two documented caveats (ADVICE r15), both bounded to a store's ONE
-    first-evolution event:
 
-    - **Reader race on first evolution.** The maintenance lock
-      serializes writers only; a concurrent lock-less reader that
-      passed this marker check just before the marker write can list
-      files after the widened partition publishes and infer a single
-      pre-evolution footer — a transiently narrowed schema (the evolved
-      dim invisible for that one read), the schema-shaped sibling of
-      the documented transient-FNF read. ``serve_rollup`` self-heals
-      the caller-visible case (a REQUESTED dim missing triggers a
-      merged re-read); dims=None readers in that window see the
-      pre-evolution dims once, exactly as a read a moment earlier
-      would have.
+def _record_schema(fs: fsio.Fs, path: str, schema: StructType) -> None:
+    fs.write_text_atomic(f"{path.rstrip('/')}/{_SCHEMA_FILE}", schema.json())
 
-    - **Stores evolved by PRE-marker code** (before r15) have mixed
-      footers but no marker. ``serve_rollup`` migrates them on first
-      touch of an evolved dim (merged re-read + marker write); an
-      ``apply_increment(dims=None)`` against such a store, however,
-      infers the shrunken dim set and re-aggregates its touched
-      partitions without the evolved dim — touch the marker file
-      (or serve the evolved dim once) BEFORE resuming maintenance on
-      a pre-marker evolved store."""
-    jvm, fs, root = _fs(spark, path)
-    r = spark.read
-    if fs.exists(jvm.org.apache.hadoop.fs.Path(root, _EVOLVED_MARKER)):
-        r = r.option("mergeSchema", "true")
-    return r.parquet(path)
+
+def _read_store(
+    spark: SparkSession, path: str, schema: StructType | None = None
+) -> DataFrame:
+    """Read the rollup store with its recorded ``schema`` (looked up
+    when not given). A store written before schemas were recorded has
+    no ``_schema.json``: its footers are read schema-merged — an
+    evolved store's pre-evolution footers lack the newest dim, so a
+    single-footer inference could hide it — until its next publishing
+    maintenance call records the schema."""
+    if schema is None:
+        schema = _recorded_schema(fsio.Fs(spark, path), path)
+    if schema is None:
+        return spark.read.option("mergeSchema", "true").parquet(path)
+    return spark.read.schema(schema).parquet(path)
 
 
 def _visible_to_spark(name: str) -> bool:
     """Mirror Spark's file-index path filter: names starting with ``.``
     or ``_`` are hidden UNLESS they carry a partition ``=`` — so
     ``__date=...`` partition dirs count as store content while
-    ``.staging_batch_*`` / ``_applied_*`` / ``_SUCCESS`` do not."""
+    ``.staging_batch`` / ``_applied_*`` / ``_schema.json`` do not."""
     return "=" in name or not name.startswith((".", "_"))
-
-
-def _store_exists(spark: SparkSession, path: str) -> bool:
-    _, fs, hpath = _fs(spark, path)
-    if not fs.exists(hpath):
-        return False
-    return any(
-        _visible_to_spark(st.getPath().getName())
-        for st in fs.listStatus(hpath)
-    )
 
 
 # --------------------------------------------------------------------------
@@ -263,23 +247,26 @@ def _store_exists(spark: SparkSession, path: str) -> bool:
 # crash between two touched-partition writes followed by a retry would
 # re-merge the batch into partitions it already updated — double
 # counting. The fix is a per-partition batch marker committed ATOMICALLY
-# with the partition's data: the merged output for a batch is staged
-# under ``<store>/.staging_batch_<id>/`` together with an
-# ``_applied_<id>`` marker file in each staged partition dir, then
-# published one directory RENAME per partition (rename is the one atomic
-# primitive every Hadoop filesystem gives us). A retry of the same batch
-# skips every partition whose live dir already carries the marker and
-# recomputes only the rest — whose store content the crashed attempt
+# with the partition's data: the merged output for a call is staged
+# under ``<store>/.staging_batch/`` — with an ``_applied_<batch_id>``
+# marker file in each staged partition dir when the caller passes a
+# ``batch_id`` — then published one directory RENAME per partition
+# (rename is the one atomic primitive every Hadoop filesystem gives us;
+# schemes that rename by copy+delete are refused). A retry of the same
+# batch skips every partition whose live dir already carries the marker
+# and recomputes only the rest — whose store content the crashed attempt
 # never replaced. Marker/staging/trash names start with ``.``/``_`` and
 # carry no ``=``, so Spark's file index never sees them.
 #
-# Reader caveat (same as any dynamic partition overwrite, and as
-# Druid's segment handoff): a query that LISTED the store's files just
-# before a publish renamed a partition away can fail with a transient
+# Reader caveat (same as any partition overwrite, and as Druid's
+# segment handoff): a query that LISTED the store's files just before a
+# publish renamed a partition away can fail with a transient
 # file-not-found — readers retry. The lock (the `fsio` lease, under this
 # store's suffix) serializes WRITERS only.
 # --------------------------------------------------------------------------
 _LOCK_SUFFIX = ".__maintenance_lock"
+_STAGING = ".staging_batch"
+_TRASH = ".trash_batch"
 
 
 def _batch_token(batch_id) -> str:
@@ -293,57 +280,53 @@ def _marker_name(token: str) -> str:
     return f"_applied_{token}"
 
 
-def _recover(spark: SparkSession, path: str) -> None:
+def _require_atomic_rename(fs: fsio.Fs, path: str) -> None:
+    """:func:`_recover` infers crash state from which directories exist
+    — sound only where a rename cannot be half-applied. Object-store
+    renames are copy+delete: a crash mid-publish would leave a PARTIAL
+    live partition that the "live exists ⇒ publish finished" rule would
+    then treat as final, deleting the trashed original."""
+    if not fs.rename_is_atomic:
+        raise NotImplementedError(
+            "rollup maintenance publishes partitions by rename and "
+            f"requires an atomic-rename filesystem; {path!r} ({fs.scheme}) "
+            "renames by copy+delete. On object stores, keep the data in a "
+            "generation-versioned store (operators/generations), which "
+            "publishes by a pointer write instead of a rename"
+        )
+
+
+def _recover(fs: fsio.Fs, path: str) -> None:
     """Roll the store forward/back out of any crashed publish. For every
-    ``.trash_batch_*/__date=D`` entry: if the live partition exists the
+    ``.trash_batch*/__date=D`` entry: if the live partition exists the
     publish (or a restore) already resolved D — drop the trash copy;
     otherwise the crash hit between the two renames — restore the
-    original. Runs under the maintenance lock before every merge, so a
-    retry always reads a consistent store."""
-    jvm, fs, root = _fs(spark, path)
-    if not fs.exists(root):
-        return
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if name.startswith(".trash_batch_"):
-            for part in fs.listStatus(st.getPath()):
-                pname = part.getPath().getName()
-                dest = jvm.org.apache.hadoop.fs.Path(root, pname)
-                if fs.exists(dest):
-                    fs.delete(part.getPath(), True)
+    original. Any staging dir belongs to a dead attempt (the writer
+    lock is held) and is dropped. Runs under the maintenance lock
+    before every merge, so a retry always reads a consistent store."""
+    for name in fs.list_names(path, missing_ok=True):
+        sub = f"{path}/{name}"
+        if name.startswith(_TRASH):
+            for part in fs.list_names(sub):
+                if fs.exists(f"{path}/{part}"):
+                    fs.delete(f"{sub}/{part}")
                 else:
-                    _checked_rename(fs, part.getPath(), dest)
-            fs.delete(st.getPath(), True)
-        elif name.startswith(".staging_batch_"):
-            # under the single-writer lock any staging dir left behind
-            # belongs to a dead attempt; a retry of the same batch
-            # restages from scratch anyway, so this is pure garbage
-            fs.delete(st.getPath(), True)
+                    fs.rename(f"{sub}/{part}", f"{path}/{part}")
+            fs.delete(sub)
+        elif name.startswith(_STAGING):
+            fs.delete(sub)
 
 
-def _checked_rename(fs, src, dest) -> None:
-    """Hadoop's FileSystem.rename reports most failures (missing dest
-    parent, cross-FS move, S3A edge cases) by returning FALSE rather
-    than raising — an unchecked call would leave the store silently
-    missing a partition while the publish reports success (ADVICE r5).
-    Surface it as a retryable error instead."""
-    if not fs.rename(src, dest):
-        raise IOError(f"rename {src} -> {dest} failed (FileSystem returned false)")
-
-
-def _publish_partition(fs, jvm, root, staging, trash, part_name: str) -> None:
+def _publish_partition(fs: fsio.Fs, path: str, part: str) -> None:
     """Publish one staged partition: move the live dir (if any) to trash,
-    then rename the staged dir — data + batch marker — into place. A
+    then rename the staged dir — data (+ batch marker) — into place. A
     crash between the renames is healed by :func:`_recover` (the
     original is in trash). Module-level so the crash-injection test can
     wrap it to fail mid-publish."""
-    dest = jvm.org.apache.hadoop.fs.Path(root, part_name)
-    src = jvm.org.apache.hadoop.fs.Path(staging, part_name)
-    if fs.exists(dest):
-        if not fs.exists(trash):
-            fs.mkdirs(trash)
-        _checked_rename(fs, dest, jvm.org.apache.hadoop.fs.Path(trash, part_name))
-    _checked_rename(fs, src, dest)
+    live = f"{path}/{part}"
+    if fs.exists(live):
+        fs.rename(live, f"{path}/{_TRASH}/{part}")
+    fs.rename(f"{path}/{_STAGING}/{part}", live)
 
 
 def apply_increment(
@@ -355,25 +338,24 @@ def apply_increment(
     on_new_columns: str = "error",
 ) -> None:
     """Merge a new raw batch into the materialized rollup, touching only
-    the day partitions the batch lands in. A missing/empty store is
-    created from the batch (with ``dims`` — the first micro-batch of a
+    the day partitions the batch lands in. A missing store is created
+    from the batch (with ``dims`` — the first micro-batch of a
     streaming maintenance loop needs this); an existing store's dims
-    are read from its schema, so maintenance follows whatever dim set
-    the store was built with. An explicitly passed ``dims`` that
-    CONFLICTS with an existing store raises (it used to be silently
-    ignored) — unless the conflict is purely ADDITIVE and
-    ``on_new_columns="evolve"``, in which case the store's dim set
-    grows and pre-evolution rows serve NULL for the new dimension
-    (Druid's per-segment schema behavior).
+    are read from its recorded schema, so maintenance follows whatever
+    dim set the store was built with. An explicitly passed ``dims`` that
+    CONFLICTS with an existing store raises — unless the conflict is
+    purely ADDITIVE and ``on_new_columns="evolve"``, in which case the
+    store's dim set grows and pre-evolution rows serve NULL for the new
+    dimension (Druid's per-segment schema behavior).
 
-    With ``batch_id`` (e.g. the foreachBatch epoch id) the merge is
-    EXACTLY-ONCE under retries: each touched partition is staged with an
-    ``_applied_<batch_id>`` marker and published by atomic rename, so a
-    crashed attempt's retry skips the partitions it already published
-    and re-merges only the rest (see the machinery comment above).
-    Without ``batch_id`` the legacy dynamic-partition-overwrite path
-    runs — correct for complete, non-retried jobs. Either way the call
-    holds the store's single-writer maintenance lock.
+    Every call stages the merged touched days and publishes them by
+    per-partition rename under the store's single-writer maintenance
+    lock. With ``batch_id`` (e.g. the foreachBatch epoch id) the merge
+    is also EXACTLY-ONCE under retries: each staged partition carries an
+    ``_applied_<batch_id>`` marker, so a crashed attempt's retry skips
+    the partitions it already published and re-merges only the rest
+    (see the machinery comment above). Without ``batch_id`` no markers
+    are written — correct for complete, non-retried jobs.
 
     Batch-id contract: ids must be unique over the STORE's lifetime.
     A foreachBatch checkpoint guarantees this (epochs only replay, they
@@ -381,11 +363,14 @@ def apply_increment(
     checkpoint at an existing store re-issues epoch 0 and would be
     skipped wherever an ``_applied_0`` marker survives — start a fresh
     store (or namespace the ids) when discarding a checkpoint."""
+    fs = fsio.Fs(spark, path)
+    _require_atomic_rename(fs, path)
+    marker = None if batch_id is None else _marker_name(_batch_token(batch_id))
     fsio.break_stale_lock(spark, path, _LOCK_SUFFIX)  # self-heal after a crashed holder
     lease = fsio._acquire_lock(spark, path, _LOCK_SUFFIX)
     try:
         _apply_increment_locked(
-            spark, path, new_events, dims, batch_id, on_new_columns
+            spark, fs, path.rstrip("/"), new_events, dims, marker, on_new_columns
         )
     finally:
         lease.release()
@@ -419,31 +404,25 @@ def _evolved_dims(
 
 def _apply_increment_locked(
     spark: SparkSession,
+    fs: fsio.Fs,
     path: str,
     new_events: DataFrame,
     dims: tuple[str, ...] | None,
-    batch_id,
+    marker: str | None,
     on_new_columns: str,
 ) -> None:
-    _recover(spark, path)
-    exists = _store_exists(spark, path)
-    if not exists and batch_id is None:
-        build_rollup(new_events, path, dims if dims is not None else ROLLUP_DIMS)
-        return
-    if exists:
+    _recover(fs, path)
+    recorded = _recorded_schema(fs, path)
+    if recorded is not None or any(
+        _visible_to_spark(n) for n in fs.list_names(path, missing_ok=True)
+    ):
         # merge keys come from the STORE's schema, not the default — a
-        # store built with custom dims maintains itself with them.
-        # Schema-merged only when the store has evolved (_read_store):
-        # an evolved store's older partitions lack the newest dimension
-        # and inference must still see it; a never-evolved store skips
-        # the O(files) footer job (r15, guide §6).
-        prev_all = _read_store(spark, path)
+        # store built with custom dims maintains itself with them
+        prev_all = _read_store(spark, path, recorded)
         sdims = store_dims(prev_all)
         dims = sdims if dims is None else _evolved_dims(sdims, tuple(dims), on_new_columns)
-        evolving = tuple(dims) != tuple(sdims)
     else:
         prev_all = None
-        evolving = False
         dims = tuple(dims) if dims is not None else ROLLUP_DIMS
     # NOTE (r15): do NOT cache/checkpoint `inc` to share it between the
     # touched-day collect and the write — measured as a regression:
@@ -456,89 +435,43 @@ def _apply_increment_locked(
     touched = sorted(
         str(r["__date"]) for r in inc.select("__date").distinct().collect()
     )
-    if not touched:
-        return
-    jvm, fs, root = _fs(spark, path)
-    if batch_id is not None:
-        token = _batch_token(batch_id)
-        marker = _marker_name(token)
+    if marker is not None:
         touched = [
-            d
-            for d in touched
-            if not fs.exists(
-                jvm.org.apache.hadoop.fs.Path(root, f"__date={d}/{marker}")
-            )
+            d for d in touched if not fs.exists(f"{path}/__date={d}/{marker}")
         ]
-        if not touched:
-            return  # full retry of an already-published batch
         inc = inc.filter(F.col("__date").cast("string").isin(touched))
-    # materialize the touched slice BEFORE any write starts so the job
-    # never reads a path it is concurrently replacing (the slice is
-    # rollup rows for a handful of days — tiny)
-    if exists:
-        prev = materialize(
-            prev_all.filter(F.col("__date").cast("string").isin(touched))
-        )
+    if not touched:
+        return  # empty batch, or a full retry of an already-published one
+    merged = inc
+    if prev_all is not None:
+        # the staged write reads the live touched partitions; they are
+        # renamed away only after its job ends
         merged = (
-            prev.unionByName(inc, allowMissingColumns=True)
+            prev_all.filter(F.col("__date").cast("string").isin(touched))
+            .unionByName(inc, allowMissingColumns=True)
             .groupBy("__date", "bucket", *dims)
             .agg(*_merge_exprs())
         )
-    else:
-        merged = inc
-    if evolving:
-        # the dim set is GROWING: persist the evolution marker before
-        # any widened partition can publish, so a mixed-schema store is
-        # never readable without it. Written HERE — after the touched/
-        # already-published early-returns above (ADVICE r15) — so an
-        # evolve attempt that touches zero days (or is a full retry of
-        # a published batch) cannot strand a marker on a store that
-        # never actually widened, permanently re-enabling the O(files)
-        # merged read the marker exists to avoid. Crash between this
-        # write and the publish leaves a marker on a uniform store:
-        # the merged read is then merely redundant, never wrong.
-        out = fs.create(
-            jvm.org.apache.hadoop.fs.Path(root, _EVOLVED_MARKER), True
-        )
-        out.close()
-    _publish_increment(spark, path, merged, touched, batch_id, jvm, fs, root)
-
-
-def _publish_increment(
-    spark: SparkSession, path: str, merged, touched, batch_id, jvm, fs, root
-) -> None:
-    if batch_id is None:
-        # legacy path: dynamic overwrite replaces exactly the touched
-        # partitions; history partitions are neither read (partition-
-        # pruned filter above) nor rewritten. At-least-once: callers that
-        # can retry a crashed batch must pass batch_id.
-        prev_mode = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            merged.write.mode("overwrite").partitionBy("__date").parquet(path)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-        return
-    # exactly-once path: stage (data + marker), then publish by rename
-    token = _batch_token(batch_id)
-    marker = _marker_name(token)
-    staging = jvm.org.apache.hadoop.fs.Path(root, f".staging_batch_{token}")
-    trash = jvm.org.apache.hadoop.fs.Path(root, f".trash_batch_{token}")
-    fs.delete(staging, True)  # stale staging from a crashed attempt
-    merged.write.mode("overwrite").partitionBy("__date").parquet(
-        str(staging)
-    )
+    staging = f"{path}/{_STAGING}"
+    merged.write.mode("overwrite").partitionBy("__date").parquet(staging)
+    if marker is not None:
+        for d in touched:
+            fs.touch(f"{staging}/__date={d}/{marker}")
+    # a new, widened or not-yet-recorded store records its schema
+    # before any of its partitions publishes, so no reader ever sees a
+    # partition the recorded schema lacks. Written after the zero-touch
+    # returns above, so an evolve call that publishes nothing leaves
+    # the store as it was. A crash between this write and the publish
+    # leaves a declared dim that no partition carries yet: it serves
+    # NULL, exactly as the pre-evolution rows do.
+    schema = _schema_of(merged)
+    if schema != recorded:
+        _record_schema(fs, path, schema)
+    fs.mkdirs(f"{path}/{_TRASH}")
     for d in touched:
-        out = fs.create(
-            jvm.org.apache.hadoop.fs.Path(staging, f"__date={d}/{marker}"), True
-        )
-        out.close()
-    for d in touched:
-        _publish_partition(fs, jvm, root, staging, trash, f"__date={d}")
-    fs.delete(trash, True)
-    fs.delete(staging, True)
+        _publish_partition(fs, path, f"__date={d}")
+    fs.delete(f"{path}/{_TRASH}")
+    fs.delete(staging)
 
 
 # grains the hourly store can serve: hour buckets nest EXACTLY inside
@@ -573,33 +506,9 @@ def serve_rollup(
     tests/test_plans.py."""
     if grain not in SERVE_GRAINS:
         raise ValueError(f"grain {grain!r} not servable from an hourly rollup")
-    # schema-merged ONLY when the store has evolved (_read_store): an
-    # evolved store's pre-evolution partitions lack the newest dimension
-    # and merging surfaces it (as NULL); a never-evolved store skips the
-    # O(files) all-footers job on every dashboard serve (r15, guide §6)
     r = _read_store(spark, path)
     rollup_dims = set(store_dims(r))
     extra = set(dims) - rollup_dims
-    if extra:
-        # Pre-marker migration / self-heal (ADVICE r15): a store whose
-        # dim set was evolved by pre-marker code has mixed-schema
-        # partitions but no _EVOLVED_MARKER, so the unmerged read above
-        # can sample a pre-evolution footer and hide the evolved dim.
-        # Before refusing, re-read schema-merged ONCE (the O(files)
-        # footer job — paid only on this would-fail path); if the
-        # "missing" dims exist in the merged schema, persist the marker
-        # so every future read merges, and serve from the merged frame.
-        jvm, hfs, root = _fs(spark, path)
-        if not hfs.exists(jvm.org.apache.hadoop.fs.Path(root, _EVOLVED_MARKER)):
-            merged_r = spark.read.option("mergeSchema", "true").parquet(path)
-            if not (set(dims) - set(store_dims(merged_r))):
-                out = hfs.create(
-                    jvm.org.apache.hadoop.fs.Path(root, _EVOLVED_MARKER), True
-                )
-                out.close()
-                r = merged_r
-                rollup_dims = set(store_dims(r))
-                extra = set(dims) - rollup_dims
     if extra:
         raise ValueError(f"dims {sorted(extra)} not in the rollup (has {sorted(rollup_dims)})")
     if since is not None:
@@ -643,8 +552,7 @@ def serve_rollup(
 def read_rollup(spark: SparkSession, path: str) -> DataFrame:
     """The serving view: derived columns (avg) come from the mergeable
     state at read time."""
-    r = spark.read.parquet(path)
-    return r.select(
+    return _read_store(spark, path).select(
         "__date",
         "bucket",
         "event_type",
@@ -712,10 +620,9 @@ def expire_partitions(
 def _expire_locked(spark: SparkSession, path: str, keep_from) -> list:
     import datetime
 
-    jvm, fs, root = _fs(spark, path)
+    fs = fsio.Fs(spark, path)
     dropped = []
-    for status in fs.listStatus(root):
-        name = status.getPath().getName()
+    for name in fs.list_names(path):
         if not name.startswith("__date="):
             continue
         try:
@@ -727,6 +634,6 @@ def _expire_locked(spark: SparkSession, path: str, keep_from) -> list:
             # silent loss) and move on instead of crashing the sweep
             continue
         if day < keep_from:
-            fs.delete(status.getPath(), True)
+            fs.delete(f"{path.rstrip('/')}/{name}")
             dropped.append(day)
     return sorted(dropped)

@@ -102,8 +102,7 @@ def get_spark(
 def materialize(df):
     """Cut lineage and pin an intermediate that multiple consumers or an
     iterative loop will re-read (CC label propagation, BPE rounds, the
-    MG sketch, q15's revenue table, semdedup assignments, rollup
-    read-backs).
+    MG sketch, q15's revenue table, semdedup assignments).
 
     THE one checkpoint-policy decision point (VERDICT r6 #4 — eight call
     sites previously re-justified the same trade individually):

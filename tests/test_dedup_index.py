@@ -124,6 +124,15 @@ def _drain(spark, docs, **kw):
     return store
 
 
+@pytest.fixture(scope="module")
+def ref_drain(spark):
+    """One crash-free drain of ``_small_docs``, shared READ-ONLY by the
+    tests that compare a crashed/folded/replayed store against it — a
+    drain is deterministic, so re-draining per test only repeats the
+    same four epochs."""
+    return _drain(spark, _small_docs(spark))
+
+
 def _snapshot(spark, store):
     out = {}
     for sink in ("decisions", "bands_idx", "counts", "docstore"):
@@ -132,7 +141,7 @@ def _snapshot(spark, store):
     return out
 
 
-def test_dedup_ingest_crash_retry_equals_single_run(spark):
+def test_dedup_ingest_crash_retry_equals_single_run(spark, ref_drain):
     """Crash-injection: fail between a sink write and the checkpoint
     commit, restart, drain — every sink (including batch_id columns)
     must equal a crash-free single run. This is the exactly-once claim:
@@ -141,7 +150,7 @@ def test_dedup_ingest_crash_retry_equals_single_run(spark):
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
     docs = _small_docs(spark)
-    ref = _snapshot(spark, _drain(spark, docs))
+    ref = _snapshot(spark, ref_drain)
 
     for fail_after in ("decisions", "bands_idx", "counts", "docstore"):
         base, src = DI.stage_ordered_chunks(spark, docs, n_chunks=4)
@@ -201,10 +210,10 @@ def test_dedup_ingest_prior_counts_come_from_sidecar(spark):
     assert ep1.count() == 0
 
 
-def test_dedup_ingest_sidecar_consistent_with_index(spark):
+def test_dedup_ingest_sidecar_consistent_with_index(spark, ref_drain):
     """After a multi-epoch drain the sidecar's running max per bucket
     equals the bands index's max rank per bucket."""
-    store = _drain(spark, _small_docs(spark))
+    store = ref_drain
     from_counts = (
         spark.read.parquet(store.counts)
         .groupBy("band", "band_key")
@@ -469,7 +478,7 @@ def test_gc_drops_small_numbered_orphan_and_keeps_published_predecessor(spark, t
     )
 
 
-def test_compact_after_crashed_drain_preserves_committed_state_only(spark):
+def test_compact_after_crashed_drain_preserves_committed_state_only(spark, ref_drain):
     """The fold target must come from the CHECKPOINT's commit log: a
     drain that crashed between a sink write and the checkpoint commit
     leaves a half-written epoch dir on disk whose id Spark REUSES on
@@ -479,7 +488,7 @@ def test_compact_after_crashed_drain_preserves_committed_state_only(spark):
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
     docs = _small_docs(spark)
-    ref_store = _drain(spark, docs)
+    ref_store = ref_drain
     ref_dec = sorted(
         map(tuple, spark.read.parquet(ref_store.decisions).drop("batch_id").collect())
     )
@@ -609,7 +618,7 @@ def test_next_gen_survives_six_digit_rollover(spark, tmp_path):
     assert G.next_gen(root) == "gen-1000001"
 
 
-def test_self_maintaining_drain_equals_plain_drain(spark):
+def test_self_maintaining_drain_equals_plain_drain(spark, ref_drain):
     """compact_every folds the store from INSIDE the drain (under the
     already-held writer lock) every N epochs — decisions must equal the
     plain drain's, the store must end folded (bounded epoch-dir count),
@@ -622,7 +631,7 @@ def test_self_maintaining_drain_equals_plain_drain(spark):
     from data_pipeline_with_big_data_stack_spark.operators import segman
 
     docs = _small_docs(spark)
-    ref_store = _drain(spark, docs)
+    ref_store = ref_drain
     ref = sorted(
         map(
             tuple,
@@ -853,7 +862,7 @@ def test_monotone_ingest_watermark_enforced_on_dedup_store(spark, tmp_path):
     )
 
 
-def test_replay_from_arbitrary_sink_subset(spark, monkeypatch):
+def test_replay_from_arbitrary_sink_subset(spark, monkeypatch, ref_drain):
     """r16: the epoch's data-sink publishes run CONCURRENTLY in
     production (`_publish_epoch_sinks`), so a real crash can leave ANY
     subset of sinks written — not just the sequential prefixes the
@@ -866,7 +875,7 @@ def test_replay_from_arbitrary_sink_subset(spark, monkeypatch):
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
     docs = _small_docs(spark)
-    ref = _snapshot(spark, _drain(spark, docs))
+    ref = _snapshot(spark, ref_drain)
 
     base, src = DI.stage_ordered_chunks(spark, docs, n_chunks=4)
     store = DI.init_dedup_ingest_store(spark, base)

@@ -284,18 +284,38 @@ def test_write_text_atomic_object_store_branch_is_direct_put(spark, tmp_path):
 
 
 def test_inplace_swap_ops_refuse_non_atomic_rename_schemes(spark, tmp_path, monkeypatch):
-    """The in-place compaction swap (``layout.compact_table``) infers
-    crash state from directory existence — unsound where rename is
-    copy+delete. On such schemes it must refuse with a pointer to the
-    generation-versioned stores, which publish by a pointer write."""
+    """The rollup publish (``rollup_maintenance.apply_increment``)
+    swaps live partition dirs for staged ones and infers crash state
+    from directory existence — unsound where rename is copy+delete: a
+    half-copied live partition would read as "publish finished" and its
+    trashed original would be deleted. On such schemes it must refuse
+    BEFORE touching the store, pointing at the generation-versioned
+    stores, which publish by a pointer write."""
     import pytest as _pytest
 
-    from data_pipeline_with_big_data_stack_spark.operators import layout
+    from data_pipeline_with_big_data_stack_spark.operators import (
+        rollup_maintenance as RM,
+    )
+    from data_pipeline_with_big_data_stack_spark.tables import load_table
+    from tests.conftest import SF_SMOKE
 
+    e = load_table(spark, SF_SMOKE, "events")
+    path = str(tmp_path / "rollup")
+    RM.build_rollup(e.filter("event_id % 2 = 0"), path)
+
+    def snapshot():
+        return sorted(
+            (os.path.relpath(os.path.join(d, f), path), os.stat(os.path.join(d, f)).st_mtime_ns)
+            for d, _dirs, files in os.walk(path)
+            for f in files
+        )
+
+    before = snapshot()
     monkeypatch.setattr(fsio, "_ATOMIC_RENAME_SCHEMES", frozenset())
-    path = str(tmp_path / "idx")
     with _pytest.raises(NotImplementedError, match="generation-versioned"):
-        layout.compact_table(spark, path)
+        RM.apply_increment(spark, path, e.filter("event_id % 2 = 1"), batch_id=1)
+    assert snapshot() == before, "the refused publish changed the store"
+    assert not os.path.exists(path + RM._LOCK_SUFFIX)
 
 
 def test_rename_refuses_existing_destination(spark, tmp_path):

@@ -1,5 +1,5 @@
-"""Physical-layout tests: bucketed join shuffle elimination, compaction,
-salted aggregation equivalence."""
+"""Physical-layout tests: bucketed join shuffle elimination, salted
+aggregation equivalence, z-order clustering."""
 
 from __future__ import annotations
 
@@ -51,19 +51,6 @@ def test_bucketed_groupby_uses_bucket_layout(spark, bucketed_pair):
     agg = spark.table(ot).groupBy("o_custkey").agg(F.sum("o_totalprice").alias("t"))
     plan = agg._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan  # bucket layout satisfies the clustering
-
-
-def test_compaction_reduces_files_preserves_rows(spark, tmp_path):
-    p = str(tmp_path / "shards")
-    df = spark.range(20_000).withColumn("v", F.rand(5))
-    df.repartition(64).write.parquet(p)  # 64 small files
-    before_files = len(layout.table_files(spark, p))
-    before_rows = spark.read.parquet(p).count()
-    before_sum = spark.read.parquet(p).agg(F.sum("id")).collect()[0][0]
-    after_files = layout.compact_table(spark, p, target_file_bytes=10 * 1024 * 1024)
-    assert after_files < before_files
-    assert spark.read.parquet(p).count() == before_rows
-    assert spark.read.parquet(p).agg(F.sum("id")).collect()[0][0] == before_sum
 
 
 def test_skew_salt_two_phase_agg_equivalence(spark):
@@ -137,36 +124,3 @@ class TestZOrder:
             back.select(F.sum("event_id")).head()[0]
             == e.select(F.sum("event_id")).head()[0]
         )
-
-
-def test_compaction_crash_between_renames_recovers(spark, tmp_path):
-    """A crash between the swap's two renames leaves the table dir
-    missing and the original parked at __precompact; the next
-    compaction (or search) entry restores it and loses nothing."""
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from data_pipeline_with_big_data_stack_spark.operators.layout import (
-        compact_table,
-        recover_compaction,
-        table_files,
-    )
-
-    path = str(tmp_path / "t")
-    spark.range(1000).select("id", (F.col("id") % 7).alias("k")).coalesce(
-        4
-    ).write.parquet(path)
-    before = spark.read.parquet(path).count()
-    # simulate: staged rewrite done, original renamed away, crash
-    shutil.copytree(path, path + "__compacting")
-    os.rename(path, path + "__precompact")
-    assert not os.path.exists(path)
-    assert recover_compaction(path) is True
-    assert spark.read.parquet(path).count() == before
-    # and a straight compact_table call on a healthy dir still works
-    n = compact_table(spark, path, target_file_bytes=1 << 30)
-    assert n == 1 and spark.read.parquet(path).count() == before
-    assert not os.path.exists(path + "__precompact")
-    assert len(table_files(spark, path)) == 1

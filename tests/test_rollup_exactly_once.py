@@ -209,11 +209,12 @@ def test_schema_evolution_backfills_null(spark, tmp_path):
         on_new_columns="evolve",
         batch_id=11,
     )
-    # the evolution marker is what re-enables schema-merged reads (a
-    # never-evolved store reads single-footer — r15); it must exist the
-    # moment the store can hold mixed-schema partitions
-    assert os.path.exists(os.path.join(path, RM._EVOLVED_MARKER)), (
-        "evolve path must persist the schema-evolution marker"
+    # every read passes the recorded schema to spark.read.schema; it
+    # must hold the new dim the moment the store can hold mixed-schema
+    # partitions
+    recorded = RM._recorded_schema(fsio.Fs(spark, path), path)
+    assert recorded is not None and "user_id" in recorded.names, (
+        "evolve path must record the widened schema"
     )
     served = RM.serve_rollup(
         spark, path, grain="day", dims=("event_type", "user_id")
@@ -229,10 +230,8 @@ def test_schema_evolution_backfills_null(spark, tmp_path):
         for r in RM.serve_rollup(spark, str(_build_full(spark, tmp_path, e)), grain="hour").collect()
     }
     # a LATER increment with dims=None must maintain the EVOLVED dim
-    # set: the marker-gated schema-merged read is what surfaces the new
-    # dimension when single-footer inference could sample a
-    # pre-evolution partition (r15 — never-evolved stores skip the
-    # all-footers mergeSchema job; this pins that evolved stores don't)
+    # set: the recorded schema surfaces the new dimension where
+    # single-footer inference could sample a pre-evolution partition
     before = {
         (r.bucket, r.event_type, r.user_id): r.n_events
         for r in RM.serve_rollup(
@@ -334,7 +333,7 @@ def test_sequential_batches_with_ids_equal_full_recompute(spark, tmp_path):
     assert _final(spark, path) == _expected(spark, tmp_path, e)
     debris = [
         d for d in os.listdir(path)
-        if d.startswith((".staging_batch_", ".trash_batch_"))
+        if d.startswith((RM._STAGING, RM._TRASH))
     ]
     assert debris == []
 
@@ -455,28 +454,37 @@ def test_publish_rename_failure_raises(spark, tmp_path, monkeypatch):
     """ADVICE r5: Hadoop rename reports most failures by returning
     false. A false return during publish must surface as an error, not
     a silently inconsistent store."""
-    import pytest
-
     e = load_table(spark, SF_SMOKE, "events")
     initial, late = _split(e)
     path = str(tmp_path / "store")
     RM.build_rollup(initial, path)
 
-    real = RM._checked_rename
+    real_init = fsio.Fs.__init__
     calls = {"n": 0}
 
-    def lying(fs, src, dest):
-        calls["n"] += 1
-        if calls["n"] == 1:
-            # simulate FileSystem.rename returning false (the dest is
-            # NOT moved — exactly the partial state a false return means)
-            raise IOError(f"rename {src} -> {dest} failed (FileSystem returned false)")
-        return real(fs, src, dest)
+    class FirstRenameReturnsFalse:
+        """The Hadoop FileSystem, except that its first rename moves
+        nothing and returns false."""
 
-    monkeypatch.setattr(RM, "_checked_rename", lying)
-    with pytest.raises(Exception, match="rename .* failed"):
+        def __init__(self, jfs):
+            self._jfs = jfs
+
+        def __getattr__(self, name):
+            return getattr(self._jfs, name)
+
+        def rename(self, src, dest):
+            calls["n"] += 1
+            return calls["n"] > 1 and self._jfs.rename(src, dest)
+
+    def lying_init(self, spark, base):
+        real_init(self, spark, base)
+        self._fs = FirstRenameReturnsFalse(self._fs)
+
+    monkeypatch.setattr(fsio.Fs, "__init__", lying_init)
+    with pytest.raises(OSError, match="rename failed"):
         RM.apply_increment(spark, path, late, batch_id=13)
-    monkeypatch.setattr(RM, "_checked_rename", real)
+    assert calls["n"] == 1
+    monkeypatch.setattr(fsio.Fs, "__init__", real_init)
     # the failure is retryable: the same epoch converges to recompute
     RM.apply_increment(spark, path, late, batch_id=13)
     assert _final(spark, path) == _expected(spark, tmp_path, e)
@@ -555,3 +563,94 @@ def test_failed_body_write_does_not_leave_empty_lock(spark, tmp_path, monkeypatc
     lease = fsio._acquire_lock(spark, path, RM._LOCK_SUFFIX)  # path is immediately usable
     lease.release()
     assert not os.path.exists(lock)
+
+
+def test_expired_to_empty_store_serves_empty_and_keeps_its_dims(spark, tmp_path):
+    """A store whose every day has expired still has its recorded
+    schema: a serve returns 0 rows instead of failing to infer a schema
+    from no files, and the next increment maintains the store's dims
+    instead of re-creating it with the default ones."""
+    e = load_table(spark, SF_SMOKE, "events").withColumn(
+        "region", (F.col("user_id") % 3).cast("string")
+    )
+    path = str(tmp_path / "store")
+    RM.build_rollup(e, path, dims=("event_type", "region"))
+    assert RM.expire_partitions(spark, path, "2100-01-01")
+    assert not any(d.startswith("__date=") for d in os.listdir(path))
+    served = RM.serve_rollup(spark, path, grain="day", dims=("event_type", "region"))
+    assert served.count() == 0
+    late = e.filter(F.col("event_id") % 7 == 0)
+    RM.apply_increment(spark, path, late, batch_id=5)
+    assert RM.store_dims(RM._read_store(spark, path)) == ("event_type", "region")
+    rows = RM.serve_rollup(
+        spark, path, grain="day", dims=("event_type", "region")
+    ).collect()
+    assert sum(r.n_events for r in rows) == late.count()
+    assert all(r.region is not None for r in rows)
+
+
+def test_store_without_recorded_schema_keeps_its_evolved_dim(spark, tmp_path):
+    """A store evolved by earlier code has mixed footers and no
+    ``_schema.json``. When the first footer Spark lists predates the
+    evolution, single-footer inference hides the evolved dim, and a
+    ``dims=None`` increment would re-aggregate its touched days without
+    it. Such a store is read schema-merged until a maintenance call
+    records its schema, so the increment keeps the dim."""
+    e = load_table(spark, SF_SMOKE, "events")
+    path = str(tmp_path / "store")
+    RM.build_rollup(e.filter(F.col("event_id") % 3 != 0), path)
+    days = [d for d in os.listdir(path) if d.startswith("__date=")]
+    # widen the last-listed day, so the first-listed footer predates
+    # the evolution
+    first, widened = days[0], days[-1]
+    on_day = F.to_date("ts") == F.lit(widened.split("=", 1)[1]).cast("date")
+    late = e.filter(F.col("event_id") % 3 == 0)
+    RM.apply_increment(
+        spark,
+        path,
+        late.filter(on_day),
+        dims=("event_type", "user_id"),
+        on_new_columns="evolve",
+        batch_id=1,
+    )
+    os.remove(os.path.join(path, RM._SCHEMA_FILE))  # as earlier code left it
+    assert "user_id" not in spark.read.parquet(path).columns, (
+        "precondition: the first-listed footer must predate the evolution"
+    )
+    on_first = F.to_date("ts") == F.lit(first.split("=", 1)[1]).cast("date")
+    RM.apply_increment(spark, path, late.filter(on_first), batch_id=2)
+    assert "user_id" in spark.read.parquet(os.path.join(path, first)).columns
+    assert "user_id" in RM._recorded_schema(fsio.Fs(spark, path), path).names
+    rows = RM.serve_rollup(
+        spark, path, grain="day", dims=("event_type", "user_id")
+    ).collect()
+    assert sum(r.n_events for r in rows) == e.filter(
+        (F.col("event_id") % 3 != 0) | on_day | on_first
+    ).count()
+    assert sum(r.n_events for r in rows if r.user_id is not None) == late.filter(
+        on_day | on_first
+    ).count()
+
+
+def test_serve_plan_launches_no_spark_job(spark, tmp_path):
+    """A store with a recorded schema is read without schema inference:
+    building a serve plan launches no Spark job, and the recorded
+    schema is the one inference would give."""
+    e = load_table(spark, SF_SMOKE, "events")
+    path = str(tmp_path / "store")
+    RM.build_rollup(e, path)
+    assert RM._recorded_schema(fsio.Fs(spark, path), path) == (
+        spark.read.parquet(path).schema
+    )
+    sc = spark.sparkContext
+    group = "rollup-serve-plan-probe"
+    sc.setJobGroup(group, group)
+    try:
+        served = RM.serve_rollup(
+            spark, path, grain="hour", with_distinct=True, since="2024-01-02"
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert served.count() > 0
