@@ -368,24 +368,18 @@ def serve_only_probes(spark, sf_dir: str) -> dict:
         # --- carry cost of the store maintenance protocol (VERDICT r11
         # #1 done-criterion): run a full fold, one more trickle epoch,
         # then an INCREMENTAL fold — the step that CARRIES the folded
-        # base across generations — and report both its latency and the
-        # bytes the carry physically duplicated (fsio.BYTES_CLONED
-        # delta). Under the manifest-reference layout the carry is a
-        # small manifest write: the byte metric measures 0 on every
-        # scheme, as a measurement rather than an assumption. ---
+        # base across generations, by manifest reference — and report
+        # its latency. ---
         try:
-            from data_pipeline_with_big_data_stack_spark.operators import fsio
             from data_pipeline_with_big_data_stack_spark.operators.dedup_ingest import (
                 compact_dedup_ingest_store,
             )
 
             compact_dedup_ingest_store(spark, st4, 1 << 30)  # full fold base
             dedup_ingest_batch(trickle2, 2, st4, max_bucket=_LSH_MAX_BUCKET)
-            cloned0 = fsio.BYTES_CLONED
             t0 = time.perf_counter()
             compact_dedup_ingest_store(spark, st4, 1 << 30, full=False)
             out["dedup_incr_fold_sec"] = round(time.perf_counter() - t0, 3)
-            out["fold_carry_bytes_moved"] = fsio.BYTES_CLONED - cloned0
         except Exception as exc:  # noqa: BLE001 - isolated: a fold-probe
             # failure must not erase the six standing serve metrics
             # already in `out` (the round-2 "one crasher erased the
@@ -398,11 +392,8 @@ def serve_only_probes(spark, sf_dir: str) -> dict:
         # of the 4 id-ordered chunks into the window-fingerprint index
         # (untimed), time ONE incremental micro-batch (idempotent
         # same-eid replay for best-of-3), then a full fold, one trickle
-        # epoch, and the INCREMENTAL fold — the carried-bytes metric
-        # measures that fold partitions move by manifest reference on
-        # this layout too. ---
+        # epoch, and the INCREMENTAL fold. ---
         try:
-            from data_pipeline_with_big_data_stack_spark.operators import fsio
             from data_pipeline_with_big_data_stack_spark.operators.substring_ingest import (
                 compact_substring_ingest_store,
                 init_substring_store,
@@ -420,11 +411,9 @@ def serve_only_probes(spark, sf_dir: str) -> dict:
             out["substring_ingest_batch_sec"] = round(best, 3)
             compact_substring_ingest_store(spark, sstore, 1 << 30)  # full base
             substring_ingest_batch(trickle, 4, sstore)
-            cloned0 = fsio.BYTES_CLONED
             t0 = time.perf_counter()
             compact_substring_ingest_store(spark, sstore, 1 << 30, full=False)
             out["substring_incr_fold_sec"] = round(time.perf_counter() - t0, 3)
-            out["substring_fold_carry_bytes_moved"] = fsio.BYTES_CLONED - cloned0
         except Exception as exc:  # noqa: BLE001 - isolated, as above
             out["substring_fold_error"] = f"{type(exc).__name__}: {exc}"[:200]
     finally:

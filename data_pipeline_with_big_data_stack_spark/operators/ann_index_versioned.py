@@ -80,17 +80,6 @@ from data_pipeline_with_big_data_stack_spark.operators.generations import (
     _index_write_lock,
 )
 
-# pointer/GC primitives live in operators/generations (shared with the
-# streaming-dedup store's compactor); the names below are this module's
-# original surface, kept as aliases.
-_POINTER = G.POINTER
-_GEN_PREFIX = G.GEN_PREFIX
-_gen_name = G.gen_name
-_list_generations = G.list_generations
-_publish = G.publish
-_gc = G.gc_generations
-_next_gen = G.next_gen
-
 # the three component tables a generation carries; "index" holds the
 # codes (partitioned by cell_id), the other two are flat sidecars
 _SIDECARS = ("index_codebook", "index_pq_codebook")
@@ -126,7 +115,6 @@ def _ref_sidecars(fs: fsio.Fs, root: str, cur: str, gen: str) -> None:
             os.path.join(root, gen, comp),
             segman.resolve_all(fs, os.path.join(root, cur, comp)),
             merge="union",
-            reuse_from=os.path.join(root, cur, comp),
         )
 
 
@@ -146,7 +134,7 @@ def build_ivfpq_versioned(
     lease = _index_write_lock(vecs.sparkSession, root)
     try:
         prev = G.read_current_or_none(root, fs=fs)
-        gen = _next_gen(root, fs=fs)
+        gen = G.next_gen(root, fs=fs)
         build_ivfpq_index(
             vecs,
             _gen_index(root, gen),
@@ -155,8 +143,8 @@ def build_ivfpq_versioned(
             sub_dim=sub_dim,
             id_col=id_col,
         )
-        _publish(root, gen, fs=fs)
-        _gc(root, gen, prev, fs=fs)
+        G.publish(root, gen, fs=fs)
+        G.gc_generations(root, gen, prev, fs=fs)
         return gen
     finally:
         lease.release()
@@ -198,14 +186,13 @@ def append_ivfpq_versioned(
     try:
         cur = G.read_current(root, init_hint="build_ivfpq_versioned", fs=fs)
         cur_index = _gen_index(root, cur)
-        gen = _next_gen(root, fs=fs)
+        gen = G.next_gen(root, fs=fs)
         gen_index = _gen_index(root, gen)
         segman.write_manifest(
             fs,
             gen_index,
             segman.resolve_all(fs, cur_index),
             merge="union",
-            reuse_from=cur_index,
         )
         _ref_sidecars(fs, root, cur, gen)
         pq_rows = segman.read_table(spark, fs, cur_index + "_pq_codebook")
@@ -217,8 +204,8 @@ def append_ivfpq_versioned(
         )
         coded = _coded_projection(vecs, books, n_sub, id_col)
         coded.write.mode("append").partitionBy("cell_id").parquet(gen_index)
-        _publish(root, gen, fs=fs)
-        _gc(root, gen, cur, fs=fs)
+        G.publish(root, gen, fs=fs)
+        G.gc_generations(root, gen, cur, fs=fs)
         return gen
     finally:
         lease.release()
@@ -272,7 +259,7 @@ def compact_ivfpq_versioned(
         per_cell = _per_cell_file_counts(fs, entries)
         if not per_cell or max(per_cell.values()) <= max_files_per_cell:
             return None
-        gen = _next_gen(root, fs=fs)
+        gen = G.next_gen(root, fs=fs)
         df = segman.read_table(spark, fs, cur_index)
         (
             df.repartition(len(per_cell), F.col("cell_id"))
@@ -281,8 +268,8 @@ def compact_ivfpq_versioned(
             .parquet(_gen_index(root, gen))
         )
         _ref_sidecars(fs, root, cur, gen)
-        _publish(root, gen, fs=fs)
-        _gc(root, gen, cur, fs=fs)
+        G.publish(root, gen, fs=fs)
+        G.gc_generations(root, gen, cur, fs=fs)
         return gen
     finally:
         lease.release()
@@ -335,7 +322,7 @@ def expire_ivfpq_versioned(
         cells = sorted(tomb_agg["cells"])
         if not cells:
             return None
-        gen = _next_gen(root, fs=fs)
+        gen = G.next_gen(root, fs=fs)
         gen_index = _gen_index(root, gen)
         affected = index.filter(F.col("cell_id").isin(cells))
         if predicate is not None:  # null-coalesced above: ~pred is total
@@ -367,10 +354,10 @@ def expire_ivfpq_versioned(
                 .write.mode("overwrite")
                 .parquet(os.path.join(gen_index, "cell_id=-1"))
             )
-        segman.write_manifest(fs, gen_index, refs, merge="union", reuse_from=cur_index)
+        segman.write_manifest(fs, gen_index, refs, merge="union")
         _ref_sidecars(fs, root, cur, gen)
-        _publish(root, gen, fs=fs)
-        _gc(root, gen, cur, fs=fs)
+        G.publish(root, gen, fs=fs)
+        G.gc_generations(root, gen, cur, fs=fs)
         return gen
     finally:
         lease.release()
@@ -439,7 +426,7 @@ def retrain_ivfpq_versioned(
         coarse_cb, pq_cbs = train_ivfpq_codebooks(
             vecs, k_coarse, k_pq, sub_dim, n_sub, iters=iters, id_col=id_col
         )
-        gen = _next_gen(root, fs=fs)
+        gen = G.next_gen(root, fs=fs)
         build_ivfpq_index(
             vecs,
             _gen_index(root, gen),
@@ -448,8 +435,8 @@ def retrain_ivfpq_versioned(
             sub_dim=sub_dim,
             id_col=id_col,
         )
-        _publish(root, gen, fs=fs)
-        _gc(root, gen, cur, fs=fs)
+        G.publish(root, gen, fs=fs)
+        G.gc_generations(root, gen, cur, fs=fs)
         return gen
     finally:
         lease.release()

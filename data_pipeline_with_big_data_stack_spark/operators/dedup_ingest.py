@@ -1210,7 +1210,7 @@ def _compact_into_new_generation(
             if (-1 < e <= lo) or e > hi
         }
         if refs:
-            segman.write_manifest(fs, dst, refs, merge="shadow", reuse_from=src)
+            segman.write_manifest(fs, dst, refs, merge="shadow")
         n_files = None
         if report:
             # LOGICAL file count — physical partitions plus carried
@@ -1252,8 +1252,8 @@ def _compact_into_new_generation(
             if n_files is not None:
                 out[sink] = n_files
     new_full_mark = marker if full else full_mark
-    G.atomic_write(
-        os.path.join(gen_dir, _FOLD_MARKER), f"{marker} {new_full_mark}\n", fs=fs
+    fs.write_text_atomic(
+        os.path.join(gen_dir, _FOLD_MARKER), f"{marker} {new_full_mark}\n"
     )
     G.publish(store.base, gen, fs=fs)
     G.gc_generations(store.base, gen, cur, grace_seconds=grace_seconds, fs=fs)

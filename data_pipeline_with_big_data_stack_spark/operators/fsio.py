@@ -6,7 +6,7 @@ IVF-PQ index (`operators/ann_index_versioned`) and the rollup store
 (`operators/rollup_maintenance`) all need a handful of
 filesystem operations beyond what Spark's writers provide: read/write a
 small pointer file atomically, list a directory, rename a staged tree
-over a live one, measure a directory, clone a generation. Raw ``os.*``
+over a live one, measure a directory. Raw ``os.*``
 calls bound all of that to a single host's POSIX disk (VERDICT r10 —
 the compute plans survive 100×, the store protocol must too), so this
 module routes every primitive through the JVM's Hadoop ``FileSystem``
@@ -16,8 +16,8 @@ has the same seam: Druid's deep-storage abstraction
 (`M/app_druid/environment.env:20-21`) keeps segment maintenance
 independent of where segments live.
 
-Exactly two operations keep a documented local specialization, each
-with a remote-safe branch:
+One write keeps a documented local specialization, with a
+remote-safe branch:
 
 * :meth:`Fs.write_text_atomic` — locally: write-temp + fsync +
   ``os.replace`` + **fsync of the parent directory** (without the
@@ -30,12 +30,6 @@ with a remote-safe branch:
   overwrite PUT, which the store makes atomic at object granularity —
   readers see the old pointer or the new, never a torn or missing
   one.
-* :meth:`Fs.clone_tree` — locally: hardlinks (O(#files) metadata, zero
-  bytes; falls back to a real copy on ``EXDEV`` when source and
-  destination sit on different mounts). Remotely: ``FileUtil.copy``
-  (object stores have no link primitive; HDFS would use it too —
-  a manifest-reference layout could avoid even that copy, at the cost
-  of per-file manifests; the protocol is unchanged either way).
 
 Two reads also go native on ``file:`` for speed alone, with the same
 results as the Hadoop path: :meth:`Fs.read_text` and
@@ -71,11 +65,9 @@ One narrowed object-store caveat remains:
   — lives here too; each store passes its own lock-file suffix.
 
 The r11 clone-cost caveat (byte copies on linkless stores) is RETIRED:
-the generation stores now carry unchanged data across generations by
+the generation stores carry unchanged data across generations by
 manifest reference (`operators/segman`) — zero bytes moved on every
-scheme — and :meth:`Fs.clone_tree` remains only as a general utility
-(and counts any bytes it physically duplicates in
-:data:`BYTES_CLONED`, which the bench reads to pin carries at zero).
+scheme — and nothing copies a tree any more.
 """
 
 from __future__ import annotations
@@ -109,13 +101,6 @@ _ATOMIC_RENAME_SCHEMES = {
     "o3fs",
 }
 
-
-# bytes PHYSICALLY DUPLICATED by clone_tree since process start (copy
-# branches only — hardlinks move no data). The generation stores carry
-# by manifest reference and never clone, so the bench reads this
-# counter around a drain to pin "carries moved zero bytes" as a
-# measurement, not an assumption.
-BYTES_CLONED = 0
 
 # Hadoop ≥ 3.4.2 create-builder option (HADOOP-19256): push the
 # create-if-absent claim into the store's conditional write (S3
@@ -481,47 +466,6 @@ class Fs:
             raise FileExistsError(f"rename destination exists: {dst!r}")
         if not self._fs.rename(self._p(src), self._p(dst)):
             raise OSError(f"rename failed: {src!r} -> {dst!r}")
-
-    def clone_tree(self, src: str, dst: str) -> None:
-        """Copy a directory tree. Local: directories recreated, files
-        hardlinked — O(#files) metadata ops, zero bytes (parquet files
-        are immutable once written, so sharing them between trees is
-        safe; deleting either tree only unlinks its names); a
-        cross-device link error (EXDEV — src and dst on different
-        mounts) falls back to a real per-file copy. Remote:
-        ``FileUtil.copy`` (no link primitive on object stores). The
-        generation stores no longer clone at all — they carry by
-        manifest reference (`operators/segman`) — so this is a general
-        utility; any bytes it physically duplicates are counted in
-        :data:`BYTES_CLONED` (hardlinks count zero)."""
-        global BYTES_CLONED
-        if self.is_local:
-            import shutil
-
-            lsrc, ldst = self.local_path(src), self.local_path(dst)
-            for dirpath, _dirnames, filenames in os.walk(lsrc):
-                rel = os.path.relpath(dirpath, lsrc)
-                tgt = os.path.join(ldst, rel) if rel != "." else ldst
-                os.makedirs(tgt, exist_ok=True)
-                for f in filenames:
-                    s, d = os.path.join(dirpath, f), os.path.join(tgt, f)
-                    try:
-                        os.link(s, d)
-                    except OSError as exc:
-                        import errno
-
-                        if exc.errno != errno.EXDEV:
-                            raise
-                        shutil.copy2(s, d)
-                        BYTES_CLONED += os.path.getsize(d)
-            return
-        BYTES_CLONED += self.dir_bytes(src)
-        FileUtil = self._jvm.org.apache.hadoop.fs.FileUtil
-        if not FileUtil.copy(
-            self._fs, self._p(src), self._fs, self._p(dst), False, self._conf
-        ):
-            raise OSError(f"copy failed: {src!r} -> {dst!r}")
-
 
 
 # Single-writer lock lease, claimed through Fs.create_exclusive under a

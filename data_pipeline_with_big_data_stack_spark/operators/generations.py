@@ -18,8 +18,8 @@ any materialized store in the engine can adopt it:
   ``grace_seconds``, so the serving contract is a wall-clock promise
   independent of how often the writer publishes,
 * a generation may REFERENCE immutable segment directories inside
-  older generations instead of copying them (`operators/segman` — the
-  zero-copy clone/carry path on linkless object stores); GC deletes
+  older generations instead of copying them (`operators/segman` — a
+  carry moves zero bytes on every scheme); GC deletes
   only what no kept generation's manifests reference, pruning rather
   than dropping a superseded generation that still hosts live segments,
 * orphan generations (a writer crashed after materializing, before
@@ -30,9 +30,8 @@ Users: ``operators/ann_index_versioned`` (the IVF-PQ index root) and
 
 Every filesystem touch goes through ``operators/fsio`` — the JVM's
 Hadoop ``FileSystem`` API resolved from the root's scheme — so the
-protocol runs unchanged on ``file:``, ``hdfs:`` or object-store roots
-(the clone primitive adapts: hardlinks locally, copy remotely; see
-``fsio.Fs.clone_tree``). Call sites that hold a store handle pass its
+protocol runs unchanged on ``file:``, ``hdfs:`` or object-store roots;
+no step copies data. Call sites that hold a store handle pass its
 cached ``fs``; the ``fs=None`` default resolves one from the live
 SparkSession for the pre-port public signatures.
 """
@@ -119,16 +118,6 @@ def read_current(
     return gen
 
 
-def atomic_write(path: str, text: str, fs: fsio.Fs | None = None) -> None:
-    """Durably replace a small metadata file — crash leaves either the
-    old content or the new, never a torn file (``fsio.Fs.
-    write_text_atomic``: locally rename + parent-directory fsync; on
-    HDFS-likes Hadoop's atomic rename-overwrite; on object stores a
-    single-object overwrite PUT)."""
-    fs = fs or fsio.default_fs(path)
-    fs.write_text_atomic(path, text)
-
-
 def publish(root: str, gen: str, fs: fsio.Fs | None = None) -> None:
     """Stamp the generation with its publish time (the age signal
     :func:`gc_generations`'s ``grace_seconds`` reads), then atomically
@@ -181,8 +170,8 @@ def gc_generations(
 
     MANIFEST LIVENESS (`operators/segman`): a kept generation's tables
     may REFERENCE physical directories inside older generations instead
-    of owning copies (that is what makes clones/carries zero-copy on
-    linkless stores). GC therefore deletes only what no kept
+    of owning copies (that is what makes carries zero-copy on every
+    scheme). GC therefore deletes only what no kept
     generation's manifests reference: a superseded generation whose
     segments are still referenced is PRUNED — its unreferenced
     partitions, markers and publish stamp go, the referenced segment
@@ -297,9 +286,8 @@ def _prune_generation(
 ) -> None:
     """Delete everything under a superseded generation EXCEPT the
     paths named in ``keep_rel`` (root-relative paths some live
-    manifest references): whole sink dirs (``gen/sink``), partition
-    dirs (``gen/sink/part=v``), or manifest-list part files
-    (``gen/sink/.manifest-parts/part-<hash>.json``). The walk recurses
+    manifest references): whole sink dirs (``gen/sink``) or partition
+    dirs (``gen/sink/part=v``). The walk recurses
     only where a kept reference points deeper, so it touches
     O(referenced paths) directories regardless of generation size. The
     publish stamp and markers go too: a pruned remnant is no longer a
@@ -311,8 +299,7 @@ def _prune_tree(path: str, rel: str, keep_rel: set[str], fs: fsio.Fs) -> None:
     # Partition the kept paths by their next component ONCE per level —
     # the listing loop then does O(1) set lookups, so the whole prune is
     # O(listed entries + |keep_rel| × depth), never the
-    # O(entries × |keep_rel|) a per-entry prefix scan would cost at the
-    # ~10⁵-partition scale the manifest layout targets.
+    # O(entries × |keep_rel|) a per-entry prefix scan would cost.
     prefix = rel + "/"
     exact: set[str] = set()
     deeper: dict[str, set[str]] = {}
@@ -343,16 +330,3 @@ def next_gen(root: str, fs: fsio.Fs | None = None) -> str:
     n = max((int(g[len(GEN_PREFIX):]) for g in gens), default=0) + 1
     return gen_name(n)
 
-
-def clone_generation(src: str, dst: str, fs: fsio.Fs | None = None) -> None:
-    """Clone a generation tree — hardlinks on a local filesystem
-    (O(#files) metadata ops, zero bytes moved; EXDEV falls back to
-    copy), a real copy on remote stores. Parquet files are immutable
-    once written, so sharing them between generations is safe; deleting
-    either generation only unlinks its names. The source's publish
-    stamp is NOT carried: the clone is a new, unpublished tree, and a
-    copied stamp would let a crashed writer's orphan masquerade as
-    recently published to :func:`gc_generations`'s age rule."""
-    fs = fs or fsio.default_fs(src)
-    fs.clone_tree(src, dst)
-    fs.delete(_join(dst, PUBLISHED_AT))

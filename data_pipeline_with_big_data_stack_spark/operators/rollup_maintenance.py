@@ -303,7 +303,8 @@ def _recover(fs: fsio.Fs, path: str) -> None:
     otherwise the crash hit between the two renames — restore the
     original. Any staging dir belongs to a dead attempt (the writer
     lock is held) and is dropped. Runs under the maintenance lock
-    before every merge, so a retry always reads a consistent store."""
+    before every merge and every expiry sweep, so both always act on a
+    consistent store."""
     for name in fs.list_names(path, missing_ok=True):
         sub = f"{path}/{name}"
         if name.startswith(_TRASH):
@@ -621,6 +622,10 @@ def _expire_locked(spark: SparkSession, path: str, keep_from) -> list:
     import datetime
 
     fs = fsio.Fs(spark, path)
+    # a publish that crashed between its renames left a day only in
+    # trash: restore it first, or this sweep misses it and the next
+    # increment's recovery brings the expired day back
+    _recover(fs, path)
     dropped = []
     for name in fs.list_names(path):
         if not name.startswith("__date="):

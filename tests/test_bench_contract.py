@@ -37,10 +37,8 @@ def _worst_case_payload() -> dict:
         "dedup_trickle_batch_sec": 9999.999,
         "dedup_trickle_state_ratio": 99.99,
         "dedup_incr_fold_sec": 9999.999,
-        "fold_carry_bytes_moved": 99999999999,
         "substring_ingest_batch_sec": 9999.999,
         "substring_incr_fold_sec": 9999.999,
-        "substring_fold_carry_bytes_moved": 99999999999,
         "queries_count": len(bench.HEADLINE),
         "detail_file": "BENCH_DETAIL.json",
     }

@@ -1,13 +1,12 @@
 """Round-11 store-portability pins (VERDICT r10 #1/#4 + ADVICE r10).
 
-The generation-store protocol (pointer, GC, clone, fold bookkeeping)
+The generation-store protocol (pointer, GC, fold bookkeeping)
 runs through the Hadoop FileSystem API (`operators/fsio`), so the
 stores work when the base path is an explicit ``file:`` URI — the same
 code path a remote scheme takes (the sandbox has no HDFS; this is how
 the ann_index build/search paths have always proved scheme-agnosticism).
 Also pinned here: the fold-frontier refusal on direct epochs (ADVICE
-r10 medium), the age-based reader grace (VERDICT r10 #4), and the
-EXDEV copy fallback of the hardlink clone (VERDICT r10 #8).
+r10 medium) and the age-based reader grace (VERDICT r10 #4).
 """
 
 from __future__ import annotations
@@ -169,30 +168,6 @@ def test_slow_reader_survives_multiple_fold_publishes_with_grace(spark, tmp_path
     assert g0b not in G.list_generations(store2.base, fs=store2.fs)
 
 
-def test_clone_tree_falls_back_to_copy_on_exdev(spark, tmp_path, monkeypatch):
-    """VERDICT r10 #8: a hardlink across mount points fails with EXDEV
-    on real multi-volume hosts — the clone must fall back to a byte
-    copy, not die mid-generation."""
-    import errno
-
-    src = tmp_path / "src" / "inner"
-    src.mkdir(parents=True)
-    (src / "a.parquet").write_bytes(b"AAAA")
-    (src / "b.txt").write_text("bee")
-    fs = fsio.Fs(spark, str(tmp_path))
-
-    def no_link(s, d):
-        raise OSError(errno.EXDEV, "Invalid cross-device link")
-
-    monkeypatch.setattr(os, "link", no_link)
-    dst = tmp_path / "dst"
-    fs.clone_tree(str(tmp_path / "src"), str(dst))
-    assert (dst / "inner" / "a.parquet").read_bytes() == b"AAAA"
-    assert (dst / "inner" / "b.txt").read_text() == "bee"
-    # fell back to a real copy: no shared inode
-    assert os.stat(dst / "inner" / "a.parquet").st_nlink == 1
-
-
 def test_write_text_atomic_roundtrip_and_overwrite_on_file_uri(spark, tmp_path):
     """The pointer-flip primitive through the Hadoop handle: create,
     overwrite, read back — on a ``file:`` URI (the local branch) the
@@ -246,25 +221,6 @@ def test_file_sizes_recursive_relative_root_and_symlinked_dir(
     assert sorted(fs.file_sizes_recursive("t")) == want
     (t / "sub" / "loop").symlink_to(t)
     assert sorted(fs.file_sizes_recursive(str(t))) == want
-
-
-def test_clone_generation_strips_publish_stamp(spark, tmp_path):
-    """A clone is a new, UNPUBLISHED tree: carrying the source's
-    .published_at would let a crashed writer's orphan masquerade as
-    recently published and survive an age-grace GC for the full
-    window."""
-    root = str(tmp_path / "root")
-    fs = fsio.Fs(spark, root)
-    fs.mkdirs(os.path.join(root, "gen-000001", "index"))
-    G.publish(root, "gen-000001", fs=fs)
-    assert G.published_at(root, "gen-000001", fs=fs) is not None
-    G.clone_generation(
-        os.path.join(root, "gen-000001"), os.path.join(root, "gen-000002"), fs=fs
-    )
-    assert G.published_at(root, "gen-000002", fs=fs) is None
-    # the orphan clone dies even under a wide-open grace window
-    G.gc_generations(root, "gen-000001", None, grace_seconds=3600.0, fs=fs)
-    assert G.list_generations(root, fs=fs) == ["gen-000001"]
 
 
 def test_write_text_atomic_object_store_branch_is_direct_put(spark, tmp_path):
@@ -425,8 +381,7 @@ def test_versioned_lifecycle_runs_without_atomic_rename_capability(
 @pytest.fixture()
 def simulated_object_store(monkeypatch):
     """Force EVERY Fs handle into its object-store branches over a
-    local directory (VERDICT r11 #8): no hardlinks (clone_tree takes
-    the copy branch if anything still calls it), no local fsync path
+    local directory (VERDICT r11 #8): no local fsync path
     (write_text_atomic takes the direct-PUT branch), no atomic rename
     (every `_require_atomic_rename` gate armed). Any local-ism left in
     a store protocol fails loudly under this fixture."""
@@ -447,18 +402,14 @@ def test_dedup_lifecycle_on_simulated_object_store(
 ):
     """Full streaming-dedup lifecycle — drain, in-drain incremental
     folds, grace GC, serving reads — with every filesystem touch forced
-    through the object-store branches, and carries pinned to move ZERO
-    bytes (fsio.BYTES_CLONED unchanged: manifest references, no
-    copies)."""
+    through the object-store branches."""
     docs = _docs(spark, n=120)
-    before = fsio.BYTES_CLONED
     base, src = DI.stage_ordered_chunks(spark, docs, n_chunks=4)
     store = DI.init_dedup_ingest_store(spark, base)
     g0 = store.current_generation()
     DI.run_dedup_ingest_stream(
         spark, src, store, compact_every=1, reader_grace_seconds=3600.0
     )
-    assert fsio.BYTES_CLONED == before, "a carry moved bytes on an object store"
     gens = G.list_generations(store.base, fs=store.fs)
     assert g0 in gens, "grace must hold on the simulated scheme"
     docs_back = store.read(spark, "docstore").drop("batch_id")
@@ -478,7 +429,7 @@ def test_ann_versioned_lifecycle_on_simulated_object_store(
     spark, tmp_path, simulated_object_store
 ):
     """build → append → compact → expire → retrain → search with every
-    Fs handle forced into object-store branches and zero clone bytes."""
+    Fs handle forced into object-store branches."""
     import random
 
     from pyspark.sql import functions as F
@@ -490,7 +441,6 @@ def test_ann_versioned_lifecycle_on_simulated_object_store(
         train_ivfpq_codebooks,
     )
 
-    before = fsio.BYTES_CLONED
     rng = random.Random(12)
     vecs = spark.createDataFrame(
         [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(80)],
@@ -511,38 +461,3 @@ def test_ann_versioned_lifecycle_on_simulated_object_store(
         F.col("vec_id").alias("q_id"), F.col("emb").alias("q_emb")
     )
     assert V.search_ivfpq_versioned(spark, root, probes, nprobe=2, k=3).count() == 9
-    assert fsio.BYTES_CLONED == before, "the lifecycle copied carried bytes"
-
-
-@pytest.fixture()
-def manifest_list_forced(monkeypatch):
-    """Force every segment manifest into the manifest-LIST format
-    (``segman.PART_THRESHOLD = 0``) with tiny partition-range chunks,
-    so the full store lifecycles exercise part-file writes, cross-
-    generation part reuse, and part-aware GC end to end."""
-    from data_pipeline_with_big_data_stack_spark.operators import segman
-
-    monkeypatch.setattr(segman, "PART_THRESHOLD", 0)
-    monkeypatch.setattr(segman, "PART_GROUP", 2)
-    return True
-
-
-def test_dedup_lifecycle_split_manifests_on_simulated_object_store(
-    spark, simulated_object_store, manifest_list_forced
-):
-    """The dedup streaming lifecycle is format-independent: with every
-    manifest split into content-addressed parts AND every Fs handle in
-    object-store branches, drains/folds/grace/serving behave exactly as
-    with inline manifests — and carries still move zero bytes."""
-    test_dedup_lifecycle_on_simulated_object_store(spark, simulated_object_store)
-
-
-def test_ann_versioned_lifecycle_split_manifests_on_simulated_object_store(
-    spark, tmp_path, simulated_object_store, manifest_list_forced
-):
-    """build → append → compact → expire → retrain → search with split
-    manifests on the simulated object store: identical behavior, zero
-    clone bytes."""
-    test_ann_versioned_lifecycle_on_simulated_object_store(
-        spark, tmp_path, simulated_object_store
-    )

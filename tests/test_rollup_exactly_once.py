@@ -13,6 +13,7 @@ raw events* after a crash + retry.
 
 from __future__ import annotations
 
+import datetime
 import os
 import shutil
 
@@ -105,6 +106,32 @@ def test_crash_between_renames_is_recovered(spark, tmp_path):
     assert _final(spark, path) == _expected(spark, tmp_path, e)
     assert not os.path.exists(trash)
 
+
+
+def test_expire_after_crash_between_renames_drops_the_trashed_day(spark, tmp_path):
+    """A publish that crashed between its renames leaves a day only in
+    trash. An expiry sweep past that day must drop it too: otherwise
+    the next increment's recovery renames it back to live and the
+    store serves a day its retention already expired."""
+    e = load_table(spark, SF_SMOKE, "events")
+    path = str(tmp_path / "store")
+    RM.build_rollup(e, path)
+    days = sorted(d for d in os.listdir(path) if d.startswith("__date="))
+    assert len(days) >= 3
+    trash = os.path.join(path, ".trash_batch_4")
+    os.makedirs(trash)
+    os.rename(os.path.join(path, days[0]), os.path.join(trash, days[0]))
+    keep_from = datetime.date.fromisoformat(days[2].split("=", 1)[1])
+    dropped = RM.expire_partitions(spark, path, keep_from)
+    assert [str(d) for d in dropped] == [d.split("=", 1)[1] for d in days[:2]]
+    assert not os.path.exists(trash)
+    # an increment that touches only kept days must not resurrect one
+    late = e.filter(F.to_date("ts") >= F.lit(keep_from)).limit(50)
+    RM.apply_increment(spark, path, late, batch_id=5)
+    served = RM.serve_rollup(spark, path, grain="day")
+    assert served.count() > 0
+    assert served.filter(F.to_date("bucket") < F.lit(keep_from)).count() == 0
+    assert not any(d in os.listdir(path) for d in days[:2])
 
 def test_streaming_restart_after_midbatch_crash(spark, tmp_path, monkeypatch):
     """End-to-end: the stream itself crashes mid-publish, restarts from

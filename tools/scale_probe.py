@@ -390,12 +390,11 @@ def run_drain_probe(spark, scales: tuple[int, ...] = DRAIN_SCALES) -> dict:
     trickle epoch (the sub-linear maintenance claim: an incremental
     fold rewrites O(data since the last fold), so its bytes must stay
     ~flat while the store grows 10x/40x; carried partitions move by
-    manifest reference — fsio.BYTES_CLONED pins the zero-copy side)."""
+    manifest reference)."""
     import shutil
 
     import glob
 
-    from data_pipeline_with_big_data_stack_spark.operators import fsio
     from data_pipeline_with_big_data_stack_spark.operators.dedup_ingest import (
         compact_dedup_ingest_store,
         init_dedup_ingest_store,
@@ -482,17 +481,11 @@ def run_drain_probe(spark, scales: tuple[int, ...] = DRAIN_SCALES) -> dict:
                 os.rename(part, dst)
                 os.utime(dst, (1_700_000_100, 1_700_000_100))
                 run(src, store, None)
-                cloned0 = fsio.BYTES_CLONED
                 mark = max_stage_id(spark)
                 t0 = time.perf_counter()
                 compact(store)
                 w, r = shuffle_since(spark, mark)
-                entry["incr_fold"] = _snap(
-                    time.perf_counter() - t0,
-                    w,
-                    r,
-                    carry_bytes_cloned=fsio.BYTES_CLONED - cloned0,
-                )
+                entry["incr_fold"] = _snap(time.perf_counter() - t0, w, r)
                 steps[fam] = entry
                 shutil.rmtree(base, ignore_errors=True)
         except Exception as exc:  # noqa: BLE001 - isolate per scale
