@@ -219,16 +219,19 @@ def serve_only_probes(spark, sf_dir: str) -> dict:
         # rank). Best-of-3 each; plan + exec ≈ serve, so drift shows
         # WHERE it landed instead of only that it happened. ---
         try:
+            from data_pipeline_with_big_data_stack_spark.operators import fsio, segman
             from data_pipeline_with_big_data_stack_spark.operators.ann_index import (
-                _read_table,
+                _COARSE_DDL,
+                _PQ_DDL,
             )
 
             comp: dict[str, float] = {}
             b = float("inf")
             for _ in range(3):
                 t0 = time.perf_counter()
-                _read_table(spark, idx + "_codebook").collect()
-                _read_table(spark, idx + "_pq_codebook").collect()
+                fs = fsio.Fs(spark, idx)
+                segman.read_table(spark, fs, idx + "_codebook", schema=_COARSE_DDL).collect()
+                segman.read_table(spark, fs, idx + "_pq_codebook", schema=_PQ_DDL).collect()
                 b = min(b, time.perf_counter() - t0)
             comp["sidecar_read_sec"] = round(b, 3)
             bp = be = float("inf")

@@ -26,48 +26,55 @@ search gives every probe its asymmetric-distance lookup table (M ×
 K_PQ squared distances to the PQ centroids) and scores each candidate
 with M table lookups (Jégou, Douze, Schmid, TPAMI 2011). A search
 keeps no state between calls.
+
+Every projection here is SQL text (``selectExpr``/``F.expr``): the JVM
+parses one string per projection. The same expressions built from
+``F.*`` calls and Python lambdas cost one py4j round trip per node,
+about 2,000 per IVF-PQ search against a few hundred now (most of them
+store listings). The codebook sidecars are read with their declared
+schemas (:data:`_COARSE_DDL`, :data:`_PQ_DDL`, the types the builds
+write), so no read of them launches a schema-inference job.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from data_pipeline_with_big_data_stack_spark.operators import fsio
-from data_pipeline_with_big_data_stack_spark.operators.kmeans import _assign, _sqdist
+from data_pipeline_with_big_data_stack_spark.operators import fsio, segman
+from data_pipeline_with_big_data_stack_spark.operators.kmeans import _assign
+
+# the two codebook sidecars, as every build writes them
+_COARSE_DDL = "cell_id long, c_emb array<double>"
+_PQ_DDL = "m int, code long, c_emb array<double>"
 
 
-def _read_table(
-    spark: SparkSession,
-    path: str,
-    fs: fsio.Fs | None = None,
-    logicals: set[str] | None = None,
-):
-    """Manifest-aware read (`operators/segman`): a plain physical dir
-    reads exactly as ``spark.read.parquet(path)``; a generation table
-    whose manifest references segments in older generations reads the
-    union. Every read-only consumer of an index component goes through
-    here so the versioned stores can carry segments by reference.
-    ``logicals`` (partition dir names, e.g. ``cell_id=5``) lets the
-    cell-pruned search paths restrict MANIFEST resolution to the probed
-    partitions — the metadata-side twin of the data-side partition
-    pruning they already do; callers must still filter the frame."""
-    from data_pipeline_with_big_data_stack_spark.operators import segman
-
-    return segman.read_table(
-        spark, fs or fsio.Fs(spark, path), path, logicals=logicals
+def _sqdist(a: str, b: str) -> str:
+    """SQL text: squared L2 distance of the array expressions ``a`` and
+    ``b``, summed in element order."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
+        "0D, (acc, x) -> acc + x)"
     )
 
 
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
+def _ranked(cb: str, emb: str) -> str:
+    """SQL text: the cells of the codebook array ``cb`` as
+    ``(dist, cell_id)`` structs, nearest to ``emb`` first (ties by the
+    lower cell id)."""
+    return (
+        f"array_sort(transform({cb}, c -> named_struct("
+        f"'dist', {_sqdist(emb, 'c.c_emb')}, 'cell_id', c.cell_id)))"
     )
 
 
-def _norm(a):
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
+def _sidecar_rows(codebook: DataFrame, key: str) -> DataFrame:
+    """A 1-row codebook frame (first column ``array<struct<cell_id,
+    c_emb>>``) → one row per centroid, ``(<key>, c_emb)`` cast to the
+    declared sidecar types."""
+    return codebook.selectExpr(f"explode(`{codebook.columns[0]}`) AS c").selectExpr(
+        f"CAST(c.cell_id AS long) AS {key}", "CAST(c.c_emb AS array<double>) AS c_emb"
+    )
 
 
 def build_ivf_index(
@@ -83,16 +90,16 @@ def build_ivf_index(
         .partitionBy("cluster_id")
         .parquet(path)
     )
-    codebook.select(F.explode("cb").alias("c")).select(
-        F.col("c.cell_id").alias("cell_id"), F.col("c.c_emb").alias("c_emb")
-    ).write.mode("overwrite").parquet(path + "_codebook")
+    _sidecar_rows(codebook, "cell_id").write.mode("overwrite").parquet(
+        path + "_codebook"
+    )
 
 
 def _coarse_row(cells: DataFrame) -> DataFrame:
     """The coarse sidecar rows ``(cell_id, c_emb)`` → one row ``__cb``
     (``array<struct<cell_id, c_emb>>``)."""
-    return cells.coalesce(1).agg(
-        F.collect_list(F.struct("cell_id", "c_emb")).alias("__cb")
+    return cells.coalesce(1).selectExpr(
+        "collect_list(struct(cell_id, c_emb)) AS __cb"
     )
 
 
@@ -109,35 +116,22 @@ def _codebooks(cells: DataFrame, pq_rows: DataFrame) -> DataFrame:
         pq_rows.coalesce(1)
         .groupBy("m")
         .agg(
-            F.collect_list(F.struct("code", "c_emb")).alias("r"),
-            F.max("code").alias("k"),
-            F.max(F.size("c_emb")).alias("sd"),
+            F.expr("collect_list(struct(code, c_emb)) AS r"),
+            F.expr("max(code) AS k"),
+            F.expr("max(size(c_emb)) AS sd"),
         )
-        .select(
+        .selectExpr(
             "m",
             "sd",
-            F.transform(
-                F.sequence(F.lit(0).cast("long"), F.col("k").cast("long")),
-                lambda c: F.get(
-                    "r", (F.array_position(F.col("r")["code"], c) - 1).cast("int")
-                )["c_emb"],
-            ).alias("dense"),
+            "transform(sequence(0L, CAST(k AS long)), "
+            "c -> get(r, CAST(array_position(r.code, c) - 1 AS int)).c_emb) AS dense",
         )
     )
-    pq = per_m.agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("m", "dense"))),
-            lambda e: e["dense"],
-        ).alias("__pq"),
-        F.max("sd").alias("__sd"),
+    pq = per_m.selectExpr(
+        "transform(array_sort(collect_list(struct(m, dense))), e -> e.dense) AS __pq",
+        "max(sd) AS __sd",
     )
     return _coarse_row(cells).crossJoin(pq)
-
-
-def _pq_slice(emb: str, i):
-    """Subspace ``i``'s slice of the vector column ``emb``, with the
-    sub-vector length read from the codebook row's ``__sd``."""
-    return F.slice(emb, i * F.col("__sd") + 1, F.col("__sd"))
 
 
 def _coded_projection(
@@ -147,45 +141,24 @@ def _coded_projection(
     codebook row (:func:`_codebooks`): ``(id, cell_id, code_0..
     code_{M-1})`` — coarse argmin + M subspace argmins, the raw vector
     dropped. The M argmins are one higher-order expression over
-    ``__pq``, ties broken by the lower code. Shared by the initial
-    build and the incremental append (same codebooks ⇒ bit-identical
-    codes)."""
-    ranked = F.array_sort(
-        F.transform(
-            F.col("__cb"),
-            lambda c: F.struct(
-                _sqdist(F.col("emb"), c["c_emb"]).alias("dist"),
-                c["cell_id"].alias("cell_id"),
-            ),
-        )
+    ``__pq`` (subspace ``i`` is ``emb``'s ``__sd``-long slice ``i``),
+    ties broken by the lower code. Shared by the initial build and the
+    incremental append (same codebooks ⇒ bit-identical codes)."""
+    sub = _sqdist("slice(emb, i * __sd + 1, __sd)", "c")
+    codes = (
+        "transform(__pq, (cbm, i) -> element_at(array_sort(filter(transform("
+        f"cbm, (c, j) -> named_struct('dist', {sub}, 'code', CAST(j AS long))), "
+        "s -> s.dist IS NOT NULL)), 1).code)"
     )
-    codes = F.transform(
-        F.col("__pq"),
-        lambda cbm, i: F.element_at(
-            F.array_sort(
-                F.filter(
-                    F.transform(
-                        cbm,
-                        lambda c, j: F.struct(
-                            _sqdist(_pq_slice("emb", i), c).alias("dist"),
-                            j.cast("long").alias("code"),
-                        ),
-                    ),
-                    lambda x: x["dist"].isNotNull(),
-                )
-            ),
-            1,
-        )["code"],
+    coded = vecs.join(F.broadcast(books)).selectExpr(
+        f"`{id_col}`",
+        f"element_at({_ranked('__cb', 'emb')}, 1).cell_id AS cell_id",
+        f"{codes} AS __codes",
     )
-    coded = vecs.join(F.broadcast(books)).select(
-        F.col(id_col),
-        F.element_at(ranked, 1)["cell_id"].alias("cell_id"),
-        codes.alias("__codes"),
-    )
-    return coded.select(
-        id_col,
+    return coded.selectExpr(
+        f"`{id_col}`",
         "cell_id",
-        *[F.col("__codes")[m].alias(f"code_{m}") for m in range(n_sub)],
+        *[f"__codes[{m}] AS code_{m}" for m in range(n_sub)],
     )
 
 
@@ -219,20 +192,10 @@ def build_ivfpq_index(
     build into a fresh, not yet published generation under the root's
     writer lock. A crash mid-build leaves an unpublished partial tree;
     a rebuild overwrites it."""
-    coarse = coarse_codebook.select(F.col(coarse_codebook.columns[0]).alias("__cb"))
-    coarse_rows = coarse.select(F.explode("__cb").alias("c")).select(
-        F.col("c.cell_id").alias("cell_id"), F.col("c.c_emb").alias("c_emb")
-    )
+    coarse_rows = _sidecar_rows(coarse_codebook, "cell_id")
     pq_rows = None
     for m, cbm in enumerate(pq_codebooks):
-        rows = (
-            cbm.select(F.explode(F.col(cbm.columns[0])).alias("c"))
-            .select(
-                F.lit(m).alias("m"),
-                F.col("c.cell_id").alias("code"),
-                F.col("c.c_emb").alias("c_emb"),
-            )
-        )
+        rows = _sidecar_rows(cbm, "code").selectExpr(f"{m} AS m", "code", "c_emb")
         pq_rows = rows if pq_rows is None else pq_rows.unionByName(rows)
     coded = _coded_projection(
         vecs, _codebooks(coarse_rows, pq_rows), len(pq_codebooks), id_col
@@ -260,21 +223,13 @@ def _seed_codebook(vecs: DataFrame, k: int, id_col: str = "vec_id") -> DataFrame
     ``row_number() OVER (ORDER BY md5(id::VARCHAR)) - 1`` over the same
     ``LIMIT k``."""
     seeds = (
-        vecs.select(
-            F.md5(F.col(id_col).cast("string")).alias("__h"), F.col("emb")
-        )
+        vecs.selectExpr(f"md5(CAST(`{id_col}` AS string)) AS __h", "emb")
         .orderBy("__h")
         .limit(k)
     )
-    return seeds.agg(
-        F.array_sort(F.collect_list(F.struct("__h", "emb"))).alias("s")
-    ).select(
-        F.transform(
-            F.col("s"),
-            lambda x, i: F.struct(
-                i.cast("long").alias("cell_id"), x["emb"].alias("c_emb")
-            ),
-        ).alias("cb")
+    return seeds.selectExpr(
+        "transform(array_sort(collect_list(struct(__h, emb))), (x, i) -> "
+        "named_struct('cell_id', CAST(i AS long), 'c_emb', x.emb)) AS cb"
     )
 
 
@@ -320,34 +275,28 @@ def train_ivfpq_codebooks(
     # input contract forbids (ids are unique index/corpus keys
     # everywhere this is called); under that contract the trajectories
     # are identical.
-    v = vecs.select(F.col(id_col).alias("vec_id"), "emb")
+    v = vecs.selectExpr(f"`{id_col}` AS vec_id", "emb")
     slices = [(None, None)] + [
         (m * sub_dim + 1, sub_dim) for m in range(n_sub)
     ]
     ks = [k_coarse] + [k_pq] * n_sub
     seeds = (
-        v.select(
-            F.md5(F.col("vec_id").cast("string")).alias("__h"), F.col("emb")
-        )
+        v.selectExpr("md5(CAST(vec_id AS string)) AS __h", "emb")
         .orderBy("__h")
         .limit(max(ks))
     )
-    seeded = seeds.agg(
-        F.array_sort(F.collect_list(F.struct("__h", "emb"))).alias("s")
-    )
+    seeded = seeds.selectExpr("array_sort(collect_list(struct(__h, emb))) AS s")
 
-    def _seed_cb(k: int, off, ln):
-        def entry(x, i):
-            sub = x["emb"] if off is None else F.slice(x["emb"], off, ln)
-            return F.struct(
-                i.cast("long").alias("cell_id"), sub.alias("c_emb")
-            )
+    def _seed_cb(k: int, off, ln) -> str:
+        sub = "x.emb" if off is None else f"slice(x.emb, {off}, {ln})"
+        return (
+            f"transform(slice(s, 1, {int(k)}), (x, i) -> "
+            f"named_struct('cell_id', CAST(i AS long), 'c_emb', {sub}))"
+        )
 
-        return F.transform(F.slice(F.col("s"), 1, k), entry)
-
-    init = seeded.select(
+    init = seeded.selectExpr(
         *[
-            _seed_cb(ks[i], off, ln).alias(f"cb_{i}")
+            f"{_seed_cb(ks[i], off, ln)} AS cb_{i}"
             for i, (off, ln) in enumerate(slices)
         ]
     )
@@ -360,6 +309,17 @@ def train_ivfpq_codebooks(
     return coarse, pq
 
 
+def _top_k(cand: DataFrame, order: str, k: int) -> DataFrame:
+    """The first ``k`` rows of ``cand`` per ``q_id`` in SQL ``order``."""
+    return (
+        cand.selectExpr(
+            "*", f"row_number() OVER (PARTITION BY q_id ORDER BY {order}) AS rn"
+        )
+        .where(f"rn <= {int(k)}")
+        .drop("rn")
+    )
+
+
 def search_ivfpq_index(
     spark: SparkSession,
     path: str,
@@ -370,72 +330,57 @@ def search_ivfpq_index(
 ) -> DataFrame:
     """``probes(q_id, q_emb)`` → top-``k`` by asymmetric-distance
     (ADC) per probe, from the materialized IVF-PQ index. Both sidecars
-    are read once, into ONE broadcast codebook row (:func:`_codebooks`).
-    Each probe then carries, on the broadcast probe frame, its nearest
-    ``nprobe`` cells and its lookup table: the M×K_PQ squared distances
-    from its sub-vectors to every PQ centroid, built as one
-    higher-order expression (Jégou, Douze, Schmid, TPAMI 2011). The
-    codes scan reads ONLY the probed index partitions (codes, no
-    vectors — the scan's ReadSchema carries id + codes only,
-    plan-pinned), and each candidate scores with M table lookups,
-    summed in subspace order. Identical top-k to the inline
+    are read once, with their declared schemas (no inference job), into
+    ONE broadcast codebook row (:func:`_codebooks`). Each probe then
+    carries, on the broadcast probe frame, its nearest ``nprobe`` cells
+    and its lookup table: the M×K_PQ squared distances from its
+    sub-vectors to every PQ centroid, built as one higher-order
+    expression (Jégou, Douze, Schmid, TPAMI 2011). The codes scan reads
+    ONLY the probed index partitions (codes, no vectors — the scan's
+    ReadSchema carries id + codes only, plan-pinned), and each
+    candidate scores with M table lookups, summed in subspace order.
+    Every projection, the top-``k`` window included, is one SQL-text
+    expression the JVM parses, so the plan build costs a few dozen
+    py4j round trips, not thousands. Identical top-k to the inline
     ``q_ann_ivfpq_topk`` given the same codebooks (equality-pinned in
     tests/test_ann_index.py)."""
     fs = fsio.Fs(spark, path)  # ONE handle for all three component reads
-    cb_tbl = _read_table(spark, path + "_codebook", fs=fs)
-    pq_tbl = _read_table(spark, path + "_pq_codebook", fs=fs)
-    ranked = F.array_sort(
-        F.transform(
-            F.col("__cb"),
-            lambda c: F.struct(
-                _sqdist(F.col("q_emb"), c["c_emb"]).alias("dist"),
-                c["cell_id"].alias("cell_id"),
-            ),
-        )
-    )
-    nearest = F.explode(F.slice(ranked, 1, nprobe)).alias("cell")
+    cb_tbl = segman.read_table(spark, fs, path + "_codebook", schema=_COARSE_DDL)
+    pq_tbl = segman.read_table(spark, fs, path + "_pq_codebook", schema=_PQ_DDL)
+    nearest = f"inline(slice({_ranked('__cb', 'q_emb')}, 1, {int(nprobe)}))"
     # metadata-scale collect: nprobe cells per probe → partition-pruning
     # predicate for the codes scan, map-side-deduped via collect_set.
     # It ranks against the coarse row alone, so it skips the PQ sidecar
     cells = sorted(
         probes.join(F.broadcast(_coarse_row(cb_tbl)))
-        .select(nearest)
+        .selectExpr(nearest)
         .coalesce(1)
-        .agg(F.collect_set(F.col("cell")["cell_id"]))
+        .selectExpr("collect_set(cell_id)")
         .head()[0]
     )
-    lut = F.transform(
-        F.col("__pq"),
-        lambda cbm, i: F.transform(
-            cbm, lambda c: _sqdist(_pq_slice("q_emb", i), c)
-        ),
+    lut = (
+        "transform(__pq, (cbm, i) -> transform(cbm, c -> "
+        f"{_sqdist('slice(q_emb, i * __sd + 1, __sd)', 'c')}))"
     )
     probe_cells = (
         probes.join(F.broadcast(_codebooks(cb_tbl, pq_tbl)))
-        .select("q_id", "q_emb", "__cb", lut.alias("__lut"))
-        .select("q_id", "__lut", nearest)
-        .select("q_id", "__lut", F.col("cell")["cell_id"].alias("cell_id"))
+        .selectExpr("q_id", "q_emb", "__cb", f"{lut} AS __lut")
+        .selectExpr("q_id", "__lut", nearest)
     )
-    index = _read_table(
-        spark, path, fs=fs, logicals={f"cell_id={c}" for c in cells}
+    index = segman.read_table(
+        spark, fs, path, logicals={f"cell_id={c}" for c in cells}
     ).filter(F.col("cell_id").isin(cells))
     n_sub = len([c for c in index.columns if c.startswith("code_")])
-    adc = F.lit(0.0)
-    for m in range(n_sub):
-        adc = adc + F.element_at(
-            F.col("__lut")[m], (F.col(f"code_{m}") + 1).cast("int")
-        )
+    adc = " + ".join(
+        ["0D"]
+        + [f"element_at(__lut[{m}], CAST(code_{m} + 1 AS int))" for m in range(n_sub)]
+    )
     cand = (
         index.join(F.broadcast(probe_cells), "cell_id")
-        .filter(F.col(id_col) != F.col("q_id"))
-        .select("q_id", id_col, "cell_id", F.round(adc, 4).alias("adc_dist"))
+        .where(f"`{id_col}` != q_id")
+        .selectExpr("q_id", f"`{id_col}`", "cell_id", f"round({adc}, 4) AS adc_dist")
     )
-    w = W.partitionBy("q_id").orderBy("adc_dist", F.col(id_col))
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
+    return _top_k(cand, f"adc_dist, `{id_col}`", k)
 
 
 def search_ivf_index(
@@ -449,56 +394,39 @@ def search_ivf_index(
     """``probes(q_id, q_emb)`` → top-``k`` cosine matches per probe,
     reading only each probe's ``nprobe`` nearest index partitions."""
     fs = fsio.Fs(spark, path)
-    cb_tbl = _read_table(spark, path + "_codebook", fs=fs)
-    cb = cb_tbl.agg(
-        F.collect_list(F.struct("cell_id", "c_emb")).alias("cb")
-    )
-    ranked = F.array_sort(
-        F.transform(
-            F.col("cb"),
-            lambda c: F.struct(
-                _sqdist(F.col("q_emb"), c["c_emb"]).alias("dist"),
-                c["cell_id"].alias("cell_id"),
-            ),
-        )
-    )
+    cb_tbl = segman.read_table(spark, fs, path + "_codebook", schema=_COARSE_DDL)
+    cb = cb_tbl.selectExpr("collect_list(struct(cell_id, c_emb)) AS cb")
     probe_cells = (
         probes.join(F.broadcast(cb))
-        .select(
-            "q_id",
-            "q_emb",
-            F.explode(F.slice(ranked, 1, nprobe)).alias("cell"),
+        .selectExpr(
+            "q_id", "q_emb", f"inline(slice({_ranked('cb', 'q_emb')}, 1, {int(nprobe)}))"
         )
-        .select("q_id", "q_emb", F.col("cell")["cell_id"].alias("cluster_id"))
+        .selectExpr("q_id", "q_emb", "cell_id AS cluster_id")
     )
     # metadata-scale collect: nprobe cells per probe → partition-pruning
     # predicate for the index scan
     cells = sorted(
         {r.cluster_id for r in probe_cells.select("cluster_id").distinct().collect()}
     )
-    index = _read_table(
-        spark, path, fs=fs, logicals={f"cluster_id={c}" for c in cells}
+    index = segman.read_table(
+        spark, fs, path, logicals={f"cluster_id={c}" for c in cells}
     ).filter(F.col("cluster_id").isin(cells))
+    dot = "aggregate(zip_with(q_emb, emb, (x, y) -> x * y), 0D, (acc, x) -> acc + x)"
+
+    def norm(a: str) -> str:
+        return f"sqrt(aggregate({a}, 0D, (acc, x) -> acc + x * x))"
+
     cand = (
         index.join(F.broadcast(probe_cells), "cluster_id")
-        .filter(F.col(id_col) != F.col("q_id"))
-        .select(
+        .where(f"`{id_col}` != q_id")
+        .selectExpr(
             "q_id",
-            id_col,
+            f"`{id_col}`",
             "cluster_id",
-            F.round(
-                _dot(F.col("q_emb"), F.col("emb"))
-                / (_norm(F.col("q_emb")) * _norm(F.col("emb"))),
-                6,
-            ).alias("cosine"),
+            f"round({dot} / ({norm('q_emb')} * {norm('emb')}), 6) AS cosine",
         )
     )
-    w = W.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col(id_col))
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
+    return _top_k(cand, f"cosine DESC, `{id_col}`", k)
 
 
 def estimate_ivfpq_recall(
@@ -536,7 +464,7 @@ def estimate_ivfpq_recall(
     estimate drops, post-retrain estimate recovers."""
     from data_pipeline_with_big_data_stack_spark.session import materialize
 
-    ids = _read_table(spark, path).select(F.col(id_col))
+    ids = segman.read_table(spark, fsio.Fs(spark, path), path).select(F.col(id_col))
     # materialized ONCE each (r15): the corpus semi-join feeds both the
     # ground-truth scan and the probe ranking, and the probe sample is
     # re-evaluated by the ground-truth broadcast AND the index search —
@@ -559,12 +487,10 @@ def estimate_ivfpq_recall(
     cand = (
         vecs.join(F.broadcast(probes))
         .filter(F.col(id_col) != F.col("q_id"))
-        .select("q_id", id_col, _sqdist(F.col("emb"), F.col("q_emb")).alias("d"))
+        .selectExpr("q_id", f"`{id_col}`", f"{_sqdist('emb', 'q_emb')} AS d")
     )
-    w = W.partitionBy("q_id").orderBy("d", F.col(id_col))
     truth = (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
+        _top_k(cand, f"d, `{id_col}`", k)
         .groupBy("q_id")
         .agg(F.collect_set(id_col).alias("true_ids"))
     )

@@ -70,6 +70,8 @@ from data_pipeline_with_big_data_stack_spark.operators import fsio
 from data_pipeline_with_big_data_stack_spark.operators import generations as G
 from data_pipeline_with_big_data_stack_spark.operators import segman
 from data_pipeline_with_big_data_stack_spark.operators.ann_index import (
+    _COARSE_DDL,
+    _PQ_DDL,
     _codebooks,
     _coded_projection,
     build_ivfpq_index,
@@ -195,12 +197,15 @@ def append_ivfpq_versioned(
             merge="union",
         )
         _ref_sidecars(fs, root, cur, gen)
-        pq_rows = segman.read_table(spark, fs, cur_index + "_pq_codebook")
+        pq_rows = segman.read_table(
+            spark, fs, cur_index + "_pq_codebook", schema=_PQ_DDL
+        )
         # M comes from the PQ sidecar: an empty generation has no code
         # files to read it from
         n_sub = pq_rows.coalesce(1).agg(F.max("m")).head()[0] + 1
         books = _codebooks(
-            segman.read_table(spark, fs, cur_index + "_codebook"), pq_rows
+            segman.read_table(spark, fs, cur_index + "_codebook", schema=_COARSE_DDL),
+            pq_rows,
         )
         coded = _coded_projection(vecs, books, n_sub, id_col)
         coded.write.mode("append").partitionBy("cell_id").parquet(gen_index)
@@ -397,14 +402,18 @@ def retrain_ivfpq_versioned(
         # (metadata-scale sidecars): a single aggregate covers
         # n_sub/sub_dim/k_pq, and the coarse K rides along via a 1-row
         # cross join instead of a second count job (r15)
-        geo = segman.read_table(spark, fs, cur_index + "_pq_codebook").agg(
+        geo = segman.read_table(
+            spark, fs, cur_index + "_pq_codebook", schema=_PQ_DDL
+        ).agg(
             F.max("m").alias("mm"),
             F.max(F.size("c_emb")).alias("sd"),
             F.sum(F.when(F.col("m") == 0, 1).otherwise(0)).alias("k0"),
         )
         if k_coarse is None:
             geo = geo.crossJoin(
-                segman.read_table(spark, fs, cur_index + "_codebook").agg(
+                segman.read_table(
+                    spark, fs, cur_index + "_codebook", schema=_COARSE_DDL
+                ).agg(
                     F.count(F.lit(1)).alias("kc")
                 )
             )

@@ -76,7 +76,7 @@ def test_search_matches_within_probed_cells(spark, tmp_path):
         .crossJoin(F.broadcast(probes))
         .filter(F.col("vec_id") != F.col("q_id"))
     )
-    from data_pipeline_with_big_data_stack_spark.operators.ann_index import _dot, _norm
+    from data_pipeline_with_big_data_stack_spark.queries.vector import _dot, _norm
 
     brute = brute.select(
         "vec_id",
@@ -232,9 +232,10 @@ def _build_small(spark, tmp_path, name="idx", modulus=None):
 
 def _codes(spark, root):
     """The live generation's codes, referenced segments included."""
-    from data_pipeline_with_big_data_stack_spark.operators.ann_index import _read_table
+    from data_pipeline_with_big_data_stack_spark.operators import fsio, segman
 
-    return _read_table(spark, V.current_index_path(root))
+    path = V.current_index_path(root)
+    return segman.read_table(spark, fsio.Fs(spark, path), path)
 
 
 def _search_res(spark, root, e, k=5, flat=False):

@@ -13,6 +13,8 @@ from __future__ import annotations
 import os
 import threading
 
+import numpy as np
+import pandas as pd
 import pyspark.sql.functions as F
 import pytest
 
@@ -214,3 +216,129 @@ def test_append_to_empty_generation_then_search_equals_flat_build(spark, tmp_pat
     got = _res(V.search_ivfpq_versioned(spark, root, _probes(e), nprobe=2, k=5))
     want = _res(search_ivfpq_index(spark, flat, _probes(e), nprobe=2, k=5))
     assert got == want and len(got) > 0
+
+
+def _search_jobs(spark, root, probes, group):
+    """Rows of one versioned search and the Spark jobs its plan build
+    and collect launched, counted under a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        rows = _res(V.search_ivfpq_versioned(spark, root, probes, nprobe=2, k=5))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_search_of_referenced_sidecars_launches_no_inference_job(spark, tmp_path):
+    """The codebook sidecars are read with their declared schemas: a
+    search of a generation that carries them by reference (build, then
+    append) runs the cells collect, the codes-table inference and the
+    search itself, and no schema-inference job for either sidecar. A
+    repeat search launches the same jobs and returns the same rows."""
+    e = _vecs(spark)
+    root = str(tmp_path / "vroot")
+    V.build_ivfpq_versioned(
+        e.filter(F.col("vec_id") % 2 == 0),
+        root,
+        _codebook(e, k=_K_CELLS),
+        list(_pq_train_codebooks(e)),
+        sub_dim=_PQ_SUB,
+    )
+    V.append_ivfpq_versioned(spark, root, e.filter(F.col("vec_id") % 2 == 1))
+    probes = _probes(e)
+    first, jobs = _search_jobs(spark, root, probes, "ivfpq-search-first")
+    again, jobs_again = _search_jobs(spark, root, probes, "ivfpq-search-again")
+    assert first and again == first
+    assert jobs == jobs_again == 9
+
+
+def _np_ivfpq_topk(ids, vecs, coarse, pq, probes, nprobe, k):
+    """NumPy IVF-PQ/ADC reference: cells and codes by argmin, each
+    probe's lookup table from its sub-vectors, candidates from its
+    ``nprobe`` nearest cells, the ``k`` smallest ADC distances (ties by
+    the lower id) as ``[(id, dist)]`` per probe."""
+    n_sub, _k_pq, sd = pq.shape
+
+    def sq(a, b):
+        return ((a[:, None, :] - b[None, :, :]) ** 2).sum(axis=2)
+
+    cell = sq(vecs, coarse).argmin(axis=1)
+    codes = np.stack(
+        [sq(vecs[:, m * sd:(m + 1) * sd], pq[m]).argmin(axis=1) for m in range(n_sub)],
+        axis=1,
+    )
+    out = []
+    for q in probes:
+        near = np.argsort(sq(q[None, :], coarse)[0], kind="stable")[:nprobe]
+        lut = np.stack([sq(q[None, m * sd:(m + 1) * sd], pq[m])[0] for m in range(n_sub)])
+        cand = np.isin(cell, near)
+        adc = lut[np.arange(n_sub), codes[cand]].sum(axis=1)
+        out.append(sorted(zip(adc.round(4), ids[cand]), key=lambda t: (t[0], t[1]))[:k])
+    return [[(int(i), float(d)) for d, i in row] for row in out]
+
+
+def _assert_topk(got, want, tol=1e-3):
+    """Top-k equal to the reference: distances within ``tol`` rank by
+    rank, and ids equal except among near-ties at the k-th distance."""
+    assert len(got) == len(want)
+    for g, w in zip(got, want):
+        assert len(g) == len(w)
+        assert all(abs(gd - wd) < tol for (_, gd), (_, wd) in zip(g, w))
+        cut = w[-1][1] - tol
+        assert {i for i, d in g if d < cut} == {i for i, d in w if d < cut}
+
+
+def test_topk_at_real_codebook_size_build_append_search(spark, tmp_path):
+    """K_PQ=256, M=8 and 16 coarse cells, seeded codebooks, a 200-vector
+    corpus: the versioned build and an append each search to the
+    top-k of a NumPy IVF-PQ/ADC reference over the indexed vectors."""
+    rng = np.random.default_rng(7)
+    n_sub, k_pq, sd, k_cells, k = 8, 256, 4, 16, 10
+    dim = n_sub * sd
+    vecs = rng.normal(size=(200, dim))
+    coarse = rng.normal(size=(k_cells, dim))
+    pq = rng.normal(size=(n_sub, k_pq, sd))
+    probes = rng.normal(size=(5, dim))
+    ids = np.arange(len(vecs), dtype=np.int64)
+
+    def stage(pdf, schema):
+        # one parquet file each, as the index's inputs are at scale: a
+        # Python-row frame splits 200 rows into one task per core
+        d = str(tmp_path / f"in{len(os.listdir(tmp_path))}")
+        os.makedirs(d)
+        pdf.to_parquet(os.path.join(d, "part-0.parquet"), index=False)
+        return spark.read.schema(schema).parquet(d)
+
+    def book(rows):
+        cb = [{"cell_id": i, "c_emb": r} for i, r in enumerate(rows)]
+        return stage(
+            pd.DataFrame({"cb": [cb]}),
+            "cb array<struct<cell_id: long, c_emb: array<double>>>",
+        )
+
+    def frame(first, rows, cols):
+        pdf = pd.DataFrame({cols[0]: np.arange(first, first + len(rows)), cols[1]: list(rows)})
+        return stage(pdf, f"{cols[0]} long, {cols[1]} array<double>")
+
+    q = frame(10_000, probes, ("q_id", "q_emb"))
+
+    def search():
+        rows = V.search_ivfpq_versioned(spark, root, q, nprobe=2, k=k).collect()
+        got = [[] for _ in probes]
+        for r in sorted(rows, key=lambda r: (r.q_id, r.adc_dist, r.vec_id)):
+            got[r.q_id - 10_000].append((r.vec_id, r.adc_dist))
+        return got
+
+    root = str(tmp_path / "vroot")
+    V.build_ivfpq_versioned(
+        frame(0, vecs[:150], ("vec_id", "emb")),
+        root,
+        book(coarse),
+        [book(pq[m]) for m in range(n_sub)],
+        sub_dim=sd,
+    )
+    _assert_topk(search(), _np_ivfpq_topk(ids[:150], vecs[:150], coarse, pq, probes, 2, k))
+    V.append_ivfpq_versioned(spark, root, frame(150, vecs[150:], ("vec_id", "emb")))
+    _assert_topk(search(), _np_ivfpq_topk(ids, vecs, coarse, pq, probes, 2, k))
