@@ -58,6 +58,7 @@ lock; readers take no lock at all.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 
@@ -92,17 +93,59 @@ _TARGET_FILE_BYTES = 128 * 1024 * 1024
 # counts actually DROP proportionally at higher n_bkt.
 
 
-class MetaStoreBase:
-    """Shared epoch-store-root plumbing: the cached Hadoop-FS handle
-    (resolved once — per-batch protocol reads must not re-resolve a
-    FileSystem) and the persisted ``n_bkt`` knob, which is NEVER
-    guessed: a wrong modulus silently misfiles every lookup (prior
-    state appears empty, duplicates slip in). Subclasses set ``_KIND``
-    (error-message prefix) and ``_INIT_FN`` (the initializer to name
-    in the error)."""
+class EpochStoreBase:
+    """Generation-versioned epoch store root — the layer BOTH ingest
+    stores share (this module's four-sink MinHash store and
+    `operators/substring_ingest`'s two-sink window-fingerprint store).
+    It holds the cached Hadoop-FS handle (resolved once — per-batch
+    protocol reads must not re-resolve a FileSystem) and the persisted
+    ``n_bkt`` knob, which is NEVER guessed: a wrong modulus silently
+    misfiles every lookup (prior state appears empty, duplicates slip
+    in). Sink paths resolve the live generation through the ``_CURRENT``
+    pointer at access time — readers see a fully published generation
+    or the grace predecessor, never a half-compacted directory. The
+    streaming checkpoint and the writer lock live at the root, OUTSIDE
+    generations (epoch ids are monotonic across compactions, so a
+    folded store keeps satisfying every future ``batch_id < eid``
+    prior-read).
+
+    Subclasses declare their layout as class attributes — the shared
+    read path, init, epoch driver (:func:`_run_epoch`), drain
+    (:func:`_drain_epoch_stream`) and fold engine
+    (:func:`_compact_into_new_generation`) are entirely layout-driven;
+    each store adds only its per-epoch plan:
+
+    - ``_KIND``: error-message prefix; ``_INIT_FN``: the initializer to
+      name in errors
+    - ``_SINKS``: sink names (tuple)
+    - ``_SINK_BKT``: sink → lookup-bucket partition column (absent =
+      the sink has no pruned lookups)
+    - ``_SINK_FOLD_SALT``: bucketed sink → second range-partition key
+      so one oversized bucket spreads across several size-bounded fold
+      files while each task still holds only 1-2 buckets
+    - ``_SINK_SCHEMAS``: sink → DDL of its data columns; every read
+      passes it with the partition columns (:meth:`read_schema`)
+    - ``_REP_SINK``: the representative (largest) sink whose byte sizes
+      drive the incremental fold's LSM full-upgrade decision
+    - :meth:`_fold_collapse`: per-sink fold rewrite hook (identity by
+      default; the dedup store collapses its cumulative count sidecar)
+
+    Every layout carries the shared ``hwm`` sink — one
+    ``max_doc_id`` row per committed epoch, the persisted doc-id
+    high-water mark that makes the monotone-ingest contract ENFORCED
+    rather than documented (VERDICT r14 #1): keep-first decisions in
+    both stores assume every batch's doc ids exceed all committed ones,
+    and :func:`_guarded_epoch_stats` raises IN-PLAN when a
+    batch violates it. The fold collapses the sink to its running max
+    (read-equivalent: every consumer only ever takes ``max``)."""
 
     _KIND = "epoch store"
     _INIT_FN = "its init function"
+    _SINKS: tuple[str, ...] = ()
+    _SINK_BKT: dict[str, str] = {}
+    _SINK_FOLD_SALT: dict[str, str] = {}
+    _SINK_SCHEMAS: dict[str, str] = {}
+    _REP_SINK: str = ""
 
     def __init__(self, base: str, fs: fsio.Fs | None = None):
         self.base = base
@@ -131,51 +174,6 @@ class MetaStoreBase:
                     "without its root metadata; refusing to guess n_bkt"
                 ) from None
         return self._n_bkt
-
-
-class EpochStoreBase(MetaStoreBase):
-    """Generation-versioned epoch store root — the layer BOTH ingest
-    stores share (this module's four-sink MinHash store and
-    `operators/substring_ingest`'s two-sink window-fingerprint store).
-    Sink paths resolve the live generation through the ``_CURRENT``
-    pointer at access time — readers see a fully published generation
-    or the grace predecessor, never a half-compacted directory. The
-    streaming checkpoint and the writer lock live at the root, OUTSIDE
-    generations (epoch ids are monotonic across compactions, so a
-    folded store keeps satisfying every future ``batch_id < eid``
-    prior-read).
-
-    Subclasses declare their layout as class attributes — the shared
-    read path, init and fold engine (:func:`_compact_into_new_generation`)
-    are entirely layout-driven:
-
-    - ``_SINKS``: sink names (tuple)
-    - ``_SINK_BKT``: sink → lookup-bucket partition column (absent =
-      the sink has no pruned lookups)
-    - ``_SINK_FOLD_SALT``: bucketed sink → second range-partition key
-      so one oversized bucket spreads across several size-bounded fold
-      files while each task still holds only 1-2 buckets
-    - ``_SINK_SCHEMAS``: sink → DDL of its data columns; every read
-      passes it with the partition columns (:meth:`read_schema`)
-    - ``_REP_SINK``: the representative (largest) sink whose byte sizes
-      drive the incremental fold's LSM full-upgrade decision
-    - :meth:`_fold_collapse`: per-sink fold rewrite hook (identity by
-      default; the dedup store collapses its cumulative count sidecar)
-
-    Every layout carries the shared ``hwm`` sink — one
-    ``max_doc_id`` row per committed epoch, the persisted doc-id
-    high-water mark that makes the monotone-ingest contract ENFORCED
-    rather than documented (VERDICT r14 #1): keep-first decisions in
-    both stores assume every batch's doc ids exceed all committed ones,
-    and :func:`_guarded_epoch_stats` raises IN-PLAN when a
-    batch violates it. The fold collapses the sink to its running max
-    (read-equivalent: every consumer only ever takes ``max``)."""
-
-    _SINKS: tuple[str, ...] = ()
-    _SINK_BKT: dict[str, str] = {}
-    _SINK_FOLD_SALT: dict[str, str] = {}
-    _SINK_SCHEMAS: dict[str, str] = {}
-    _REP_SINK: str = ""
 
     def current_generation(self) -> str:
         return G.read_current(self.base, init_hint=self._INIT_FN, fs=self.fs)
@@ -542,84 +540,6 @@ def _publish_watermark_row(
     )
 
 
-def dedup_ingest_batch(
-    batch: DataFrame,
-    eid: int,
-    store: DedupIngestStore,
-    *,
-    tau: float = 0.8,
-    max_bucket: int = 256,
-    fail_after: str | None = None,
-    allow_refolded_replay: bool = False,
-    _stream_epoch: bool = False,
-) -> None:
-    """Process one micro-batch (the foreachBatch body). Deterministic
-    given (batch contents, prior committed epochs); idempotent under
-    retry — see module docstring.
-
-    A store has ONE writer sequence: either a streaming drain (whose
-    checkpoint owns the epoch numbering) or direct calls (the bench's
-    checkpoint-less pattern). A direct call against a stream-driven
-    store raises: its epoch id either collides with the stream's
-    numbering (the resumed drain reuses the id and its static overwrite
-    destroys the direct epoch) or sits above every future stream eid
-    (invisible to all ``batch_id < eid`` prior reads — the duplicates
-    it ingested are never consulted). Both are silent data loss.
-
-    A direct epoch id at or below the store's FOLD frontier also
-    raises: after a compaction folds epochs 0..hi into the single
-    ``batch_id=hi`` partition, replaying eid == hi statically
-    overwrites that partition (destroying every folded epoch) and
-    replaying eid < hi re-materializes rows the fold already carries
-    (every later batch would read them twice). Same-id replay is only
-    idempotent ABOVE the fold frontier, where the original partition
-    still exists to be overwritten. ``allow_refolded_replay=True`` is
-    the explicit opt-out for deliberate rebuild-from-source replays.
-
-    The generation is resolved ONCE here, so all seven sink accesses of
-    the epoch (3 prior reads, 4 writes) land in the same tree even if a
-    pointer flip happens mid-batch. :func:`run_dedup_ingest_stream`
-    holds the store's single-writer lock around the whole drain; a
-    DIRECT call takes the same lock itself for the whole
-    check-and-write cycle, so its refusal checks can never race a
-    compactor on another driver publishing/GC'ing the generation
-    being inspected (ADVICE r10).
-
-    BREAKING CHANGE vs the r10 contract (ADVICE r11): direct calls now
-    SELF-ACQUIRE the store's non-reentrant writer lock. A caller
-    following the old documented pattern — taking
-    ``generations._index_write_lock(spark, store.base)`` around the call
-    — now fails with a spurious contention error; drop the outer lock
-    (this function serializes itself), or drive batches through
-    :func:`run_dedup_ingest_stream`, which passes ``_stream_epoch=True``
-    and owns the lock for the whole drain.
-
-    ``fail_after`` is a crash-injection hook for tests: one of
-    ``'decisions' | 'bands_idx' | 'counts' | 'docstore'`` raises
-    RuntimeError immediately after that sink's write, simulating a crash
-    between the write and the checkpoint commit.
-    """
-    lease = (
-        G._index_write_lock(batch.sparkSession, store.base)
-        if not _stream_epoch
-        else None
-    )
-    try:
-        _dedup_ingest_batch_locked(
-            batch,
-            eid,
-            store,
-            tau=tau,
-            max_bucket=max_bucket,
-            fail_after=fail_after,
-            allow_refolded_replay=allow_refolded_replay,
-            _stream_epoch=_stream_epoch,
-        )
-    finally:
-        if lease is not None:
-            lease.release()
-
-
 def _direct_epoch_checks(
     store: EpochStoreBase, eid: int, allow_refolded_replay: bool
 ) -> str:
@@ -659,81 +579,230 @@ def _direct_epoch_checks(
     return gen_dir
 
 
-def _dedup_ingest_batch_locked(
+def _run_epoch(
+    batch: DataFrame,
+    eid: int,
+    store: EpochStoreBase,
+    plan,
+    *,
+    fail_after: str | None,
+    allow_refolded_replay: bool,
+    stream_epoch: bool,
+) -> None:
+    """The epoch driver both stores share; the store's ``plan`` supplies
+    only the per-epoch dataflow. ``plan(batch, eid, store, sink,
+    persist)`` returns ``(exploded, bkt_col, ids, publish)`` — its
+    persisted exploded frame, bucket column and optional id frame for
+    :func:`_guarded_epoch_stats`, and ``publish(touched)`` → ``(writes,
+    defer)`` for :func:`_publish_epoch_sinks`. ``persist`` caches a frame
+    until the epoch exits.
+
+    A DIRECT call self-acquires the store's writer lock for the whole
+    check-and-write cycle and runs :func:`_direct_epoch_checks`; a stream
+    epoch runs under the drain's lock. The generation is resolved ONCE,
+    under the lock, so every sink access lands in the same tree and no
+    compactor can publish/GC it between check and writes (ADVICE r10).
+    An empty micro-batch returns after the fused preamble, having
+    written NOTHING. Stream epochs publish the watermark row IN the
+    concurrent wave (a replay overwrites every sink from the same
+    batch, so publish order is immaterial once the in-plan guard ran);
+    DIRECT epochs have no replay machinery, so the watermark commits
+    BEFORE any data sink and a crashed epoch can never leave data rows
+    whose ids a later epoch could legally reuse (``fail_after='hwm'``
+    crashes right after it)."""
+    s = batch.sparkSession
+    eid = int(eid)
+    lease = None if stream_epoch else G._index_write_lock(s, store.base)
+    persisted: list[DataFrame] = []
+
+    def persist(df: DataFrame) -> DataFrame:
+        persisted.append(df.persist())
+        return persisted[-1]
+
+    try:
+        if stream_epoch:
+            gen_dir = os.path.join(store.base, store.current_generation())
+        else:
+            gen_dir = _direct_epoch_checks(store, eid, allow_refolded_replay)
+        sink = {name: os.path.join(gen_dir, name) for name in store._SINKS}
+        exploded, bkt_col, ids, publish = plan(batch, eid, store, sink, persist)
+        stats = _guarded_epoch_stats(
+            exploded, bkt_col, sink["hwm"], eid, store, ids=ids
+        )
+        if stats is None:
+            return  # empty micro-batch: write NOTHING
+        touched, wm = stats
+        hwm_pub = ("hwm", lambda: _publish_watermark_row(s, sink["hwm"], eid, wm))
+        wave_head = []
+        if stream_epoch:
+            wave_head = [hwm_pub]
+        else:
+            hwm_pub[1]()
+            if fail_after == "hwm":
+                raise RuntimeError("injected crash after hwm write")
+        writes, defer = publish(touched)
+        _publish_epoch_sinks(wave_head + writes, fail_after, defer=defer)
+    finally:
+        for df in persisted:
+            df.unpersist()
+        if lease is not None:
+            lease.release()
+
+
+def _drain_epoch_stream(
+    spark: SparkSession,
+    src: str,
+    store: EpochStoreBase,
+    epoch,
+    *,
+    fail_epoch: int | None,
+    fail_after: str | None,
+    max_files_per_trigger: int,
+    compact_every: int | None,
+    target_file_bytes: int,
+    reader_grace_seconds: float,
+) -> None:
+    """The drain both stores share: ``src`` streams with availableNow
+    through ``epoch(batch, eid, fail_after)`` — the store's public batch
+    function as a stream epoch — under the writer lock, checkpointed at
+    ``<base>/ckpt`` (see :func:`run_dedup_ingest_stream`)."""
+
+    def process(batch: DataFrame, eid: int) -> None:
+        epoch(batch, eid, fail_after if eid == fail_epoch else None)
+        if compact_every and eid > 0 and eid % compact_every == 0:
+            # drain holds the writer lock — INCREMENTAL fold in place
+            # (only epochs past the previous fold marker are rewritten;
+            # this epoch is not yet committed, so its dirs are carried
+            # verbatim and its replay overwrites them)
+            _compact_into_new_generation(
+                spark,
+                store,
+                target_file_bytes,
+                full=False,
+                grace_seconds=reader_grace_seconds,
+            )
+            if fail_after == "compact" and eid == fail_epoch:
+                raise RuntimeError("injected crash after in-drain fold")
+
+    # single-writer lock for the drain: the store compactor publishes
+    # new generations, so a drain racing it could write epoch partitions
+    # into a generation about to be superseded and GC'd — same lock
+    # machinery as the ANN index / rollup-store writers, stale-holder
+    # reclaim included
+    lease = G._index_write_lock(spark, store.base)
+    try:
+        _refuse_direct_driven(store)
+        st = (
+            spark.readStream.schema("doc_id long, text string")
+            .option("maxFilesPerTrigger", max_files_per_trigger)
+            .parquet(src)
+        )
+        q = (
+            st.writeStream.foreachBatch(process)
+            .option("checkpointLocation", os.path.join(store.base, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    finally:
+        lease.release()
+
+
+def dedup_ingest_batch(
     batch: DataFrame,
     eid: int,
     store: DedupIngestStore,
     *,
+    tau: float = 0.8,
+    max_bucket: int = 256,
+    fail_after: str | None = None,
+    allow_refolded_replay: bool = False,
+    _stream_epoch: bool = False,
+) -> None:
+    """Process one micro-batch (the foreachBatch body). Deterministic
+    given (batch contents, prior committed epochs); idempotent under
+    retry — see module docstring.
+
+    A store has ONE writer sequence: either a streaming drain (whose
+    checkpoint owns the epoch numbering) or direct calls (the bench's
+    checkpoint-less pattern). A direct call against a stream-driven
+    store raises: its epoch id either collides with the stream's
+    numbering (the resumed drain reuses the id and its static overwrite
+    destroys the direct epoch) or sits above every future stream eid
+    (invisible to all ``batch_id < eid`` prior reads — the duplicates
+    it ingested are never consulted). Both are silent data loss.
+
+    A direct epoch id at or below the store's FOLD frontier also
+    raises: after a compaction folds epochs 0..hi into the single
+    ``batch_id=hi`` partition, replaying eid == hi statically
+    overwrites that partition (destroying every folded epoch) and
+    replaying eid < hi re-materializes rows the fold already carries
+    (every later batch would read them twice). Same-id replay is only
+    idempotent ABOVE the fold frontier, where the original partition
+    still exists to be overwritten. ``allow_refolded_replay=True`` is
+    the explicit opt-out for deliberate rebuild-from-source replays.
+
+    Locking and generation resolution are the shared engine's
+    (:func:`_run_epoch`): a direct call SELF-ACQUIRES the store's
+    non-reentrant writer lock (since r11 — a caller must not hold
+    ``generations._index_write_lock`` around it);
+    :func:`run_dedup_ingest_stream` passes ``_stream_epoch=True`` and
+    owns the lock for the whole drain.
+
+    ``fail_after`` is a crash-injection hook for tests: one of
+    ``'decisions' | 'bands_idx' | 'counts' | 'docstore'`` raises
+    RuntimeError immediately after that sink's write, simulating a crash
+    between the write and the checkpoint commit.
+    """
+    _run_epoch(
+        batch,
+        eid,
+        store,
+        functools.partial(_dedup_epoch_plan, tau=tau, max_bucket=max_bucket),
+        fail_after=fail_after,
+        allow_refolded_replay=allow_refolded_replay,
+        stream_epoch=_stream_epoch,
+    )
+
+
+def _dedup_epoch_plan(
+    batch: DataFrame,
+    eid: int,
+    store: DedupIngestStore,
+    sink: dict[str, str],
+    persist,
+    *,
     tau: float,
     max_bucket: int,
-    fail_after: str | None,
-    allow_refolded_replay: bool,
-    _stream_epoch: bool,
-) -> None:
+):
+    """The MinHash store's per-epoch plan for :func:`_run_epoch`: the
+    batch's ranked band rows as the exploded frame, then — given the
+    touched buckets — the four data-sink writes."""
     from data_pipeline_with_big_data_stack_spark.operators.dedup_index import (
         minhash_signatures,
         verify_jaccard,
     )
 
     s = batch.sparkSession
-    eid = int(eid)
-    # resolved ONCE, under the writer lock the caller holds, so the
-    # refusal checks and all seven sink accesses of the epoch land in
-    # the same tree — a concurrent compactor can no longer publish/GC
-    # the generation between check and writes (ADVICE r10 TOCTOU).
-    # Since r16 stream epochs resolve BEFORE the fused protocol
-    # preamble (its guarded-stats action needs the hwm sink path): an
-    # empty stream micro-batch now costs one pointer read plus one
-    # empty-aggregate action where it cost one isEmpty action — same
-    # order of cost on the rare empty epoch, one action saved on every
-    # non-empty one (the hot path)
-    if not _stream_epoch:
-        gen_dir = _direct_epoch_checks(store, eid, allow_refolded_replay)
-    else:
-        gen_dir = os.path.join(store.base, store.current_generation())
     n_bkt = store.n_bkt
-    sink = {name: os.path.join(gen_dir, name) for name in store._SINKS}
-
     bands = minhash_signatures(batch).select(
         "doc_id",
         F.posexplode(F.array("band0", "band1", "band2")).alias("band", "band_key"),
     )
     w = W.partitionBy("band", "band_key").orderBy("doc_id")
-    new_ranked = (
-        bands.withColumn("bkt", _band_bkt(n_bkt))
-        .withColumn("brk", F.row_number().over(w))
-        .persist()
+    # the fused preamble materializes new_ranked and returns the batch's
+    # touched lookup buckets — BOUNDED (≤ n_bkt ints). doc_id min/max
+    # ride this frame (no ``ids=``): minhash_signatures emits exactly
+    # one row per doc (a select — NULL text coalesces, nothing filters)
+    # and the band array is a literal 3-tuple, so the exploded ids are
+    # id-complete for the batch
+    new_ranked = persist(
+        bands.withColumn("bkt", _band_bkt(n_bkt)).withColumn(
+            "brk", F.row_number().over(w)
+        )
     )
-    persisted = [new_ranked]
-    try:
-        # the epoch's FIRST action (fused, r16): materialize new_ranked
-        # and return the batch's touched lookup buckets — BOUNDED
-        # (≤ n_bkt ints) — together with the in-plan-guarded watermark.
-        # A violating batch aborts here, before any sink is written.
-        # doc_id min/max ride the exploded frame: minhash_signatures
-        # emits exactly one row per doc (a select — NULL text
-        # coalesces, nothing filters) and the band array is a literal
-        # 3-tuple, so the exploded ids are id-complete for the batch
-        stats = _guarded_epoch_stats(new_ranked, "bkt", sink["hwm"], eid, store)
-        if stats is None:
-            return  # empty micro-batch: write NOTHING
-        touched, wm = stats
-        hwm_pub = ("hwm", lambda: _publish_watermark_row(s, sink["hwm"], eid, wm))
-        wave_head = []
-        if _stream_epoch:
-            # stream epochs publish the watermark row IN the concurrent
-            # wave below (r16): a crash-replayed epoch overwrites every
-            # sink from the same batch, so intra-epoch publish order is
-            # immaterial — only the in-plan guard above must precede
-            # everything, and it already ran
-            wave_head = [hwm_pub]
-        else:
-            # DIRECT epochs have no replay machinery: the watermark must
-            # commit BEFORE any data sink so a crashed epoch can never
-            # leave data rows whose ids a later epoch could legally reuse
-            hwm_pub[1]()
-            if fail_after == "hwm":
-                raise RuntimeError("injected crash after hwm write")
+
+    def publish(touched: list[int]):
         # per-bucket prior occupancy from the SIDECAR (one row per
         # touched (bucket, epoch)) — the bands index itself is never
         # aggregated here, and the sidecar scan prunes to touched bkts
@@ -745,14 +814,12 @@ def _dedup_ingest_batch_locked(
             .groupBy("band", "band_key")
             .agg(F.max("n").alias("prior_n"))
         )
-        capped = (
+        capped = persist(
             new_ranked.join(prior_counts, ["band", "band_key"], "left")
             .withColumn("rk", F.coalesce("prior_n", F.lit(0)) + F.col("brk"))
             .filter(F.col("rk") <= max_bucket)
             .select("doc_id", "band", "band_key", "rk", "bkt")
-            .persist()
         )
-        persisted.append(capped)
         # prior bands scan prunes to the batch's buckets: any prior row
         # that can equi-join a batch row on (band, band_key) has the
         # same bkt by construction, so pruning loses no candidate
@@ -761,7 +828,7 @@ def _dedup_ingest_batch_locked(
             schema=store.read_schema("bands_idx"),
         )
         all_bands = prior_bands.unionByName(capped.drop("bkt"))
-        cand = (
+        cand = persist(
             capped.drop("bkt")
             .alias("n")
             .join(all_bands.alias("p"), ["band", "band_key"])
@@ -771,9 +838,7 @@ def _dedup_ingest_batch_locked(
                 F.col("n.doc_id").alias("doc_b"),
             )
             .distinct()
-            .persist()
         )
-        persisted.append(cand)
         # candidate partners' doc-store buckets (doc_b is always in the
         # batch, so only doc_a needs prior text) — again ≤ n_bkt ints
         partner_bkts = sorted(
@@ -813,23 +878,20 @@ def _dedup_ingest_batch_locked(
         docs_out = batch.select("doc_id", "text").withColumn(
             "dbkt", _doc_bkt("doc_id", n_bkt)
         )
-        _publish_epoch_sinks(
-            wave_head
-            + [
+        return (
+            [
                 ("decisions", lambda: _write_epoch(rejected, sink["decisions"], eid, None)),
                 ("bands_idx", lambda: _write_epoch(capped, sink["bands_idx"], eid, "bkt", n_bkt)),
                 ("counts", lambda: _write_epoch(epoch_counts, sink["counts"], eid, "bkt", n_bkt)),
                 ("docstore", lambda: _write_epoch(docs_out, sink["docstore"], eid, "dbkt", n_bkt)),
             ],
-            fail_after,
             # the decisions job's plan LISTS the docstore's prior
             # partitions (`texts` is not cached), so the docstore
             # publish must not mutate that directory concurrently
-            defer={"docstore"},
+            {"docstore"},
         )
-    finally:
-        for df in persisted:
-            df.unpersist()
+
+    return new_ranked, "bkt", None, publish
 
 
 def run_dedup_ingest_stream(
@@ -864,9 +926,10 @@ def run_dedup_ingest_stream(
     batch even when the data scan prunes — so the fold is what keeps
     per-batch cost truly bounded over an unbounded stream. Safe under
     retry: the fold only covers CHECKPOINT-committed epochs (the
-    in-flight epoch's fresh dirs are hardlink-carried and overwritten
-    by any replay), and a replayed epoch simply re-folds into one more
-    generation — a pure relayout each time. READER CADENCE: every fold
+    in-flight epoch's fresh dirs are carried by manifest reference,
+    which any replay's overwrite shadows), and a replayed epoch simply
+    re-folds into one more generation — a pure relayout each time.
+    READER CADENCE: every fold
     is a publish, and GC keeps exactly one grace generation, so a
     serving read that resolved the pointer just before a publish
     survives, by default, only until the NEXT publish — worst case ONE
@@ -889,54 +952,26 @@ def run_dedup_ingest_stream(
     generation resolved after acquisition, so it can never race another
     driver's compactor publishing/GC'ing the tree mid-scan (ADVICE
     r10)."""
-
-    def process(batch: DataFrame, eid: int) -> None:
-        dedup_ingest_batch(
-            batch,
+    _drain_epoch_stream(
+        spark,
+        src,
+        store,
+        lambda b, eid, fail: dedup_ingest_batch(
+            b,
             eid,
             store,
             tau=tau,
             max_bucket=max_bucket,
-            fail_after=fail_after if eid == fail_epoch else None,
+            fail_after=fail,
             _stream_epoch=True,
-        )
-        if compact_every and eid > 0 and eid % compact_every == 0:
-            # drain holds the writer lock — INCREMENTAL fold in place
-            # (only epochs past the previous fold marker are rewritten;
-            # this epoch is not yet committed, so its dirs are carried
-            # verbatim and its replay overwrites them)
-            _compact_into_new_generation(
-                spark,
-                store,
-                target_file_bytes,
-                full=False,
-                grace_seconds=reader_grace_seconds,
-            )
-            if fail_after == "compact" and eid == fail_epoch:
-                raise RuntimeError("injected crash after in-drain fold")
-
-    # single-writer lock for the drain: the store compactor
-    # (compact_dedup_ingest_store) publishes new generations, so a
-    # drain racing it could write epoch partitions into a generation
-    # about to be superseded and GC'd — same lock machinery as the ANN
-    # index / rollup-store writers, stale-holder reclaim included
-    lease = G._index_write_lock(spark, store.base)
-    try:
-        _refuse_direct_driven(store)
-        st = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .parquet(src)
-        )
-        q = (
-            st.writeStream.foreachBatch(process)
-            .option("checkpointLocation", os.path.join(store.base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        lease.release()
+        ),
+        fail_epoch=fail_epoch,
+        fail_after=fail_after,
+        max_files_per_trigger=max_files_per_trigger,
+        compact_every=compact_every,
+        target_file_bytes=target_file_bytes,
+        reader_grace_seconds=reader_grace_seconds,
+    )
 
 
 def _refuse_direct_driven(store: EpochStoreBase) -> None:
@@ -982,10 +1017,10 @@ def compact_dedup_ingest_store(
 ) -> dict[str, int]:
     """Small-file hygiene for a long-running ingest — layout-driven, so
     it folds ANY :class:`EpochStoreBase` store (this module's four-sink
-    MinHash store; `operators/substring_ingest`'s two-sink store via
-    its :func:`substring_ingest.compact_substring_ingest_store` entry
-    point): every epoch appends
-    ~1 file per sink per touched bucket, so thousands of micro-batches
+    MinHash store; `operators/substring_ingest`'s two-sink store, which
+    re-exports it as ``compact_substring_ingest_store``): every epoch
+    appends ~1 file per sink per touched bucket, so thousands of
+    micro-batches
     accumulate thousands of tiny files. Fold all COMMITTED epochs of
     each sink into the single highest committed ``batch_id`` partition
     of a NEW generation, then publish it with one atomic pointer flip
@@ -1088,14 +1123,13 @@ def _compact_into_new_generation(
     store: EpochStoreBase,
     target_file_bytes: int,
     full: bool = True,
-    report: bool | None = None,
     grace_seconds: float = 0.0,
 ) -> dict[str, int]:
     """``full=True`` folds every committed epoch into one partition —
     the manual small-file collapse. ``full=False`` is the INCREMENTAL
     fold the self-maintaining drain uses: only epochs past the previous
-    fold marker are read and rewritten; earlier fold partitions are
-    hardlink-carried (metadata-only), and the fold self-upgrades to
+    fold marker are read and rewritten; earlier fold partitions carry
+    by manifest reference (metadata-only), and the fold self-upgrades to
     full on the LSM size-ratio trigger — everything accumulated SINCE
     the last full fold has grown to rival that fold's base — or when
     fold partitions exceed ``_FULL_FOLD_MAX_PARTS``. Base doubling
@@ -1107,11 +1141,10 @@ def _compact_into_new_generation(
     `operators/segman`) — move by MANIFEST REFERENCE: one small write
     per sink, zero data bytes on every scheme (VERDICT r11 #1; the r10
     design hardlinked locally and byte-copied on linkless stores).
-    ``report`` (default: follow the CALLER's ``full``) controls the
-    per-sink file-count listing — a recursive walk the drain's hot path
-    must not pay, even when a fold self-upgrades."""
-    if report is None:
-        report = full
+    Only a caller-requested ``full`` fold reports per-sink file counts —
+    a recursive walk the drain's hot path must not pay, even when a
+    fold self-upgrades."""
+    report = full
     fs = store.fs
     cur = store.current_generation()
     cur_dir = os.path.join(store.base, cur)

@@ -205,27 +205,24 @@ class Fs:
 
     def list_names(self, path: str, missing_ok: bool = False) -> list[str]:
         """Child basenames of ``path`` (the ``os.listdir`` analogue)."""
-        try:
-            sts = self._fs.listStatus(self._p(path))
-        except Exception as exc:  # noqa: BLE001 - py4j wraps the Java cause
-            if missing_ok and _is_missing(exc):
-                return []
-            if _is_missing(exc):
-                raise FileNotFoundError(path) from exc
-            raise
-        return [st.getPath().getName() for st in sts]
+        return self._child_names(path, missing_ok, dirs_only=False)
 
     def list_dir_names(self, path: str, missing_ok: bool = False) -> list[str]:
         """Child DIRECTORY basenames only."""
+        return self._child_names(path, missing_ok, dirs_only=True)
+
+    def _child_names(self, path: str, missing_ok: bool, dirs_only: bool) -> list[str]:
         try:
             sts = self._fs.listStatus(self._p(path))
-        except Exception as exc:  # noqa: BLE001
-            if missing_ok and _is_missing(exc):
+        except Exception as exc:  # noqa: BLE001 - py4j wraps the Java cause
+            if not _is_missing(exc):
+                raise
+            if missing_ok:
                 return []
-            if _is_missing(exc):
-                raise FileNotFoundError(path) from exc
-            raise
-        return [st.getPath().getName() for st in sts if st.isDirectory()]
+            raise FileNotFoundError(path) from exc
+        return [
+            st.getPath().getName() for st in sts if not dirs_only or st.isDirectory()
+        ]
 
     def list_files_recursive(self, path: str) -> list[str]:
         """Full paths of every file under ``path`` (the ``os.walk``

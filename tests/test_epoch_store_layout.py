@@ -14,7 +14,9 @@ Pinned here for both stores:
   older releases wrote at init behaves exactly like a fresh one, and
   ``-1`` never counts as an epoch;
 - a direct epoch that crashed after publishing a non-prefix subset of
-  its sinks replays to the same state as a clean single run.
+  its sinks replays to the same state as a clean single run;
+- an empty micro-batch writes nothing, and the next epoch ingests
+  normally.
 """
 
 from __future__ import annotations
@@ -30,17 +32,16 @@ from data_pipeline_with_big_data_stack_spark.operators import substring_ingest a
 from data_pipeline_with_big_data_stack_spark.tables import load_table
 from tests.conftest import SF_SMOKE
 
-# per store: (module, init, direct batch, stream drain, compactor)
+# per store: (init, direct batch, stream drain, compactor); the epoch
+# engine both stores run (lock, preamble, publish wave) lives in DI
 STORES = {
     "dedup": (
-        DI,
         DI.init_dedup_ingest_store,
         DI.dedup_ingest_batch,
         DI.run_dedup_ingest_stream,
         DI.compact_dedup_ingest_store,
     ),
     "substring": (
-        SI,
         SI.init_substring_store,
         SI.substring_ingest_batch,
         SI.run_substring_ingest_stream,
@@ -90,7 +91,7 @@ def _logical(store, sink: str) -> dict[str, list[str]]:
 
 @pytest.mark.parametrize("kind", KINDS)
 def test_fresh_store_reads_empty_declared_schema_without_jobs(spark, tmp_path, kind):
-    _mod, init, _batch, _run, _compact = STORES[kind]
+    init, _batch, _run, _compact = STORES[kind]
     sc = spark.sparkContext
     group = f"fresh-epoch-store-{kind}"
     sc.setJobGroup(group, "fresh epoch store")
@@ -115,7 +116,7 @@ def test_written_files_carry_the_declared_schema(spark, kind):
     — epoch writes, fold writes, partitions carried by reference — with
     schema INFERENCE, then the same after a full fold: each must equal
     the declared read schema."""
-    _mod, init, _batch, run, compact = STORES[kind]
+    init, _batch, run, compact = STORES[kind]
     base, src = DI.stage_ordered_chunks(spark, _docs(spark, 120), n_chunks=4)
     store = init(spark, os.path.join(base, "store"))
     run(spark, src, store, compact_every=2)
@@ -147,7 +148,7 @@ def _plant_seed_partitions(spark, store) -> None:
 
 @pytest.mark.parametrize("kind", KINDS)
 def test_store_with_old_seed_partitions_behaves_like_a_fresh_one(spark, tmp_path, kind):
-    mod, init, batch, _run, compact = STORES[kind]
+    init, batch, _run, compact = STORES[kind]
     thirds = _id_slices(spark, 3)
     # a large first epoch keeps the second fold incremental (the data
     # since the full fold stays below the folded base)
@@ -158,10 +159,10 @@ def test_store_with_old_seed_partitions_behaves_like_a_fresh_one(spark, tmp_path
         if name == "seeded":
             _plant_seed_partitions(spark, store)
             assert "batch_id=-1" in _logical(store, "hwm")
-            mod._refuse_direct_driven(store)  # seeds alone are no epochs
+            DI._refuse_direct_driven(store)  # seeds alone are no epochs
         batch(slices[0], 0, store)
         with pytest.raises(RuntimeError, match=r"epochs \[0\] exist"):
-            mod._refuse_direct_driven(store)
+            DI._refuse_direct_driven(store)
         marks = []
         for eid, full in ((0, True), (1, False)):
             if eid:
@@ -190,7 +191,7 @@ _TORN = {"dedup": ("counts", "docstore"), "substring": ("windows_idx",)}
 def test_direct_epoch_replay_from_non_prefix_sink_subset(
     spark, tmp_path, monkeypatch, kind
 ):
-    mod, init, batch, _run, _compact = STORES[kind]
+    init, batch, _run, _compact = STORES[kind]
     slices = _id_slices(spark, 2)
     ref = init(spark, str(tmp_path / "ref"))
     for eid, b in enumerate(slices):
@@ -198,14 +199,14 @@ def test_direct_epoch_replay_from_non_prefix_sink_subset(
 
     store = init(spark, str(tmp_path / "torn"))
     batch(slices[0], 0, store)
-    publish = mod._publish_epoch_sinks
+    publish = DI._publish_epoch_sinks
 
     def torn(writes, fail_after, defer=frozenset()):
         publish([w for w in writes if w[0] in _TORN[kind]], None)
         raise RuntimeError("simulated mid-wave crash")
 
-    monkeypatch.setattr(mod, "_publish_epoch_sinks", torn)
-    monkeypatch.setattr(mod, "_publish_watermark_row", lambda *a, **k: None)
+    monkeypatch.setattr(DI, "_publish_epoch_sinks", torn)
+    monkeypatch.setattr(DI, "_publish_watermark_row", lambda *a, **k: None)
     with pytest.raises(RuntimeError, match="simulated mid-wave crash"):
         batch(slices[1], 1, store)
     monkeypatch.undo()
@@ -214,3 +215,26 @@ def test_direct_epoch_replay_from_non_prefix_sink_subset(
 
     batch(slices[1], 1, store)  # replay the same direct epoch id
     assert _contents(spark, store) == _contents(spark, ref)
+
+
+@pytest.mark.parametrize("kind", KINDS)
+def test_empty_micro_batch_writes_nothing(spark, tmp_path, kind):
+    """A direct epoch over an empty batch returns after the fused
+    preamble: no sink — the watermark included — gets a ``batch_id=0``
+    partition or even a directory, and the next epoch then ingests
+    exactly as it would on a fresh store."""
+    init, batch, _run, _compact = STORES[kind]
+    docs = _id_slices(spark, 1)[0]
+    store = init(spark, str(tmp_path / "st"))
+    batch(docs.limit(0), 0, store)
+    for sink in store._SINKS:
+        assert "batch_id=0" not in _logical(store, sink), sink
+    gen_dir = os.path.join(store.base, store.current_generation())
+    assert not set(os.listdir(gen_dir)) & set(store._SINKS)
+
+    ref = init(spark, str(tmp_path / "ref"))
+    batch(docs, 1, ref)
+    batch(docs, 1, store)
+    got = _contents(spark, store)
+    assert got == _contents(spark, ref)
+    assert got["decisions"] and got["hwm"], "the fixture must yield rows"

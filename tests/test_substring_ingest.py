@@ -45,6 +45,15 @@ def _drain(spark, docs, tmp, n_chunks=4, **kw):
     return store
 
 
+@pytest.fixture(scope="module")
+def ref_drain(spark):
+    """One crash-free 4-chunk drain of ``_small_docs``, shared READ-ONLY
+    by the crash-replay tests that compare against it — a drain is
+    deterministic, so re-draining per test only repeats the same four
+    epochs."""
+    return _drain(spark, _small_docs(spark), tmp=None)
+
+
 def _decisions(spark, store):
     return sorted(
         tuple(r)
@@ -64,7 +73,7 @@ def test_drained_equals_batch_for_any_chunking(spark, tmp_path):
         assert _decisions(spark, store) == ref, f"diverged at {n_chunks} chunks"
 
 
-def test_crash_retry_equals_single_run(spark, tmp_path):
+def test_crash_retry_equals_single_run(spark, ref_drain):
     """Crash after the decisions publish but before the index publish,
     restart, drain — both sinks (including batch_id columns) must equal
     a crash-free run: the replayed epoch overwrites its own partitions
@@ -72,9 +81,8 @@ def test_crash_retry_equals_single_run(spark, tmp_path):
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
     docs = _small_docs(spark)
-    ref_store = _drain(spark, docs, tmp_path)
     ref = {
-        s: sorted(tuple(r) for r in ref_store.read(spark, s).collect())
+        s: sorted(tuple(r) for r in ref_drain.read(spark, s).collect())
         for s in ("decisions", "windows_idx")
     }
 
@@ -318,7 +326,7 @@ def test_prior_read_scan_drops_with_higher_n_bkt(spark, tmp_path):
     )
 
 
-def test_crash_after_in_drain_fold_replays_clean(spark, tmp_path):
+def test_crash_after_in_drain_fold_replays_clean(spark, ref_drain):
     """Crash injected right after an in-drain fold publish: the restart
     must resume from the checkpoint and converge to a crash-free
     folded drain's values (the replayed epoch statically overwrites the
@@ -326,7 +334,7 @@ def test_crash_after_in_drain_fold_replays_clean(spark, tmp_path):
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
     docs = _small_docs(spark)
-    ref = _sink_values(spark, _drain(spark, docs, tmp_path, n_chunks=4))
+    ref = _sink_values(spark, ref_drain)
 
     base, src = stage_ordered_chunks(spark, docs, n_chunks=4)
     store = SI.init_substring_store(spark, os.path.join(base, "store"))
@@ -450,7 +458,7 @@ def test_out_of_order_stream_shard_aborts_the_drain(spark, tmp_path):
         SI.run_substring_ingest_stream(spark, src, store)
 
 
-def test_watermark_crash_replay_equals_single_run(spark, tmp_path):
+def test_watermark_crash_replay_equals_single_run(spark, ref_drain):
     """Crash injected right after the watermark publish (before any
     data sink): the restart must replay the epoch idempotently and ALL
     sinks — including the per-epoch watermark rows — must equal a
@@ -458,9 +466,8 @@ def test_watermark_crash_replay_equals_single_run(spark, tmp_path):
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
     docs = _small_docs(spark)
-    ref_store = _drain(spark, docs, tmp_path)
     ref = {
-        s: sorted(tuple(r) for r in ref_store.read(spark, s).collect())
+        s: sorted(tuple(r) for r in ref_drain.read(spark, s).collect())
         for s in ("decisions", "windows_idx", "hwm")
     }
     base, src = stage_ordered_chunks(spark, docs, n_chunks=4)
